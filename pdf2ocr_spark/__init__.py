@@ -9,7 +9,8 @@ rebuilt Spark-first:
 - per-document OCR-text recovery, reading-order paragraph reconstruction,
   header/footer boilerplate stripping, and multi-format span emission
   (text / markdown / html / docx_para / page_header / media_ref), all as
-  vectorized Arrow stages (``mapInPandas`` — no per-row Python UDFs)
+  vectorized Arrow stages (``mapInArrow`` on the hot paths, ``mapInPandas``
+  on the rest — no per-row Python UDFs)
 - per-partition lineage + checkpoint/resume
 - training-data-pipeline operators (dedup, similarity search, text
   quality) as declarative DataFrame transforms
@@ -20,6 +21,14 @@ Layout:
     functions/  column-expression (Catalyst-native) operator variants
     sources/    IO abstraction (parquet now; Iceberg when catalog available)
     streaming/  incremental ingest via Structured Streaming
+
+Importing the package installs :mod:`pdf2ocr_spark.zipguard`: every
+engine closure imports the package in its Python worker, so reused
+workers stop re-reading the unchanged Spark zips before each task.
 """
+
+from pdf2ocr_spark import zipguard as _zipguard
+
+_zipguard.install()
 
 __version__ = "0.1.0"

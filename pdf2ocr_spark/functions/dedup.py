@@ -540,11 +540,19 @@ def ngram_jaccard_pairs(
     ``min(shingle) != max(shingle)`` collision witness (map-side
     combined, so only per-partition-distinct hashes ship their two
     witness strings), and the plan ASSERTS the corpus-wide collision
-    count is zero before any hash-coded result is produced — on the
-    astronomically-unlikely colliding corpus the query fails loudly
-    instead of returning an approximation. Under the asserted
-    injectivity, per-hash df equals per-shingle df (the hot cap is
-    unchanged) and code-intersections equal shingle-intersections."""
+    count is zero before any hash-coded result is produced — on a
+    colliding corpus the query fails loudly instead of returning an
+    approximation. Under the asserted injectivity, per-hash df equals
+    per-shingle df (the hot cap is unchanged) and code-intersections
+    equal shingle-intersections.
+
+    PRACTICAL BOUND: the gate makes the corpus size a hard limit. By the
+    birthday bound, n distinct shingles contain a 64-bit hash collision
+    with probability about 1 - exp(-n^2 / 2^65): 0.2% at 2^28 (2.7e8)
+    distinct shingles, 3% at 2^30, 39% at 2^32 (4.3e9) and 86% at 2^33.
+    Past about 2^32 distinct shingles — far below the 10^12-document
+    scale the blocking is shaped for — expect this query to abort on
+    the assertion rather than answer."""
     import math
 
     docs = _fan_out(with_near_dup_corpus(documents))

@@ -12,8 +12,8 @@ All math is done in double precision with explicit sequential folds so the
 DuckDB oracle (functions/similarity_sql.py) computes bit-comparable scores
 (rounded to 4 decimals for the hash gate).
 
-No Python UDFs: dot products are ``zip_with`` + ``aggregate`` column
-expressions (JVM codegen).
+Dot products, norms, LSH signs and IVF cells are numpy kernels over Arrow
+batches (see "vectorized scoring kernels" below), not per-row Python UDFs.
 """
 
 from __future__ import annotations
@@ -41,16 +41,6 @@ def _as_double(col) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
-
-
 # ---------------------------------------------------------------------------
 # vectorized scoring kernels (round-6 optimization)
 #
@@ -62,14 +52,14 @@ def _norm(a: Column) -> Column:
 # window. These numpy kernels evaluate the identical IEEE operation
 # sequence — acc = acc + x*y per dimension, in dimension order, all
 # doubles, no FMA (numpy elementwise multiply and add are separate ufunc
-# calls) — so every score/bucket/cell is BIT-IDENTICAL to the Catalyst
-# fold and the DuckDB oracle's sequential list_sum, while running ~50x
+# calls) — so every score/bucket/cell is BIT-IDENTICAL to those folds
+# and the DuckDB oracle's sequential list_sum, while running ~50x
 # faster and emitting only per-slab top-k candidates (guide §4.2).
 # ---------------------------------------------------------------------------
 
 
 def _seq_norms(M: np.ndarray) -> np.ndarray:
-    """Sequential-fold L2 norms, same op order as the Catalyst `_norm`:
+    """Sequential-fold L2 norms, same op order as DuckDB's list_sum:
     acc = acc + x_d * x_d over d, then sqrt."""
     acc = np.zeros(M.shape[0], dtype=np.float64)
     for d in range(M.shape[1]):
@@ -80,7 +70,7 @@ def _seq_norms(M: np.ndarray) -> np.ndarray:
 def _seq_dots(E: np.ndarray, Q: np.ndarray) -> np.ndarray:
     """(B, d) x (NQ, d) -> (B, NQ) dot products via the sequential
     per-dimension fold (acc = acc + e_d * q_d in d order) — the exact
-    operation sequence of the Catalyst `_dot` and DuckDB's list_sum."""
+    operation sequence of DuckDB's list_sum."""
     acc = np.zeros((E.shape[0], Q.shape[0]), dtype=np.float64)
     for d in range(E.shape[1]):
         acc = acc + E[:, d : d + 1] * Q[None, :, d]
@@ -272,61 +262,7 @@ def _plane_coefs(plane: int) -> list:
     ]
 
 
-def _plane_sign(vec: Column, plane: int) -> Column:
-    """Sign bit of <vec, h_plane>. The zip_with/aggregate fold adds terms
-    in the same left-to-right dimension order as the oracle's sequential
-    sum, so scores stay bit-comparable."""
-    dot = F.aggregate(
-        F.zip_with(vec, F.lit(_plane_coefs(plane)), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return (dot > 0).cast("long")
-
-
-def lsh_bucket(vec: Column, n_planes: int = N_PLANES) -> Column:
-    """Bucket id = integer of the n sign bits."""
-    acc = F.lit(0).cast("long")
-    for p in range(n_planes):
-        acc = acc + _plane_sign(vec, p) * F.lit(2**p)
-    return acc
-
-
 IVF_K = 16  # coarse-quantizer cells
-
-
-def ivf_assign_udf(centroids: list):
-    """Vectorized IVF cell assignment: argmax_k dot(vec, centroid_k),
-    earliest k on ties (np.argmax returns the FIRST maximal index).
-
-    The K x DIM centroid matrix ships in the UDF closure — serialized once
-    per executor exactly like a broadcast variable, never inlined into the
-    plan — so assignment stays a pure map-side stage (no join, no shuffle;
-    at ingest a 10^12-row table would be written with this cell id as the
-    partition key) and K scales to the 10^4-10^5 cells a production IVF
-    needs. The round-2 form inlined the centroids as ONE nested array
-    literal consumed by higher-order functions: compact at K=16, but
-    analyzer/codegen cost grows with K*DIM inlined terms (measured 12.9s
-    codegen at moderate K; nested when() chains OOM the analyzer at 2^K),
-    a known K-bound the judge flagged — this kernel removes it.
-
-    Arithmetic is the exact sequential fold of the Catalyst `_dot`
-    (acc = (acc + e_d * c_d) in d order, all doubles), so cell ids are
-    bit-identical to the previous HOF form and the DuckDB oracle."""
-    C = np.asarray(centroids, dtype=np.float64)  # (K, DIM)
-
-    @F.pandas_udf("long")
-    def assign(embs: pd.Series) -> pd.Series:
-        if len(embs) == 0:
-            return pd.Series([], dtype=np.int64)
-        E = np.stack([np.asarray(v, dtype=np.float64) for v in embs])
-        acc = np.zeros((E.shape[0], C.shape[0]), dtype=np.float64)
-        for d in range(C.shape[1]):
-            # sequential per-dimension accumulate == the engines' fold order
-            acc += E[:, d : d + 1] * C[None, :, d]
-        return pd.Series(np.argmax(acc, axis=1).astype(np.int64))
-
-    return assign
 
 
 def ivf_topk(
@@ -404,8 +340,8 @@ def embedding_near_dup_pairs(embeddings: DataFrame) -> DataFrame:
     plane sign), deterministically identical in both engines.
 
     Round 6: the bucket is assigned by the vectorized plane kernel
-    (sequential fold — bit-identical to the interpreted `lsh_bucket`
-    HOFs it replaces) and the within-bucket pairing runs as ONE grouped
+    (sequential fold — bit-identical to the interpreted plane-sign HOFs
+    it replaces) and the within-bucket pairing runs as ONE grouped
     kernel (applyInPandas per bucket): each vector's 64 doubles cross
     the wire ONCE per bucket instead of once per candidate pair, and the
     B x B dot-product block is numpy instead of per-pair interpreted
@@ -477,8 +413,9 @@ def kmeans_train(
     trained centroids slot straight into ``ivf_topk(centroids=...)``.
 
     Lloyd iterations, Spark-shaped: per round ONE map-side assignment
-    (the same closure-shipped ``ivf_assign_udf`` kernel the index uses —
-    no join, no shuffle before the aggregate) and ONE K-row aggregation;
+    (a closure-shipped numpy argmax over the centroids, the same
+    sequential fold the IVF index uses — no join, no shuffle before the
+    aggregate) and ONE K-row aggregation;
     the driver touches exactly ``n_cells`` rows per round (bounded
     collect, like the IVF index build).
 
@@ -493,12 +430,12 @@ def kmeans_train(
     (argmax-cosine assignment + renormalized mean update) improves the
     summed cosine monotonically; empty cells keep their previous
     centroid. Returns (centroids, history): centroids is the
-    ``n_cells x dim`` float list for ivf_assign_udf, history the
+    ``n_cells x dim`` float list for ``ivf_topk``, history the
     per-iteration (objective_bp, n_nonempty) list."""
     # Norm AND quantization in one kernel (round 6; the round-5 form
     # kept round() in an interpreted JVM transform — 1.3e6 per-element
     # evaluations at 10x). The norm is the sequential-fold kernel
-    # (bit-identical to the Catalyst `_norm` fold); the HALF_UP round is
+    # (bit-identical to the old interpreted norm fold); the HALF_UP round is
     # the exact binary comparison floor(x) + (x - floor(x) >= 0.5),
     # which equals Spark's BigDecimal(valueOf).setScale(0, HALF_UP) for
     # every |x| < 2^51: n+0.5 is exactly representable, the shortest-

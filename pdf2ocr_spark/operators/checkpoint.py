@@ -323,11 +323,12 @@ def run_checkpointed(
         tagged = tagged.where(~F.col("part_id").isin(list(done)))
 
     planned = num_partitions - len(done)
-    # isEmpty costs a real pass over the input's map side — only worth it
-    # when the resume filter could actually have emptied the relation (a
-    # fresh run with work planned is never empty unless the INPUT is, and
-    # an empty input makes the main write a cheap no-op anyway)
-    if planned <= 0 or (done and tagged.isEmpty()):
+    # no isEmpty probe when partitions remain: it would cost the same pass
+    # over the input's map side as the write itself. A remainder holding
+    # no documents (only never-seen partitions left) makes the write below
+    # a no-op, since dynamic overwrite replaces only the partitions it
+    # writes.
+    if planned <= 0:
         return {"partitions": num_partitions, "skipped": len(done), "processed": 0}
     t_resume = time.monotonic() - t_resume0
 
@@ -362,14 +363,15 @@ def run_checkpointed(
     # unmarked and is re-planned on resume, which is a no-op (zero rows);
     # marking it done instead would wrongly skip its documents when a
     # resume is fed input the crashed run never read. The read-back scans
-    # <= one lineage row per partition.
+    # one lineage row per (task, partition) pair, one per partition when
+    # the input is partitioned by part_id; the set drops repeats, so no
+    # distinct (and its shuffle) is needed.
     t_verify0 = time.monotonic()
     present = {
         r["part_id"]
         for r in _combined(spark, output_dir)
         .where(F.col("kind") == LINEAGE_KIND)
         .select("part_id")
-        .distinct()
         .collect()
     }
     return {
@@ -385,7 +387,11 @@ def run_checkpointed(
 
 
 def _combined(spark: SparkSession, output_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(output_dir, "combined"))
+    # every writer above emits CHECKPOINT_OUT_SCHEMA; naming it skips the
+    # schema inference (a parquet footer read) of each read-back
+    return spark.read.schema(CHECKPOINT_OUT_SCHEMA).parquet(
+        os.path.join(output_dir, "combined")
+    )
 
 
 def read_spans(spark: SparkSession, output_dir: str) -> DataFrame:

@@ -149,7 +149,8 @@ def documents_to_spans(
 ) -> DataFrame:
     """FUSED ingest path: (doc_id, text, source) -> spans_out in ONE Python
     pass per batch (docgen channel + extraction kernel back to back, no
-    intermediate nested Arrow round trip, no second worker chain). Emits
+    intermediate nested Arrow round trip, no second worker chain); the
+    stage every streaming micro-batch runs (``streaming/ingest.py``). Emits
     Arrow RecordBatches directly: the span-heavy output (~36 rows/doc)
     through the pandas path pays a tuple-list -> DataFrame -> Arrow
     conversion that measured ~4-5x the kernel itself (same finding as

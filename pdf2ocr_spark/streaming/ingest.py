@@ -2,12 +2,20 @@
 
 The reference is a batch CLI (SURVEY.md §2.6: no streaming), but a
 web-scale ingest pipeline receives documents continuously. This module
-runs the SAME fused docgen/extract stages over a file-source stream:
-new parquet files dropped into the input directory are discovered,
-processed exactly-once (stream checkpoint), and appended to the spans
-sink. All stages are stateless per document, so no watermark or state
-store is needed; lineage-style resume comes from the streaming
-checkpoint itself (offsets + file log).
+runs the fused ingest stage over a file-source stream: new parquet files
+dropped into the input directory are discovered, processed exactly-once
+(stream checkpoint), and appended to the spans sink. All stages are
+stateless per document, so no watermark or state store is needed;
+lineage-style resume comes from the streaming checkpoint itself
+(offsets + file log).
+
+Each micro-batch runs ONE Python stage:
+``operators.extract.documents_to_spans`` (``mapInArrow``), docgen channel
+and extraction kernel back to back in one worker pass. It emits the same
+rows as the batch chain ``documents_to_docs`` -> ``extract_spans``, without
+a second Python worker per task and without sending the nested
+``array<struct>`` docs relation across the JVM/Python boundary twice.
+Streaming micro-batches are already file-split, so no repartition.
 
 ``stream_extract_available_now`` uses Trigger.AvailableNow: process
 everything currently present, then stop — the batch-parity mode used by
@@ -18,12 +26,11 @@ from __future__ import annotations
 
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from pdf2ocr_spark.kernel.emit import ALL_FORMATS
-from pdf2ocr_spark.operators.docgen import documents_to_docs
-from pdf2ocr_spark.operators.extract import extract_spans
+from pdf2ocr_spark.operators.extract import documents_to_spans
 
 DOCUMENTS_SCHEMA = T.StructType(
     [
@@ -34,19 +41,6 @@ DOCUMENTS_SCHEMA = T.StructType(
         T.StructField("n_chars", T.LongType()),
     ]
 )
-
-
-def _stream_pipeline(
-    stream: DataFrame,
-    formats: Sequence[str],
-    lang: str,
-    max_sentences: Optional[int],
-) -> DataFrame:
-    docs = documents_to_docs(stream)
-    return extract_spans(
-        docs, formats=formats, lang=lang, max_sentences=max_sentences,
-        num_partitions=None,  # streaming micro-batches are already file-split
-    )
 
 
 def start_extract_stream(
@@ -65,7 +59,7 @@ def start_extract_stream(
         .option("maxFilesPerTrigger", "8")
         .parquet(input_dir)
     )
-    spans = _stream_pipeline(stream, formats, lang, max_sentences)
+    spans = documents_to_spans(stream, formats, lang, max_sentences)
     writer = (
         spans.writeStream.format("parquet")
         .option("path", output_dir)

@@ -148,6 +148,25 @@ def test_no_resume_clears_stale_state(spark, docs, outdir):
     assert res["skipped"] == 0
     assert res["processed"] == 3
 
+
+def test_resume_with_only_empty_partitions_left_writes_nothing(spark, docs, outdir):
+    """Partitions that never received documents stay planned; resuming
+    when only they are left runs the write over zero rows, which must
+    leave every completed partition's spans and lineage as they were."""
+    part = stable_part_id(N_PARTS)
+    subset = docs.withColumn("pid", part).where(F.col("pid") < 3).drop("pid")
+    first = run_checkpointed(spark, subset, outdir, num_partitions=N_PARTS)
+    assert first["processed"] == 3
+    before = canon(read_spans(spark, outdir).toPandas())
+
+    again = run_checkpointed(spark, subset, outdir, num_partitions=N_PARTS)
+    assert again["skipped"] == 3 and again["processed"] == 0
+    import pandas as pd
+
+    pd.testing.assert_frame_equal(canon(read_spans(spark, outdir).toPandas()), before)
+    lin = read_lineage(spark, outdir).toPandas()
+    assert len(lin) == 3 and lin["doc_count"].sum() == subset.count()
+
     # and the output contains ONLY the fresh run's spans
     spans = read_spans(spark, outdir).toPandas()
     subset_ids = {r["doc_id"] for r in subset.select("doc_id").collect()}

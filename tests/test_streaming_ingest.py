@@ -2,13 +2,17 @@
 processing across restarts (stream checkpoint)."""
 
 import os
+import re
 import shutil
 import tempfile
 
 import pytest
 
 from pdf2ocr_spark.pipeline import load_documents, run_pipeline
-from pdf2ocr_spark.streaming.ingest import stream_extract_available_now
+from pdf2ocr_spark.streaming.ingest import (
+    start_extract_stream,
+    stream_extract_available_now,
+)
 
 
 @pytest.fixture()
@@ -56,3 +60,20 @@ def test_stream_matches_batch_and_is_incremental(spark, sf_dir, dirs):
     stream_extract_available_now(spark, dirs["input"], dirs["output"], dirs["ckpt"])
     out3 = spark.read.parquet(dirs["output"])
     assert out3.count() == len(out2)
+
+
+def test_stream_runs_one_python_stage(spark, sf_dir, dirs, capsys):
+    """Each micro-batch runs the fused ingest stage: exactly one Python
+    plan node (``MapInArrow``), no ``mapInPandas`` chain."""
+    load_documents(spark, sf_dir).where("doc_id < 20").write.mode("append").parquet(
+        dirs["input"]
+    )
+    q = start_extract_stream(
+        spark, dirs["input"], dirs["output"], dirs["ckpt"], available_now=True
+    )
+    q.awaitTermination()
+    capsys.readouterr()
+    q.explain()
+    plan = capsys.readouterr().out
+    python_nodes = re.findall(r"\b\w*(?:InArrow|InPandas|EvalPython)\b", plan)
+    assert python_nodes == ["MapInArrow"], plan
