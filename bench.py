@@ -174,8 +174,8 @@ def time_queries(spark) -> tuple[dict, dict]:
 
 def materialize_corpus(tile: int) -> str:
     """Write the tiled interleaved docs corpus (the input_hint relation:
-    doc_id + nested spans) to a weight-striped multi-file parquet — the
-    production ingest layout: the table is bucketed by the stripe key at
+    doc_id + nested spans) to a stripe_key-partitioned multi-file parquet —
+    the production ingest layout: the table is bucketed by the stripe key at
     WRITE time (Iceberg bucket(doc_id)-style), so extraction reads
     pre-balanced partitions with NO shuffle. Idempotent per (sf, tile)."""
     sf_name = os.path.basename(SF_DIR.rstrip("/"))
@@ -205,7 +205,7 @@ def extract_run(
     """One full extraction at a given CORE COUNT over the MATERIALIZED
     nested corpus (identical bytes for every level): parquet scan ->
     mapInArrow extraction kernel, zero shuffle (the table is
-    weight-striped at write time — see materialize_corpus).
+    striped at write time — see materialize_corpus).
 
     The run executes in a subprocess pinned with ``taskset`` to the N
     worker cores PLUS the JVM service cores the executor model grants
@@ -312,9 +312,9 @@ spark.stop()
 def skew_spread(tile: int) -> dict:
     """Straggler evidence on the skewed corpus (the docgen channel gives
     ~1/24 of docs a heavy factor up to 40x pages — a Zipf-ish tail): run
-    the checkpoint kernel over the weight-striped corpus and report the
-    spread of per-partition kernel walls. Balanced striping => max/p50
-    stays near 1 despite the tail."""
+    the extraction kernel in lineage mode over the corpus partitioned by
+    ``stripe_key`` and report the spread of per-partition kernel walls.
+    Balanced partitioning => max/p50 stays near 1 despite the tail."""
     import numpy as np
     from pyspark.sql import functions as F
 
@@ -322,22 +322,22 @@ def skew_spread(tile: int) -> dict:
         CHECKPOINT_OUT_SCHEMA,
         LINEAGE_KIND,
         LINEAGE_JSON_SCHEMA,
-        _kernel,
-        stable_part_id,
     )
+    from pdf2ocr_spark.operators.extract import extraction_kernel
+    from pdf2ocr_spark.pipeline import stripe_key
 
     cache = materialize_corpus(tile)
     n_parts = CPUS * 4
     spark = _fresh_spark(CPUS)
     try:
         docs = spark.read.parquet(cache).withColumn(
-            "part_id", stable_part_id(n_parts)
+            "part_id", stripe_key(n_parts)
         )
         out = (
             docs.repartition(n_parts, "part_id")
             .select("doc_id", "spans", "part_id")
-            .mapInPandas(
-                _kernel(("text", "markdown"), "eng", None),
+            .mapInArrow(
+                extraction_kernel(("text", "markdown"), "eng", None, lineage=True),
                 schema=CHECKPOINT_OUT_SCHEMA,
             )
         )

@@ -100,8 +100,9 @@ def main() -> None:
     # (Amdahl fraction that caps scaling; same move as pipeline.run_pipeline)
     documents = load_documents(spark, args.sf_dir).repartition(args.partitions)
     documents = tile_documents(documents, args.tile)
-    # the job's ONLY shuffle: ~100-byte text rows, weight-striped by the
-    # text-predicted part id; channel+extract then run as ONE fused
+    # the job's ONLY shuffle: ~100-byte text rows, partitioned by
+    # stripe_key (a hash of doc_id, the same map on every run, so resume
+    # skips the right documents); channel+extract then run as ONE fused
     # Python stage (run_checkpointed fused_channel) so the nested span
     # arrays are never exchanged — at 10^12 docs the nested relation is
     # the one you cannot afford to shuffle

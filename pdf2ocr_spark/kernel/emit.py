@@ -36,7 +36,7 @@ happens ACROSS documents in the Arrow batch stage that calls this.
 from __future__ import annotations
 
 import re
-from typing import Iterator, List, Optional, Sequence, Tuple
+from typing import List, Optional, Sequence, Tuple
 
 from pdf2ocr_spark.kernel.textproc import (
     _looks_like_heading,
@@ -95,7 +95,7 @@ def wrap_paragraph(text: str, columns: int = TEXT_WRAP_COLUMNS) -> List[str]:
     return lines
 
 
-def _page_texts_in_order(spans: Sequence[dict]) -> Tuple[List[str], List[str]]:
+def page_texts_in_order(spans: Sequence[dict]) -> Tuple[List[str], List[str]]:
     """Split a document's interleaved spans into ordered page texts and
     ordered media refs (both by ``offset``)."""
     ordered = sorted(spans, key=lambda s: s["offset"])
@@ -130,7 +130,7 @@ def extract_document(
     """Run the full extraction pipeline for one document and return its
     output span rows. Deterministic; independent of partitioning.
     """
-    pages, media = _page_texts_in_order(spans)
+    pages, media = page_texts_in_order(spans)
     return extract_from_pages(doc_id, pages, media, formats, lang, max_sentences)
 
 
@@ -243,13 +243,3 @@ def extract_from_pages(
 
     return rows
 
-
-def extract_documents(
-    docs: Iterator[Tuple[str, Sequence[dict]]],
-    formats: Sequence[str] = ALL_FORMATS,
-    lang: str = "eng",
-    max_sentences: Optional[int] = None,
-) -> Iterator[SpanRow]:
-    """Batch driver: yield span rows for many documents."""
-    for doc_id, spans in docs:
-        yield from extract_document(doc_id, spans, formats, lang, max_sentences)

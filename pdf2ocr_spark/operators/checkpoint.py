@@ -4,11 +4,13 @@ The reference CLI has NO resume — a killed run redoes everything
 (/root/reference/pdf2ocr/converters/pdf.py:919-927 only stops scheduling).
 This engine checkpoints at partition granularity (north rule):
 
-- every document gets a STABLE partition id (``part_id``) from the same
-  weight-striped expression as ``skew_balanced`` — deterministic across
-  runs and cluster sizes, so a resume sees the identical doc->partition map;
-- the fused kernel emits, per Spark task, one sentinel '_lineage' row with
-  real in-kernel metrics (doc/page/span counts, wall time, per-doc errors);
+- every document gets a STABLE partition id (``part_id``) from
+  ``pipeline.stripe_key`` — deterministic across runs, cluster sizes and
+  input shapes, so a resume sees the identical doc->partition map;
+- the extraction kernel (``operators.extract.extraction_kernel``) runs in
+  lineage mode and emits, per Spark task, one sentinel '_lineage' row per
+  part_id with real in-kernel metrics (doc/page/span counts, wall time,
+  per-doc errors);
 - spans and lineage are both written ``partitionBy(part_id)`` with dynamic
   partition overwrite, so re-processing a partition is idempotent
   (overwrite-by-partition, never append);
@@ -23,19 +25,21 @@ lineage error list and the job continues.
 
 from __future__ import annotations
 
-import json
 import os
 import time
-from typing import Iterator, Optional, Sequence
+from typing import Optional, Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pdf2ocr_spark.kernel.emit import ALL_FORMATS, extract_document
-
-LINEAGE_KIND = "_lineage"
+from pdf2ocr_spark.kernel.emit import ALL_FORMATS
+from pdf2ocr_spark.operators.extract import (
+    LINEAGE_KIND,
+    PART_MAP,
+    extraction_kernel,
+    stripe_key,
+)
 
 CHECKPOINT_OUT_SCHEMA = T.StructType(
     [
@@ -57,180 +61,20 @@ LINEAGE_JSON_SCHEMA = T.StructType(
         T.StructField("docs_per_sec", T.DoubleType()),
         T.StructField("status", T.StringType()),
         T.StructField("errors", T.ArrayType(T.StringType())),
-        # which doc->partition map produced this partition: 'nested'
-        # (stable_part_id on span counts) or 'fused' (pipeline.stripe_key
-        # on text word counts) — resume refuses a mode mismatch, because
-        # the two maps assign DIFFERENT documents to the same part_id and
-        # skipping a "done" partition would then skip the wrong documents
+        # which doc->partition map produced this partition (PART_MAP).
+        # Resume refuses any other map (older engines wrote 'nested' or
+        # 'fused'): another map puts DIFFERENT documents in the same
+        # part_id, so skipping a "done" partition would skip the wrong
+        # documents
         T.StructField("part_mode", T.StringType()),
     ]
 )
 
 
-def stable_part_id(num_partitions: int):
-    """Deterministic weight-striped partition id (must match
-    operators/extract.py:skew_balanced so bench and checkpoint agree)."""
-    wclass = F.floor(F.log2(F.greatest(F.size("spans"), F.lit(1)) + 1))
-    return F.pmod(
-        F.xxhash64(F.col("doc_id"), wclass.cast("long")), F.lit(num_partitions)
-    ).cast("int")
-
-
-def _kernel(formats: Sequence[str], lang: str, max_sentences: Optional[int]):
-    fmts = tuple(formats)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "kind", "text", "media_ref", "offset", "part_id"]
-        # one Spark task can carry several part_id values (value-hash
-        # collisions in repartition), so metrics are bucketed per part_id
-        stats: dict[int, dict] = {}
-        for pdf in batches:
-            rows = []
-            for doc_id, spans, pid in zip(pdf["doc_id"], pdf["spans"], pdf["part_id"]):
-                pid = int(pid)
-                st = stats.setdefault(
-                    pid,
-                    {"docs": 0, "pages": 0, "spans": 0, "wall": 0.0, "errors": []},
-                )
-                st["docs"] += 1
-                st["pages"] += sum(1 for s in spans if s.get("kind") == "page")
-                t0 = time.monotonic()
-                try:
-                    out = extract_document(doc_id, spans, fmts, lang, max_sentences)
-                except Exception as exc:  # reference-style per-doc isolation
-                    st["errors"].append(f"{doc_id}: {exc}")
-                    st["wall"] += time.monotonic() - t0
-                    continue
-                st["wall"] += time.monotonic() - t0
-                st["spans"] += len(out)
-                rows.extend((*r, pid) for r in out)
-            yield pd.DataFrame(rows, columns=cols)
-        if stats:
-            sentinels = []
-            for pid, st in sorted(stats.items()):
-                payload = json.dumps(
-                    {
-                        "doc_count": st["docs"],
-                        "page_count": st["pages"],
-                        "span_count": st["spans"],
-                        "wall_sec": round(st["wall"], 4),
-                        "docs_per_sec": (
-                            round(st["docs"] / st["wall"], 3) if st["wall"] > 0 else None
-                        ),
-                        "status": "success",
-                        "errors": st["errors"],
-                        "part_mode": "nested",
-                    }
-                )
-                sentinels.append([None, LINEAGE_KIND, payload, None, 0, pid])
-            yield pd.DataFrame(sentinels, columns=cols)
-
-    return run
-
-
-def _kernel_fused(formats: Sequence[str], lang: str, max_sentences: Optional[int]):
-    """Channel + extract in ONE Python pass over the SMALL text rows.
-
-    The two-stage form (documents -> channel mapInPandas -> nested docs
-    -> repartition(part_id) -> extract mapInPandas) shuffles the full
-    nested span relation between the stages and pays a second
-    nested-Arrow round trip; fused, the only shuffle in the whole job is
-    the caller's ~100-byte-row repartition by the text-predicted
-    part_id (pipeline.stripe_key), and the nested spans live only inside
-    one Python worker. Runs as ``mapInArrow`` and emits RecordBatches
-    directly: the span-heavy OUTPUT relation (~36 rows/doc) through
-    pandas costs a per-row tuple -> DataFrame -> Arrow conversion that
-    measured ~4-5x the kernel (same finding as extract_spans_arrow,
-    operators/extract.py). Lineage metrics are identical to _kernel
-    (pages counted from the spans the channel just built; wall covers
-    channel+extract — the work this kernel actually does)."""
-    import pyarrow as pa
-
-    from pdf2ocr_spark.kernel.docgen import build_spans
-
-    fmts = tuple(formats)
-    names = ["doc_id", "kind", "text", "media_ref", "offset", "part_id"]
-
-    def _batch(doc, kind, text, ref, off, pid):
-        return pa.RecordBatch.from_arrays(
-            [
-                pa.array(doc, pa.string()),
-                pa.array(kind, pa.string()),
-                pa.array(text, pa.string()),
-                pa.array(ref, pa.string()),
-                pa.array(off, pa.int32()),
-                pa.array(pid, pa.int32()),
-            ],
-            names=names,
-        )
-
-    def run(batches):
-        stats: dict[int, dict] = {}
-        for batch in batches:
-            doc_ids = batch.column("doc_id").to_pylist()
-            texts = batch.column("text").to_pylist()
-            sources = batch.column("source").to_pylist()
-            pids = batch.column("part_id").to_pylist()
-            o_doc, o_kind, o_text, o_ref, o_off, o_pid = [], [], [], [], [], []
-            for doc_id, text, source, pid in zip(doc_ids, texts, sources, pids):
-                pid = int(pid)
-                did = str(doc_id)
-                st = stats.setdefault(
-                    pid,
-                    {"docs": 0, "pages": 0, "spans": 0, "wall": 0.0, "errors": []},
-                )
-                st["docs"] += 1
-                t0 = time.monotonic()
-                try:
-                    spans = build_spans(did, text, source)
-                    st["pages"] += sum(1 for s in spans if s.get("kind") == "page")
-                    out = extract_document(did, spans, fmts, lang, max_sentences)
-                except Exception as exc:  # reference-style per-doc isolation
-                    st["errors"].append(f"{did}: {exc}")
-                    st["wall"] += time.monotonic() - t0
-                    continue
-                st["wall"] += time.monotonic() - t0
-                st["spans"] += len(out)
-                for r in out:
-                    o_doc.append(r[0])
-                    o_kind.append(r[1])
-                    o_text.append(r[2])
-                    o_ref.append(r[3])
-                    o_off.append(r[4])
-                    o_pid.append(pid)
-            yield _batch(o_doc, o_kind, o_text, o_ref, o_off, o_pid)
-        if stats:
-            s_doc, s_kind, s_text, s_ref, s_off, s_pid = [], [], [], [], [], []
-            for pid, st in sorted(stats.items()):
-                payload = json.dumps(
-                    {
-                        "doc_count": st["docs"],
-                        "page_count": st["pages"],
-                        "span_count": st["spans"],
-                        "wall_sec": round(st["wall"], 4),
-                        "docs_per_sec": (
-                            round(st["docs"] / st["wall"], 3) if st["wall"] > 0 else None
-                        ),
-                        "status": "success",
-                        "errors": st["errors"],
-                        "part_mode": "fused",
-                    }
-                )
-                s_doc.append(None)
-                s_kind.append(LINEAGE_KIND)
-                s_text.append(payload)
-                s_ref.append(None)
-                s_off.append(0)
-                s_pid.append(pid)
-            yield _batch(s_doc, s_kind, s_text, s_ref, s_off, s_pid)
-
-    return run
-
-
 def _completed_partitions(
     spark: SparkSession, output_dir: str
-) -> tuple[set[int], set[str]]:
-    """(done part_ids, partitioning modes recorded in their lineage)."""
+) -> tuple[set[int], set[Optional[str]]]:
+    """(done part_ids, partition maps recorded in their lineage)."""
     try:
         lin = read_lineage(spark, output_dir)
     except Exception:
@@ -240,10 +84,7 @@ def _completed_partitions(
         .select("part_id", "part_mode")
         .collect()
     )
-    return (
-        {r["part_id"] for r in rows},
-        {r["part_mode"] for r in rows if r["part_mode"] is not None},
-    )
+    return {r["part_id"] for r in rows}, {r["part_mode"] for r in rows}
 
 
 def run_checkpointed(
@@ -260,12 +101,13 @@ def run_checkpointed(
     """Execute the extraction job with per-partition checkpointing.
 
     Default mode consumes the nested ``docs(doc_id, spans)`` relation and
-    shuffles it by ``stable_part_id``. ``fused_channel=True`` consumes the
-    SMALL pre-channel relation ``(doc_id, text, source, part_id)`` instead
-    and runs channel+extract in one Python pass: the caller computes a
-    deterministic part_id on the text rows (``pipeline.stripe_key``) and
+    shuffles it by ``pipeline.stripe_key``. ``fused_channel=True`` consumes
+    the SMALL pre-channel relation ``(doc_id, text, source, part_id)``
+    instead and runs channel+extract in one Python pass: the caller
+    computes part_id on the text rows (``pipeline.stripe_key``) and
     repartitions the cheap side, so NO nested data is ever shuffled —
-    the scale-critical layout for the spark-submit job.
+    the scale-critical layout for the spark-submit job. Both modes map a
+    document to the same part_id, so either can resume the other's output.
 
     Returns a summary dict: partitions planned/skipped/processed.
     """
@@ -280,7 +122,7 @@ def run_checkpointed(
             )
         tagged = docs
     else:
-        tagged = docs.withColumn("part_id", stable_part_id(num_partitions))
+        tagged = docs.withColumn("part_id", stripe_key(num_partitions))
 
     if not resume:
         # a fresh (non-resume) run must not inherit stale state: dynamic
@@ -293,31 +135,20 @@ def run_checkpointed(
 
         shutil.rmtree(os.path.join(output_dir, "combined"), ignore_errors=True)
     t_resume0 = time.monotonic()
-    mode = "fused" if fused_channel else "nested"
-    done, done_modes = (
+    done, done_maps = (
         _completed_partitions(spark, output_dir) if resume else (set(), set())
     )
-    if done and not done_modes:
-        # lineage predates part_mode recording: the map that produced it
-        # is UNKNOWN, so treating it as a match would reintroduce the
-        # wrong-documents-skipped bug for exactly the dirs most at risk
-        raise ValueError(
-            f"output_dir {output_dir!r} has completed partitions whose "
-            "lineage does not record a partitioning mode (written by an "
-            "older engine); cannot verify the doc->partition map matches "
-            f"this run's {mode!r}. Pass resume=False to start over."
-        )
-    if done and done_modes - {mode}:
-        # fused mode partitions by pipeline.stripe_key (word-count weight),
-        # non-fused by stable_part_id (span-count weight): the same part_id
-        # holds DIFFERENT documents under the two maps, so resuming across
-        # modes would skip "done" partitions whose documents this run never
-        # wrote. Refuse instead of silently dropping documents.
+    if done and done_maps != {PART_MAP}:
+        # lineage that records no map (written before part_mode existed)
+        # or another map ('nested'/'fused' from older engines) may hold
+        # DIFFERENT documents under the same part_id, so skipping its
+        # "done" partitions could drop documents this map assigns there.
+        # Refuse instead of silently dropping documents.
         raise ValueError(
             f"output_dir {output_dir!r} was written in partitioning mode(s) "
-            f"{sorted(done_modes)} but this run uses {mode!r}; resuming "
-            "across modes silently applies a different doc->partition map. "
-            "Re-run with the original mode, or resume=False to start over."
+            f"{sorted(map(str, done_maps))} but this run uses {PART_MAP!r}; "
+            "resuming would apply a different doc->partition map. "
+            "Pass resume=False to start over."
         )
     if done:
         tagged = tagged.where(~F.col("part_id").isin(list(done)))
@@ -340,15 +171,15 @@ def run_checkpointed(
     # part_id — repeating it here would put a second (elided or worse,
     # real) exchange in the plan.
     if fused_channel:
-        out = tagged.select("doc_id", "text", "source", "part_id").mapInArrow(
-            _kernel_fused(formats, lang, max_sentences),
-            schema=CHECKPOINT_OUT_SCHEMA,
-        )
+        rows = tagged.select("doc_id", "text", "source", "part_id")
     else:
-        shuffled = tagged.repartition(num_partitions, "part_id")
-        out = shuffled.select("doc_id", "spans", "part_id").mapInPandas(
-            _kernel(formats, lang, max_sentences), schema=CHECKPOINT_OUT_SCHEMA
+        rows = tagged.repartition(num_partitions, "part_id").select(
+            "doc_id", "spans", "part_id"
         )
+    out = rows.mapInArrow(
+        extraction_kernel(formats, lang, max_sentences, lineage=True),
+        schema=CHECKPOINT_OUT_SCHEMA,
+    )
     t_write0 = time.monotonic()
     out.write.mode("overwrite").partitionBy("part_id").parquet(
         os.path.join(output_dir, "combined")

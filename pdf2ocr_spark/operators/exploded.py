@@ -21,8 +21,8 @@ Plan shape:
           (the only per-doc funnel)
        -> media passthrough
 
-Output is span-for-span IDENTICAL to extract_spans (equivalence test in
-tests/test_exploded_path.py).
+Output is span-for-span IDENTICAL to extract_spans_arrow (equivalence test
+in tests/test_exploded_path.py).
 """
 
 from __future__ import annotations

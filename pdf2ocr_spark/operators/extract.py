@@ -1,79 +1,187 @@
-"""docs -> spans_out: the fused per-document extraction stage.
+"""docs -> spans_out: the one per-document extraction operator.
 
-One ``mapInPandas`` stage runs the whole reference per-document dataflow
-(OCR-language clean -> boilerplate strip -> paragraph FSM -> multi-format
-span emission; see kernel/emit.py) in a single Python-worker pass per
-Arrow batch — the Spark analogue of the reference's operator fusion
+Every extraction path runs the same Arrow kernel (``extraction_kernel``):
+one ``mapInArrow`` stage that runs the whole reference per-document
+dataflow (OCR-language clean -> boilerplate strip -> paragraph FSM ->
+multi-format span emission; see kernel/emit.py) in a single Python-worker
+pass per Arrow batch — the Spark analogue of the reference's operator fusion
 (whole chain per file in one process, /root/reference/pdf2ocr/converters/pdf.py:663-739).
+The kernel reads either the nested ``docs(doc_id, spans)`` relation or the
+small ``(doc_id, text, source)`` rows, which it turns into spans with the
+docgen channel in the same pass.
 
 Skew handling (SURVEY.md §4 / north rule): documents are one row each, so
 classic key-salting is moot (no key repeats); the skew is per-row WEIGHT
-(page count — a heavy doc is 40x a light one). ``skew_balanced`` does an
-explicit weight-striped repartition: docs are bucketed by log2(weight)
-class and hash-spread within each class, so every partition receives the
-same expected mix of light and heavy docs without any global sort (which
-would not survive 10^12 rows). The paragraph FSM is inherently sequential
-per document, so a single monster document bounds one task — the page-scope
-stages for such docs are handled by the exploded path (see
+(page count — a heavy doc is 40x a light one). ``stripe_key`` hashes
+``doc_id`` alone: heavy and light docs spread uniformly and independently,
+so every partition receives the same expected mix without any global sort
+(which would not survive 10^12 rows). The paragraph FSM is inherently
+sequential per document, so a single monster document bounds one task — the
+page-scope stages for such docs are handled by the exploded path (see
 ``operators/exploded.py``).
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional, Sequence
+import json
+import time
+from typing import Optional, Sequence
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pdf2ocr_spark.kernel.emit import ALL_FORMATS, extract_document
+from pdf2ocr_spark.kernel.docgen import build_spans
+from pdf2ocr_spark.kernel.emit import ALL_FORMATS, extract_from_pages, page_texts_in_order
 from pdf2ocr_spark.schema import SPANS_OUT_SCHEMA
 
+#: ``kind`` of the one lineage sentinel row per part_id in lineage mode
+LINEAGE_KIND = "_lineage"
 
-def skew_balanced(docs: DataFrame, num_partitions: int) -> DataFrame:
-    """Weight-striped repartition of the docs relation.
+#: the doc -> part_id map, as recorded in lineage ``part_mode``: resume
+#: skips a "done" partition only when it was written under this map
+PART_MAP = "xxhash64(doc_id)"
 
-    Partition key = hash(doc_id) XOR'd with the document's weight class
-    (log2 of span count), modulo ``num_partitions``: heavy docs of each
-    class spread uniformly and independently, so the expected work per
-    partition is balanced by the law of large numbers — one shuffle, no
-    global ordering, scale-invariant.
-    """
-    wclass = F.floor(F.log2(F.greatest(F.size("spans"), F.lit(1)) + 1))
-    key = F.pmod(
-        F.xxhash64(F.col("doc_id"), wclass.cast("long")), F.lit(num_partitions)
+_OUT_NAMES = ["doc_id", "kind", "text", "media_ref", "offset"]
+
+
+def stripe_key(num_partitions: int):
+    """The doc -> partition key, ``pmod(xxhash64(cast(doc_id as string)), n)``.
+
+    Needs only ``doc_id``, so it is the same on the small documents
+    relation (int64 ids) and the nested docs relation (string ids): every
+    mode and every run maps a document to the same ``part_id``, which the
+    checkpoint resume contract relies on. Hashing alone balances the
+    skewed corpus: a heavy document lands in a partition independently of
+    every other heavy one."""
+    return F.pmod(
+        F.xxhash64(F.col("doc_id").cast("string")), F.lit(num_partitions)
     ).cast("int")
-    return docs.repartition(num_partitions, key)
 
 
-def extract_spans(
-    docs: DataFrame,
-    formats: Sequence[str] = ALL_FORMATS,
-    lang: str = "eng",
-    max_sentences: Optional[int] = None,
-    num_partitions: Optional[int] = None,
-) -> DataFrame:
-    """Run the extraction kernel over the docs relation.
+def _pages_reader(batch):
+    """The batch's doc ids and ``pages_of(i) -> (pages, media)``: document
+    i's page texts and media refs in ``offset`` order. Reads nested
+    ``spans`` straight from the Arrow ListArray (no per-span dict objects),
+    or builds them from ``(text, source)`` with the docgen channel."""
+    doc_ids = [str(d) for d in batch.column("doc_id").to_pylist()]
+    if "spans" not in batch.schema.names:
+        texts = batch.column("text").to_pylist()
+        sources = batch.column("source").to_pylist()
 
-    Returns the spans_out relation (doc_id, kind, text, media_ref, offset).
-    Deterministic: output row SET is independent of partitioning.
-    """
-    if num_partitions:
-        docs = skew_balanced(docs, num_partitions)
+        def from_text(i):
+            return page_texts_in_order(build_spans(doc_ids[i], texts[i], sources[i]))
 
+        return doc_ids, from_text
+
+    spans = batch.column("spans")
+    bounds = spans.offsets.to_numpy(zero_copy_only=False)
+    flat = spans.values
+    kinds = flat.field("kind").to_pylist()
+    texts = flat.field("text").to_pylist()
+    refs = flat.field("media_ref").to_pylist()
+    offs = flat.field("offset")
+    null_offs = offs.is_null().to_numpy(zero_copy_only=False) if offs.null_count else None
+    offs = offs.to_numpy(zero_copy_only=False)
+
+    def from_spans(i):
+        lo, hi = int(bounds[i]), int(bounds[i + 1])
+        if null_offs is not None and null_offs[lo:hi].any():
+            raise ValueError(f"document {doc_ids[i]!r} has a span with a null offset")
+        order = sorted(range(lo, hi), key=offs.__getitem__)
+        pages = [texts[j] or "" for j in order if kinds[j] == "page"]
+        media = [refs[j] for j in order if kinds[j] == "media" and refs[j]]
+        return pages, media
+
+    return doc_ids, from_spans
+
+
+def _record_batch(rows, part_ids=None):
+    cols = list(zip(*rows)) or [()] * len(_OUT_NAMES)
+    types = [pa.string(), pa.string(), pa.string(), pa.string(), pa.int32()]
+    arrays = [pa.array(c, t) for c, t in zip(cols, types)]
+    names = list(_OUT_NAMES)
+    if part_ids is not None:
+        arrays.append(pa.array(part_ids, pa.int32()))
+        names.append("part_id")
+    return pa.RecordBatch.from_arrays(arrays, names=names)
+
+
+def extraction_kernel(
+    formats: Sequence[str],
+    lang: str,
+    max_sentences: Optional[int],
+    lineage: bool = False,
+):
+    """The ``mapInArrow`` function every extraction path runs.
+
+    Input batches hold ``(doc_id, spans)`` or ``(doc_id, text, source)``,
+    plus ``part_id`` in lineage mode; output is ``SPANS_OUT_SCHEMA`` rows.
+    A span with a null ``offset`` has no reading order, so its document
+    raises ``ValueError``. In lineage mode the output also carries
+    ``part_id``; each document is timed and its errors are isolated
+    (reference-style per-file try/except, pdf.py:743-746) into the
+    partition's lineage, and after the last batch one ``LINEAGE_KIND``
+    sentinel per ``part_id`` carries the partition's metrics as JSON."""
     fmts = tuple(formats)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "kind", "text", "media_ref", "offset"]
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                rows.extend(
-                    extract_document(doc_id, spans, fmts, lang, max_sentences)
+    def run(batches):
+        # one Spark task can carry several part_id values (value-hash
+        # collisions in repartition), so metrics are bucketed per part_id
+        stats: dict[int, dict] = {}
+        for batch in batches:
+            doc_ids, pages_of = _pages_reader(batch)
+            pids = batch.column("part_id").to_pylist() if lineage else None
+            out, out_pids = [], []
+            for i, doc_id in enumerate(doc_ids):
+                if not lineage:
+                    pages, media = pages_of(i)
+                    out.extend(
+                        extract_from_pages(doc_id, pages, media, fmts, lang, max_sentences)
+                    )
+                    continue
+                st = stats.setdefault(
+                    pids[i], {"docs": 0, "pages": 0, "spans": 0, "wall": 0.0, "errors": []}
                 )
-            yield pd.DataFrame(rows, columns=cols)
+                st["docs"] += 1
+                t0 = time.monotonic()
+                try:
+                    pages, media = pages_of(i)
+                    st["pages"] += len(pages)
+                    rows = extract_from_pages(doc_id, pages, media, fmts, lang, max_sentences)
+                except Exception as exc:  # reference-style per-doc isolation
+                    st["errors"].append(f"{doc_id}: {exc}")
+                    rows = []
+                st["wall"] += time.monotonic() - t0
+                st["spans"] += len(rows)
+                out.extend(rows)
+                out_pids.extend([pids[i]] * len(rows))
+            yield _record_batch(out, out_pids if lineage else None)
+        if stats:
+            sentinels = [
+                (None, LINEAGE_KIND, _lineage_json(st), None, 0)
+                for _, st in sorted(stats.items())
+            ]
+            yield _record_batch(sentinels, sorted(stats))
 
-    return docs.select("doc_id", "spans").mapInPandas(run, schema=SPANS_OUT_SCHEMA)
+    return run
+
+
+def _lineage_json(st: dict) -> str:
+    return json.dumps(
+        {
+            "doc_count": st["docs"],
+            "page_count": st["pages"],
+            "span_count": st["spans"],
+            "wall_sec": round(st["wall"], 4),
+            "docs_per_sec": (
+                round(st["docs"] / st["wall"], 3) if st["wall"] > 0 else None
+            ),
+            "status": "success",
+            "errors": st["errors"],
+            "part_mode": PART_MAP,
+        }
+    )
 
 
 def extract_spans_arrow(
@@ -81,64 +189,14 @@ def extract_spans_arrow(
     formats: Sequence[str] = ALL_FORMATS,
     lang: str = "eng",
     max_sentences: Optional[int] = None,
-    num_partitions: Optional[int] = None,
 ) -> DataFrame:
-    """Columnar fast path over the nested docs relation via ``mapInArrow``.
+    """Run the extraction kernel over the nested docs relation.
 
-    ``mapInPandas`` materializes every ``array<struct>`` cell as a Python
-    list of dicts — for span-heavy documents that conversion dominates the
-    stage (measured ~4-5x over the raw kernel). Here the kernel reads the
-    Arrow ListArray/StructArray directly: one ``offsets`` vector + four
-    flat child arrays per batch, zero per-span dict objects.
-    """
-    import pyarrow as pa
-
-    if num_partitions:
-        docs = skew_balanced(docs, num_partitions)
-
-    fmts = tuple(formats)
-
-    def run(batches):
-        from pdf2ocr_spark.kernel.emit import extract_from_pages
-
-        for batch in batches:
-            doc_ids = batch.column("doc_id").to_pylist()
-            spans = batch.column("spans")
-            if isinstance(spans, pa.ChunkedArray):
-                spans = spans.combine_chunks()
-            offsets = spans.offsets.to_numpy(zero_copy_only=False)
-            flat = spans.flatten()
-            kinds = flat.field("kind").to_pylist()
-            texts = flat.field("text").to_pylist()
-            refs = flat.field("media_ref").to_pylist()
-            offs = flat.field("offset").to_numpy(zero_copy_only=False)
-
-            out_doc, out_kind, out_text, out_ref, out_off = [], [], [], [], []
-            for i, doc_id in enumerate(doc_ids):
-                lo, hi = int(offsets[i]), int(offsets[i + 1])
-                order = sorted(range(lo, hi), key=lambda j: offs[j])
-                pages = [texts[j] or "" for j in order if kinds[j] == "page"]
-                media = [refs[j] for j in order if kinds[j] == "media" and refs[j]]
-                for r in extract_from_pages(
-                    doc_id, pages, media, fmts, lang, max_sentences
-                ):
-                    out_doc.append(r[0])
-                    out_kind.append(r[1])
-                    out_text.append(r[2])
-                    out_ref.append(r[3])
-                    out_off.append(r[4])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_doc, pa.string()),
-                    pa.array(out_kind, pa.string()),
-                    pa.array(out_text, pa.string()),
-                    pa.array(out_ref, pa.string()),
-                    pa.array(out_off, pa.int32()),
-                ],
-                names=["doc_id", "kind", "text", "media_ref", "offset"],
-            )
-
-    return docs.select("doc_id", "spans").mapInArrow(run, schema=SPANS_OUT_SCHEMA)
+    Returns the spans_out relation (doc_id, kind, text, media_ref, offset).
+    Deterministic: output row SET is independent of partitioning."""
+    return docs.select("doc_id", "spans").mapInArrow(
+        extraction_kernel(formats, lang, max_sentences), schema=SPANS_OUT_SCHEMA
+    )
 
 
 def documents_to_spans(
@@ -149,45 +207,8 @@ def documents_to_spans(
 ) -> DataFrame:
     """FUSED ingest path: (doc_id, text, source) -> spans_out in ONE Python
     pass per batch (docgen channel + extraction kernel back to back, no
-    intermediate nested Arrow round trip, no second worker chain); the
-    stage every streaming micro-batch runs (``streaming/ingest.py``). Emits
-    Arrow RecordBatches directly: the span-heavy output (~36 rows/doc)
-    through the pandas path pays a tuple-list -> DataFrame -> Arrow
-    conversion that measured ~4-5x the kernel itself (same finding as
-    extract_spans_arrow above)."""
-    import pyarrow as pa
-
-    fmts = tuple(formats)
-
-    def run(batches):
-        from pdf2ocr_spark.kernel.docgen import build_spans
-        from pdf2ocr_spark.kernel.emit import extract_document
-
-        for batch in batches:
-            doc_ids = batch.column("doc_id").to_pylist()
-            texts = batch.column("text").to_pylist()
-            sources = batch.column("source").to_pylist()
-            o_doc, o_kind, o_text, o_ref, o_off = [], [], [], [], []
-            for doc_id, text, source in zip(doc_ids, texts, sources):
-                did = str(doc_id)
-                spans = build_spans(did, text, source)
-                for r in extract_document(did, spans, fmts, lang, max_sentences):
-                    o_doc.append(r[0])
-                    o_kind.append(r[1])
-                    o_text.append(r[2])
-                    o_ref.append(r[3])
-                    o_off.append(r[4])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(o_doc, pa.string()),
-                    pa.array(o_kind, pa.string()),
-                    pa.array(o_text, pa.string()),
-                    pa.array(o_ref, pa.string()),
-                    pa.array(o_off, pa.int32()),
-                ],
-                names=["doc_id", "kind", "text", "media_ref", "offset"],
-            )
-
+    nested Arrow round trip, no second worker chain); the stage
+    ``pipeline.run_pipeline`` and every streaming micro-batch run."""
     return documents.select("doc_id", "text", "source").mapInArrow(
-        run, schema=SPANS_OUT_SCHEMA
+        extraction_kernel(formats, lang, max_sentences), schema=SPANS_OUT_SCHEMA
     )

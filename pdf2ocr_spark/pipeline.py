@@ -1,5 +1,5 @@
 """End-to-end extraction pipeline (the engine's E1/E3 entry point —
-SURVEY.md §3: job args -> read docs -> skew-balanced repartition -> fused
+SURVEY.md §3: job args -> read docs -> stripe_key repartition -> fused
 extract kernel -> spans_out [+ lineage]).
 """
 
@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pdf2ocr_spark.kernel.emit import ALL_FORMATS
 from pdf2ocr_spark.operators.docgen import documents_to_docs
-from pdf2ocr_spark.operators.extract import extract_spans
+from pdf2ocr_spark.operators.extract import documents_to_spans, stripe_key
 
 
 def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -46,43 +46,8 @@ def load_docs_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return documents_to_docs(load_documents(spark, sf_dir))
 
 
-def stripe_key(num_partitions: int):
-    """Deterministic weight-striped partition key, computable on the
-    SMALL (pre-channel) documents relation: the per-doc work weight
-    (words x heavy tiling factor) is predicted with the same md5-derived
-    heavy factor the Python channel uses (kernel/docgen.py:heavy_factor),
-    expressed in pure Catalyst so the planner sees a deterministic column
-    expression. Shared by stripe_documents and the fused checkpoint job
-    (jobs/run_extract.py), whose resume contract needs the same doc ->
-    partition mapping on every run."""
-    from pyspark.sql import functions as F
-
-    from pdf2ocr_spark.kernel.docgen import HEAVY_DOC_RATE, HEAVY_MAX_FACTOR
-
-    md5_hex = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":heavy")))
-    u = F.conv(F.substring(md5_hex, 1, 8), 16, 10).cast("double") / F.lit(2.0**32)
-    v = F.conv(F.substring(md5_hex, 9, 8), 16, 10).cast("double") / F.lit(2.0**32)
-    factor = F.when(
-        u >= F.lit(HEAVY_DOC_RATE), F.lit(1)
-    ).otherwise(
-        F.least(
-            F.lit(HEAVY_MAX_FACTOR),
-            F.greatest(
-                F.lit(2),
-                F.floor(F.lit(1.0) / F.greatest(v, F.lit(1.0 / HEAVY_MAX_FACTOR))),
-            ),
-        )
-    )
-    weight = F.size(F.split("text", " ")) * factor
-    wclass = F.floor(F.log2(weight + F.lit(1.0)))
-    return F.pmod(
-        F.xxhash64(F.col("doc_id").cast("string"), wclass.cast("long")),
-        F.lit(num_partitions),
-    ).cast("int")
-
-
 def stripe_documents(documents: DataFrame, num_partitions: int) -> DataFrame:
-    """Weight-striped repartition of the SMALL documents relation, before
+    """``stripe_key`` repartition of the SMALL documents relation, before
     span expansion — the scale-critical move: the shuffle moves ~100-byte
     rows, not the expanded nested span arrays, and the downstream
     docgen+extract stages then run fused with no further shuffle.
@@ -101,11 +66,10 @@ def run_pipeline(
 ) -> DataFrame:
     """documents.parquet -> stripe -> docs -> spans_out DataFrame (lazy).
 
-    Physical plan: parquet scan -> ONE small-row shuffle (weight-striped)
-    -> fused docgen+extract mapInPandas stages (no nested-data shuffle).
+    Physical plan: parquet scan -> ONE small-row shuffle (``stripe_key``)
+    -> ONE fused docgen+extract ``mapInArrow`` stage (no nested-data
+    shuffle).
     """
-    from pdf2ocr_spark.operators.extract import documents_to_spans
-
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism * 2
     documents = load_documents(spark, sf_dir)

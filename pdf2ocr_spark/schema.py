@@ -31,19 +31,3 @@ SPANS_OUT_SCHEMA = T.StructType(
         T.StructField("offset", T.IntegerType(), False),
     ]
 )
-
-#: per-partition lineage/metrics relation (checkpoint + resume granularity)
-LINEAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("doc_count", T.LongType()),
-        T.StructField("page_count", T.LongType()),
-        T.StructField("span_count", T.LongType()),
-        T.StructField("status", T.StringType()),
-        T.StructField("error", T.StringType()),
-        T.StructField("started_unix", T.DoubleType()),
-        T.StructField("finished_unix", T.DoubleType()),
-        T.StructField("docs_per_sec", T.DoubleType()),
-    ]
-)

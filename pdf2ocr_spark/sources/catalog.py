@@ -6,7 +6,7 @@ The production deployment registers the docs / spans_out / lineage tables
 in an Iceberg catalog with:
 
     docs       PARTITIONED BY (bucket(1024, doc_id))   -- the write-time
-               weight-striping that makes extraction shuffle-free
+               doc_id striping that makes extraction shuffle-free
     spans_out  PARTITIONED BY (part_id)                -- idempotent
                partition-overwrite checkpointing
     lineage    PARTITIONED BY (part_id)

@@ -12,8 +12,8 @@ lineage-style resume comes from the streaming checkpoint itself
 Each micro-batch runs ONE Python stage:
 ``operators.extract.documents_to_spans`` (``mapInArrow``), docgen channel
 and extraction kernel back to back in one worker pass. It emits the same
-rows as the batch chain ``documents_to_docs`` -> ``extract_spans``, without
-a second Python worker per task and without sending the nested
+rows as the batch chain ``documents_to_docs`` -> ``extract_spans_arrow``,
+without a second Python worker per task and without sending the nested
 ``array<struct>`` docs relation across the JVM/Python boundary twice.
 Streaming micro-batches are already file-split, so no repartition.
 

@@ -11,10 +11,9 @@ from pdf2ocr_spark.operators.checkpoint import (
     read_lineage,
     read_spans,
     run_checkpointed,
-    stable_part_id,
     summary,
 )
-from pdf2ocr_spark.pipeline import load_docs_corpus, run_pipeline
+from pdf2ocr_spark.pipeline import load_docs_corpus, run_pipeline, stripe_key
 
 N_PARTS = 8
 
@@ -63,7 +62,7 @@ def test_full_run_writes_spans_and_lineage(spark, docs, outdir):
 
 def test_kill_resume_exactly_once(spark, docs, outdir):
     # simulate a killed run: only partitions 0..2 got processed
-    part = stable_part_id(N_PARTS)
+    part = stripe_key(N_PARTS)
     partial = docs.withColumn("pid", part).where(F.col("pid") < 3).drop("pid")
     run_checkpointed(spark, partial, outdir, num_partitions=N_PARTS)
     # the kernel only saw docs of partitions 0-2, so lineage has 3 rows
@@ -86,7 +85,8 @@ def test_kill_resume_exactly_once(spark, docs, outdir):
 
 def test_weight_striping_balances_partitions(spark, docs, outdir):
     """Skew evidence: despite Zipf page counts (40x heavy tail), the
-    weight-striped partitioning keeps per-partition page totals balanced
+    stripe_key partitioning (a hash of doc_id, which spreads heavy docs
+    independently of each other) keeps per-partition page totals balanced
     (no partition carries more than ~2.5x the mean) — the north-rule skew
     criterion, measured from the lineage metrics themselves."""
     run_checkpointed(spark, docs, outdir, num_partitions=N_PARTS)
@@ -97,20 +97,35 @@ def test_weight_striping_balances_partitions(spark, docs, outdir):
     assert pages.min() >= 0.3 * pages.mean()
 
 
-def test_per_doc_error_isolation(spark, docs, outdir):
-    """A document that crashes the kernel is recorded in lineage errors;
-    the job completes and every healthy doc is extracted (ref behavior:
-    per-file try/except, converters/pdf.py:743-746)."""
+def _poison(spark):
+    """One document whose first span has a null offset: no reading order."""
     from pdf2ocr_spark.schema import DOCS_SCHEMA
 
-    poison = spark.createDataFrame(
+    return spark.createDataFrame(
         [("poison-doc", [
             {"kind": "page", "text": "ok.", "media_ref": None, "offset": None},
             {"kind": "page", "text": "boom.", "media_ref": None, "offset": 1},
         ])],
         schema=DOCS_SCHEMA,
     )
-    mixed = docs.limit(50).unionByName(poison)
+
+
+def test_arrow_path_rejects_null_offset(spark):
+    """Without lineage there is nowhere to isolate the error: extraction
+    fails, naming the document, instead of guessing a reading order."""
+    from pyspark.errors import PythonException
+
+    from pdf2ocr_spark.operators.extract import extract_spans_arrow
+
+    with pytest.raises(PythonException, match="'poison-doc' has a span with a null offset"):
+        extract_spans_arrow(_poison(spark)).collect()
+
+
+def test_per_doc_error_isolation(spark, docs, outdir):
+    """A document that crashes the kernel is recorded in lineage errors;
+    the job completes and every healthy doc is extracted (ref behavior:
+    per-file try/except, converters/pdf.py:743-746)."""
+    mixed = docs.limit(50).unionByName(_poison(spark))
     run_checkpointed(spark, mixed, outdir, num_partitions=4)
 
     lin = read_lineage(spark, outdir).toPandas()
@@ -138,7 +153,7 @@ def test_no_resume_clears_stale_state(spark, docs, outdir):
     reporting only the partitions the subset actually hit."""
     run_checkpointed(spark, docs, outdir, num_partitions=N_PARTS)
 
-    part = stable_part_id(N_PARTS)
+    part = stripe_key(N_PARTS)
     subset = docs.withColumn("pid", part).where(F.col("pid") < 3).drop("pid")
     res = run_checkpointed(
         spark, subset, outdir, num_partitions=N_PARTS, resume=False
@@ -153,7 +168,7 @@ def test_resume_with_only_empty_partitions_left_writes_nothing(spark, docs, outd
     """Partitions that never received documents stay planned; resuming
     when only they are left runs the write over zero rows, which must
     leave every completed partition's spans and lineage as they were."""
-    part = stable_part_id(N_PARTS)
+    part = stripe_key(N_PARTS)
     subset = docs.withColumn("pid", part).where(F.col("pid") < 3).drop("pid")
     first = run_checkpointed(spark, subset, outdir, num_partitions=N_PARTS)
     assert first["processed"] == 3
@@ -233,20 +248,52 @@ def test_fused_channel_resume_is_noop_and_requires_part_id(spark, sf_dir, outdir
         )
 
 
-def test_resume_refuses_partition_mode_mismatch(spark, docs, sf_dir, outdir):
-    """Fused mode partitions by pipeline.stripe_key (word weight),
-    non-fused by stable_part_id (span weight) — the same part_id holds
-    DIFFERENT documents under the two maps, so a cross-mode resume would
-    skip 'done' partitions whose documents the new mode never wrote.
-    The lineage records its mode and resume refuses a mismatch."""
-    run_checkpointed(spark, docs, outdir, num_partitions=N_PARTS)
+def test_nested_run_resumed_by_fused_run_is_exactly_once(spark, docs, sf_dir, outdir):
+    """Both modes partition by stripe_key, so a fused-mode resume of a
+    killed nested-mode run skips exactly the documents it wrote."""
+    import pandas as pd
+
+    part = stripe_key(N_PARTS)
+    partial = docs.withColumn("pid", part).where(F.col("pid") < 3).drop("pid")
+    run_checkpointed(spark, partial, outdir, num_partitions=N_PARTS)
+
+    small = _small_with_part_id(spark, sf_dir, N_PARTS)
+    res = run_checkpointed(
+        spark, small, outdir, num_partitions=N_PARTS, fused_channel=True
+    )
+    assert res["skipped"] == 3
+    assert res["processed"] == 5
+
+    spans = read_spans(spark, outdir).toPandas()
+    direct = run_pipeline(spark, sf_dir, num_partitions=4).toPandas()
+    pd.testing.assert_frame_equal(canon(spans), canon(direct))
+    assert not spans.duplicated(["doc_id", "kind", "offset"]).any()
+
+
+def test_resume_refuses_lineage_from_an_older_map(spark, docs, sf_dir, outdir):
+    """Lineage written under another doc->partition map (older engines
+    recorded 'fused' or 'nested') may hold different documents under the
+    same part_id, so resume refuses it; resume=False starts over."""
+    from pdf2ocr_spark.operators.checkpoint import CHECKPOINT_OUT_SCHEMA, LINEAGE_KIND
+    from pdf2ocr_spark.operators.extract import PART_MAP
+
+    src = outdir + "_src"
+    try:
+        run_checkpointed(spark, docs, src, num_partitions=N_PARTS)
+        combined = spark.read.schema(CHECKPOINT_OUT_SCHEMA).parquet(src + "/combined")
+        old = F.replace("text", F.lit(f'"part_mode": "{PART_MAP}"'), F.lit('"part_mode": "fused"'))
+        combined.withColumn(
+            "text", F.when(F.col("kind") == LINEAGE_KIND, old).otherwise(F.col("text"))
+        ).write.partitionBy("part_id").parquet(outdir + "/combined")
+    finally:
+        shutil.rmtree(src, ignore_errors=True)
+    assert set(read_lineage(spark, outdir).toPandas()["part_mode"]) == {"fused"}
 
     small = _small_with_part_id(spark, sf_dir, N_PARTS)
     with pytest.raises(ValueError, match="partitioning mode"):
         run_checkpointed(
             spark, small, outdir, num_partitions=N_PARTS, fused_channel=True
         )
-    # resume=False starts over and is allowed to switch modes
     res = run_checkpointed(
         spark,
         small,

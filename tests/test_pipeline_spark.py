@@ -56,19 +56,22 @@ def test_partitioning_invariance(spark, sf_dir):
     pd.testing.assert_frame_equal(a, b)
 
 
-def test_arrow_path_matches_pandas_path(spark, docs_df):
-    """extract_spans (mapInPandas) and extract_spans_arrow (mapInArrow
-    columnar fast path) must emit identical span sets."""
-    from pdf2ocr_spark.operators.extract import extract_spans, extract_spans_arrow
+def test_arrow_path_matches_pure_kernel(spark, docs_df):
+    """extract_spans_arrow (the nested mapInArrow path) emits exactly the
+    rows of the pure kernel run over the same collected docs rows."""
+    from pdf2ocr_spark.operators.extract import extract_spans_arrow
 
     key = ["doc_id", "kind", "offset"]
-    a = extract_spans(docs_df).toPandas().sort_values(key).reset_index(drop=True)
+    a = extract_spans_arrow(docs_df).toPandas().sort_values(key).reset_index(drop=True)
+    rows = []
+    for r in docs_df.collect():
+        rows.extend(extract_document(r["doc_id"], [s.asDict() for s in r["spans"]]))
     b = (
-        extract_spans_arrow(docs_df)
-        .toPandas()
+        pd.DataFrame(rows, columns=["doc_id", "kind", "text", "media_ref", "offset"])
         .sort_values(key)
         .reset_index(drop=True)
     )
+    b["offset"] = b["offset"].astype(a["offset"].dtype)
     pd.testing.assert_frame_equal(a, b)
 
 
