@@ -23,11 +23,10 @@ LANGS = sorted(STOPWORDS)  # alphabetical = tie-break priority order
 
 FINGERPRINT_K = 4
 
-# Gopher repetition-gate thresholds, shared by the batch
-# quality_repetition query, its DuckDB oracle, and the streaming clean
-# pipeline — one definition so the batch/stream parity contract can't
-# silently drift (integer basis points: 0.63 dup-word mass, 0.20
-# top-bigram mass)
+# Gopher repetition-gate thresholds, shared by the quality_repetition
+# query, the DuckDB oracles and plans/queries.clean_gates (the one gate
+# definition behind both corpus_clean and the streaming clean pipeline);
+# integer basis points: 0.63 dup-word mass, 0.20 top-bigram mass
 DUP_WORD_MAX_BP = 6300
 TOP_BIGRAM_MAX_BP = 2000
 
@@ -88,9 +87,9 @@ def quality_bp_expr(
 ) -> Column:
     """The composite quality score as a single reusable COLUMN (bp):
     length saturation + stopword ratio + lexical diversity. Shared by
-    the batch quality_score relation and the streaming clean pipeline
-    (streaming/clean.py), where a projection avoids the streaming
-    self-join a quality_score(…)-then-join formulation would plan."""
+    the batch quality_score relation and plans/queries.clean_gates,
+    where a projection avoids the streaming self-join a
+    quality_score(…)-then-join formulation would plan."""
     text = text if text is not None else F.col("text")
     n_chars = n_chars if n_chars is not None else F.col("n_chars")
     toks = _toks(text)

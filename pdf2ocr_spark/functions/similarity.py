@@ -22,6 +22,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
+from pdf2ocr_spark.functions.dedup import _fan_out
+
 QUERY_STRIDE = 50  # vec_id % 50 == 0 -> deterministic query set
 N_QUERIES = 100  # hard cap: query set is CONSTANT-size, not O(N)
 TOP_K = 5
@@ -117,15 +119,6 @@ def _collect_queries(embeddings: DataFrame) -> tuple:
     return qids, Q
 
 
-def _fan_out_vecs(df: DataFrame) -> DataFrame:
-    """Round-robin repartition before the CPU-heavy scoring kernel: the
-    single-file sandbox corpus arrives as ONE scan split (see
-    dedup._fan_out); at production split counts this is a no-op-cost
-    move of each narrow row once."""
-    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return df.repartition(n)
-
-
 def _topk_candidates(
     embeddings: DataFrame,
     qids: np.ndarray,
@@ -202,7 +195,7 @@ def _topk_candidates(
                     }
                 )
 
-    base = _fan_out_vecs(
+    base = _fan_out(
         embeddings.select("vec_id", _as_double(F.col("embedding")).alias("e"))
     )
     return base.mapInPandas(
@@ -460,7 +453,7 @@ def kmeans_train(
     # 0.85 s/round -> ~0.2 s/round at 10x); the per-cell reductions are
     # integer sums, so the result is partition-independent by design
     base = (
-        _fan_out_vecs(
+        _fan_out(
             embeddings.select(
                 "vec_id", _as_double(F.col("embedding")).alias("e")
             )

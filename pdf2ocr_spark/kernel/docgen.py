@@ -85,11 +85,6 @@ def _damage_ligature_word(word: str) -> str:
     return word
 
 
-def _damage_ligature(word: str, rng) -> str:
-    """Back-compat wrapper (the rng argument was never used)."""
-    return _damage_ligature_word(word)
-
-
 def heavy_factor(doc_id: str) -> int:
     """Zipf-ish tiling factor; 1 for ~96% of docs, up to HEAVY_MAX_FACTOR."""
     h = hashlib.md5(f"{doc_id}:heavy".encode()).digest()
@@ -180,10 +175,3 @@ def build_spans(doc_id: str, text: str, source: str) -> List[Dict]:
 
     return spans
 
-
-def build_doc_rows(doc_ids, texts, sources):
-    """Columnar driver: parallel lists -> list of (doc_id, spans) pairs."""
-    return [
-        (str(d), build_spans(str(d), t, s))
-        for d, t, s in zip(doc_ids, texts, sources)
-    ]

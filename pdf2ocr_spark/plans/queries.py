@@ -32,7 +32,12 @@ from typing import Callable, Dict
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pdf2ocr_spark.functions.quality import DUP_WORD_MAX_BP, TOP_BIGRAM_MAX_BP
+from pdf2ocr_spark.functions.dedup import _fan_out
+from pdf2ocr_spark.functions.quality import (
+    DUP_WORD_MAX_BP,
+    TOP_BIGRAM_MAX_BP,
+    quality_bp_expr,
+)
 
 LINE_WORDS = 2
 PAGE_LINES = 10
@@ -49,17 +54,6 @@ def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # shared derived relations (Spark side)
 # --------------------------------------------------------------------------
-
-def _fan_out(docs: DataFrame) -> DataFrame:
-    """Round-robin repartition before a per-row expansion: the sandbox
-    corpus is ONE parquet file -> one scan split, which serializes the
-    whole line derivation on a single core (measured: every line query's
-    generate stage ran 1 task at local[32]). At production scale the table
-    has thousands of splits and this exchange moves each small source row
-    once — the same move as functions/dedup._fan_out."""
-    n = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return docs.repartition(n)
-
 
 def _no_push(cond: "F.Column") -> "F.Column":
     """Pin an expensive filter ABOVE the fan-out exchange: appends an
@@ -1194,35 +1188,34 @@ CHUNK_W = 32
 CHUNK_S = 25
 
 
-def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Training-data chunking: split each document into fixed-size token
-    windows (CHUNK_W tokens, stride CHUNK_S -> CHUNK_W - CHUNK_S
-    tokens of overlap) — the
-    context-window packing step an LLM-pretraining pipeline runs after
-    cleaning/dedup. Pure JVM array ops (sequence/explode/slice), one
-    narrow explode whose fan-out is len/stride per doc; fanned out over
-    the session's parallelism (single-row-group scan), then a map stage
-    end to end."""
-    docs = _fan_out(_documents(spark, sf_dir))
-    toks = F.split("text", " ")
-    with_starts = docs.select(
-        "doc_id",
-        toks.alias("toks"),
-        F.explode(
-            F.sequence(
-                F.lit(0),
-                F.greatest(F.size(toks) - 1, F.lit(0)),
-                F.lit(CHUNK_S),
-            )
-        ).alias("start"),
-    )
+def chunk_windows(df: DataFrame, text: "F.Column", keep: list) -> DataFrame:
+    """Context-window packing: one row per CHUNK_W-token window of
+    ``text`` (stride CHUNK_S, so consecutive windows overlap by
+    CHUNK_W - CHUNK_S tokens), carrying the ``keep`` columns. Pure JVM
+    array ops (sequence/explode/slice): one narrow explode whose fan-out
+    is len/stride per row, no shuffle, stream-safe. The text is split
+    once per row, before the explode."""
+    toks = df.select(*keep, F.split(text, " ").alias("toks"))
+    n = F.size("toks")
+    starts = F.sequence(F.lit(0), F.greatest(n - 1, F.lit(0)), F.lit(CHUNK_S))
+    with_starts = toks.select(*keep, "toks", F.explode(starts).alias("start"))
     chunk = F.slice("toks", F.col("start") + 1, CHUNK_W)
     return with_starts.select(
-        "doc_id",
+        *keep,
         (F.col("start") / CHUNK_S).cast("long").alias("chunk_id"),
         F.size(chunk).cast("long").alias("n_tokens"),
         F.array_join(chunk, " ").alias("chunk_text"),
     )
+
+
+def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Training-data chunking: split each document into overlapping
+    token windows (chunk_windows) — the context-window packing step an
+    LLM-pretraining pipeline runs after cleaning/dedup. Fanned out over
+    the session's parallelism (single-row-group scan), then a map stage
+    end to end."""
+    docs = _fan_out(_documents(spark, sf_dir))
+    return chunk_windows(docs, F.col("text"), ["doc_id"])
 
 
 SQL_DOC_CHUNKS = f"""
@@ -1734,22 +1727,31 @@ _SAMPLE_DEFAULT_BP = 5000
 VOCAB_TOP_K = 100
 
 
+def _sample_bucket() -> "F.Column":
+    """The document's sampling bucket in [0, 10000): hash(doc_id:sample)."""
+    from pdf2ocr_spark.functions.dedup import base_hash
+
+    return base_hash(F.concat(F.col("doc_id").cast("string"), F.lit(":sample"))) % 10000
+
+
+def _sample_rate() -> "F.Column":
+    """The document's language-stratum quota, in basis points."""
+    rate = F.lit(_SAMPLE_DEFAULT_BP)
+    for lang, bp in sorted(_SAMPLE_RATES_BP.items()):
+        rate = F.when(F.col("lang") == lang, F.lit(bp)).otherwise(rate)
+    return rate
+
+
 def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic stratified sampling (training-data pipeline tier):
     keep each document iff hash(doc_id) falls under its language
     stratum's quota — the reproducible, rerun-stable alternative to
     rand()-based sampling (a resumed 10^12-doc job must sample the SAME
     docs). Pure codegen filter, zero shuffle, trivially partitionable."""
-    from pdf2ocr_spark.functions.dedup import base_hash
-
     docs = _documents(spark, sf_dir)
-    bucket = base_hash(F.concat(F.col("doc_id").cast("string"), F.lit(":sample"))) % 10000
-    rate = F.lit(_SAMPLE_DEFAULT_BP)
-    for lang, bp in sorted(_SAMPLE_RATES_BP.items()):
-        rate = F.when(F.col("lang") == lang, F.lit(bp)).otherwise(rate)
     return docs.select(
-        "doc_id", "lang", bucket.cast("long").alias("sample_bucket")
-    ).where(F.col("sample_bucket") < rate)
+        "doc_id", "lang", _sample_bucket().cast("long").alias("sample_bucket")
+    ).where(F.col("sample_bucket") < _sample_rate())
 
 
 SQL_SAMPLE_STRATIFIED = f"""
@@ -2005,6 +2007,65 @@ FROM ranked WHERE rank <= {TFIDF_TOP_K}
 CLEAN_MIN_QUALITY_BP = 3500
 
 
+def _floor_bp(num: "F.Column", den: "F.Column") -> "F.Column":
+    """Exact integer floor(num * 10000 / den): the mod is subtracted
+    first, so the double division cannot round across an integer."""
+    scaled = num * 10000
+    return ((scaled - F.pmod(scaled, den)) / den).cast("long")
+
+
+def clean_gates(docs: DataFrame) -> DataFrame:
+    """The per-document clean gates, on a static OR streaming documents
+    relation: adds ``quality_bp`` (functions/quality.quality_bp_expr)
+    and keeps documents with quality_bp >= CLEAN_MIN_QUALITY_BP that
+    pass the quality_repetition gate (dup-word and top-bigram mass within
+    DUP_WORD_MAX_BP / TOP_BIGRAM_MAX_BP).
+
+    Both gates are row-local expressions — quality as a projection, not
+    a quality_score-then-join (a stream-stream self-join on a stream, a
+    second scan in batch); top-bigram mass as the longest run of the
+    sorted bigram array under F.aggregate (no explode, no agg). In batch
+    the filters are pinned above the caller's fan-out exchange with
+    _no_push; streaming rejects its nondeterministic disjunct, and a
+    stream has no single-split scan to protect."""
+    toks = F.split("text", " ")
+    n_words = F.size(toks)
+    dup_bp = _floor_bp(n_words - F.size(F.array_distinct(toks)), n_words)
+    grams = F.when(
+        n_words >= 2,
+        F.array_sort(
+            F.transform(
+                F.sequence(F.lit(0), n_words - 2),
+                lambda i: F.array_join(F.slice(toks, i + 1, 2), " "),
+            )
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+    zero = F.lit(0).cast("long")
+    one = F.lit(1).cast("long")
+
+    def step(acc, x):
+        run = F.when(x == acc["prev"], acc["run"] + 1).otherwise(one)
+        return F.struct(
+            x.alias("prev"), run.alias("run"), F.greatest(acc["best"], run).alias("best")
+        )
+
+    top_gram = F.aggregate(
+        grams,
+        F.struct(F.lit("").alias("prev"), zero.alias("run"), zero.alias("best")),
+        step,
+        lambda acc: acc["best"],
+    )
+    top_bp = F.when(
+        F.size(grams) > 0, _floor_bp(top_gram, F.size(grams))
+    ).otherwise(zero)
+    pin = (lambda cond: cond) if docs.isStreaming else _no_push
+    return (
+        docs.withColumn("quality_bp", quality_bp_expr())
+        .where(pin(F.col("quality_bp") >= CLEAN_MIN_QUALITY_BP))
+        .where(pin((dup_bp <= DUP_WORD_MAX_BP) & (top_bp <= TOP_BIGRAM_MAX_BP)))
+    )
+
+
 def q_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END training-data pipeline in one statement, composed from
     the registered building blocks: stratified sample (deterministic
@@ -2013,97 +2074,20 @@ def q_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     -> PII scrub -> context-window chunking of the scrubbed text.
     Output = the chunk relation a pretraining run would tokenize.
 
-    Round-6 plan shape: every gate is a PER-DOCUMENT function of the
-    same row, so the whole pipeline is ONE narrow pass — the cheap
-    sample-hash filter sits at the scan (prunes ~96% before anything
-    moves), the survivors fan out once, and quality / repetition / scrub
-    / chunking evaluate as row-local expressions above that single
-    exchange. The round-5 form ran the four sub-queries as separate
-    scans and equi-joined them (4 scans + 3 joins + their exchanges)
-    to re-associate columns that never left the row (5.4 s -> ~0.8 s at
-    10x, hashes identical). The expensive filters are wrapped in
-    _no_push so they stay ABOVE the fan-out exchange — without it,
-    predicate pushdown inlines the quality/repetition expression
-    trees into the single-row-group scan and serializes them; the
-    repetition gate itself folds to row-local expressions (dup-word mass
-    via array_distinct, top-bigram mass as the max run of the sorted
-    bigram array under F.aggregate — O(tokens) per row, evaluated only
-    for the sampled+quality survivors)."""
-    from pdf2ocr_spark.functions.dedup import base_hash
-    from pdf2ocr_spark.functions.quality import quality_bp_expr
-
-    docs = _documents(spark, sf_dir)
-    bucket = (
-        base_hash(F.concat(F.col("doc_id").cast("string"), F.lit(":sample")))
-        % 10000
+    Every stage is a function of one document row, so the pipeline is
+    ONE narrow pass: the cheap sample-hash filter sits at the scan
+    (prunes ~96% before anything moves), the survivors fan out once,
+    and the gates, scrub and chunking run above that single exchange.
+    clean_gates pins its filters there: without the pin, predicate
+    pushdown inlines the quality/repetition expression trees into the
+    single-row-group scan and evaluates them on one core."""
+    sampled = _fan_out(
+        _documents(spark, sf_dir).where(_sample_bucket() < _sample_rate())
     )
-    rate = F.lit(_SAMPLE_DEFAULT_BP)
-    for lang, bp_rate in sorted(_SAMPLE_RATES_BP.items()):
-        rate = F.when(F.col("lang") == lang, F.lit(bp_rate)).otherwise(rate)
-    sampled = _fan_out(docs.where(bucket < rate))
-
-    toks0 = F.split("text", " ")
-    nw = F.size(toks0)
-    nd = F.size(F.array_distinct(toks0))
-    dup_bp = (
-        ((nw - nd) * 10000 - F.pmod((nw - nd) * 10000, nw)) / nw
-    ).cast("long")
-    g = F.when(
-        nw >= 2,
-        F.transform(
-            F.sequence(F.lit(0), nw - 2),
-            lambda i: F.array_join(F.slice(toks0, i + 1, 2), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    gs = F.array_sort(g)
-    top = F.aggregate(
-        gs,
-        F.struct(
-            F.lit("").alias("prev"), F.lit(0).alias("run"), F.lit(0).alias("best")
-        ),
-        lambda acc, x: F.struct(
-            x.alias("prev"),
-            F.when(x == acc.prev, acc.run + 1).otherwise(F.lit(1)).alias("run"),
-            F.greatest(
-                acc.best,
-                F.when(x == acc.prev, acc.run + 1).otherwise(F.lit(1)),
-            ).alias("best"),
-        ),
-        lambda acc: acc.best,
-    )
-    n_grams = F.size(g)
-    top_bp = F.when(
-        n_grams > 0,
-        ((top * 10000 - F.pmod(top * 10000, n_grams)) / n_grams).cast("long"),
-    ).otherwise(F.lit(0).cast("long"))
-    is_repetitive = (dup_bp > DUP_WORD_MAX_BP) | (top_bp > TOP_BIGRAM_MAX_BP)
-
-    base = (
-        sampled.withColumn("quality_bp", quality_bp_expr())
-        .where(_no_push(F.col("quality_bp") >= CLEAN_MIN_QUALITY_BP))
-        .where(_no_push(~is_repetitive))
-        .withColumn("scrubbed", _pii_scrubbed_col(_pii_seeded_col()))
-    )
-    toks = F.split("scrubbed", " ")
-    with_starts = base.select(
-        "doc_id",
-        "lang",
-        "quality_bp",
-        toks.alias("toks"),
-        F.explode(
-            F.sequence(
-                F.lit(0), F.greatest(F.size(toks) - 1, F.lit(0)), F.lit(CHUNK_S)
-            )
-        ).alias("start"),
-    )
-    chunk = F.slice("toks", F.col("start") + 1, CHUNK_W)
-    return with_starts.select(
-        "doc_id",
-        "lang",
-        "quality_bp",
-        (F.col("start") / CHUNK_S).cast("long").alias("chunk_id"),
-        F.size(chunk).cast("long").alias("n_tokens"),
-        F.array_join(chunk, " ").alias("chunk_text"),
+    return chunk_windows(
+        clean_gates(sampled),
+        _pii_scrubbed_col(_pii_seeded_col()),
+        ["doc_id", "lang", "quality_bp"],
     )
 
 

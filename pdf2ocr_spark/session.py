@@ -12,7 +12,8 @@ import os
 from pyspark.sql import SparkSession
 
 ENGINE_CONFS = {
-    # Arrow end-to-end: the kernel stages are mapInPandas/applyInPandas
+    # Arrow for pandas conversions and pandas UDFs (the extraction kernel
+    # itself is mapInArrow, which is Arrow regardless)
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # 128-row batches measured fastest for the extraction kernel (finer
     # JVM<->Python pipelining; 256/512/1024 were 15-35% slower end-to-end)

@@ -2,29 +2,31 @@
 
 The batch ``corpus_clean`` query (plans/queries.py) is the end-to-end
 training-data pipeline over a static corpus. A production ingest is
-continuous — documents keep arriving — so this module runs the SAME
-stateless gates over a file-source documents stream, exactly-once via
-the stream checkpoint:
+continuous — documents keep arriving — so this module runs its
+per-document stages over a file-source documents stream, exactly-once
+via the stream checkpoint:
 
-    documents stream -> quality gate (functions/quality.quality_bp_expr)
-                     -> repetition gate (dup-word + top-bigram, the SAME
-                        thresholds as quality_repetition/corpus_clean)
-                     -> PII scrub -> context-window chunking
+    documents stream -> plans/queries.clean_gates (quality + repetition)
+                     -> PII scrub (plans/queries._pii_scrubbed_col)
+                     -> context-window chunking (plans/queries.chunk_windows)
                      -> append-only chunk sink
 
-(The batch corpus_clean additionally runs the stratified SAMPLE first —
-a corpus-level decision, deliberately not a per-document stream gate.)
+The gates, the scrub and the chunking are the batch definitions
+themselves, not copies. (The batch corpus_clean additionally runs the
+stratified SAMPLE first and scrubs a PII-seeded text — corpus-level and
+oracle-fixture decisions, deliberately not per-document stream stages.)
 
 Every stage is a stateless per-document projection/filter, so no
 watermark or state store is needed — exactly the property that makes
 the clean pipeline INCREMENTAL: chunks for a document are emitted once,
 when its file arrives, and never revised. (Cross-document stages —
-near-dup dedup — live in streaming/dedup.py with GroupState; a full
-continuous pipeline chains the two.)
+exact dedup — live in streaming/dedup.py with GroupState;
+streaming/pipeline_chain.py chains the two.)
 
 Batch parity is pinned by test_streaming_clean: over the same document
-set, the streamed chunk relation equals the batch query's projection of
-the same stages.
+set, the streamed chunk relation equals clean_transform run as a static
+query, and the kept documents equal the independent quality_score and
+quality_repetition queries' gates.
 """
 
 from __future__ import annotations
@@ -32,110 +34,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pdf2ocr_spark.functions.quality import (
-    DUP_WORD_MAX_BP,
-    TOP_BIGRAM_MAX_BP,
-    quality_bp_expr,
-)
+from pdf2ocr_spark.plans.queries import _pii_scrubbed_col, chunk_windows, clean_gates
+from pdf2ocr_spark.streaming.ingest import DOCUMENTS_SCHEMA, start_file_stream
 
 
 def clean_transform(docs: DataFrame) -> DataFrame:
     """The stateless clean pipeline as one composable transformation
     (works on a static OR streaming documents relation)."""
-    from pdf2ocr_spark.plans.queries import (
-        CHUNK_S,
-        CHUNK_W,
-        CLEAN_MIN_QUALITY_BP,
-        _PII_EMAIL,
-        _PII_PHONE,
-        _PII_URL,
-    )
-
-    toks_all = F.split("text", " ")
-
-    def _floor_bp(num, den):
-        # exact integer floor(num*10000/den): subtract the mod first so
-        # the double division cannot round across an integer boundary
-        # (same rule as the batch queries)
-        scaled = num * 10000
-        return ((scaled - F.pmod(scaled, den)) / den).cast("long")
-
-    dup_bp = _floor_bp(
-        F.size(toks_all) - F.size(F.array_distinct(toks_all)), F.size(toks_all)
-    )
-    # top-bigram mass as a pure array expression (no explode, no agg —
-    # stream-safe): max run length in the SORTED bigram array == the
-    # most frequent bigram's count
-    grams = F.when(
-        F.size(toks_all) >= 2,
-        F.array_sort(
-            F.transform(
-                F.sequence(F.lit(0), F.size(toks_all) - 2),
-                lambda i: F.array_join(F.slice(toks_all, i + 1, 2), " "),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    zero = F.lit(0).cast("long")
-    top_gram = F.aggregate(
-        grams,
-        F.struct(
-            F.lit("").alias("prev"), zero.alias("run"), zero.alias("best")
-        ),
-        lambda acc, x: F.struct(
-            x.alias("prev"),
-            F.when(x == acc["prev"], acc["run"] + 1).otherwise(
-                F.lit(1).cast("long")
-            ).alias("run"),
-            F.greatest(
-                acc["best"],
-                F.when(x == acc["prev"], acc["run"] + 1).otherwise(
-                    F.lit(1).cast("long")
-                ),
-            ).alias("best"),
-        ),
-        lambda acc: acc["best"],
-    )
-    top_bp = F.when(
-        F.size(grams) > 0, _floor_bp(top_gram, F.size(grams))
-    ).otherwise(zero)
-    # quality as a PROJECTION, not a quality_score(...)-then-join: on a
-    # stream the join would be a stateful stream-stream self-join (and
-    # in batch, a second scan)
-    base = (
-        docs.withColumn("quality_bp", quality_bp_expr())
-        .where(F.col("quality_bp") >= CLEAN_MIN_QUALITY_BP)
-        # the quality_repetition gate, same thresholds
-        .where((dup_bp <= DUP_WORD_MAX_BP) & (top_bp <= TOP_BIGRAM_MAX_BP))
-    )
-    scrubbed = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace(F.col("text"), _PII_EMAIL, "<EMAIL>"),
-            _PII_URL,
-            "<URL>",
-        ),
-        _PII_PHONE,
-        "<PHONE>",
-    )
-    toks = F.split(scrubbed, " ")
-    with_starts = base.select(
-        "doc_id",
-        "lang",
-        "quality_bp",
-        toks.alias("toks"),
-        F.explode(
-            F.sequence(
-                F.lit(0), F.greatest(F.size(toks) - 1, F.lit(0)), F.lit(CHUNK_S)
-            )
-        ).alias("start"),
-    )
-    chunk = F.slice("toks", F.col("start") + 1, CHUNK_W)
-    return with_starts.select(
-        "doc_id",
-        "lang",
-        "quality_bp",
-        (F.col("start") / CHUNK_S).cast("long").alias("chunk_id"),
-        F.size(chunk).cast("long").alias("n_tokens"),
-        F.array_join(chunk, " ").alias("chunk_text"),
+    return chunk_windows(
+        clean_gates(docs),
+        _pii_scrubbed_col(F.col("text")),
+        ["doc_id", "lang", "quality_bp"],
     )
 
 
@@ -144,20 +53,7 @@ def run_clean_stream(
 ) -> None:
     """AvailableNow runner: clean + chunk everything currently present,
     exactly-once, then stop."""
-    from pdf2ocr_spark.streaming.ingest import DOCUMENTS_SCHEMA
-
-    stream = (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(input_dir)
-    )
-    q = (
-        clean_transform(stream)
-        .writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    start_file_stream(
+        spark, DOCUMENTS_SCHEMA, clean_transform, input_dir, output_dir,
+        checkpoint_dir, max_files_per_trigger=4,
+    ).awaitTermination()

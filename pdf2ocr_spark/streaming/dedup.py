@@ -16,13 +16,15 @@ and a TTL for windowed dedup.
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator, Tuple
+from typing import Iterator, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from pdf2ocr_spark.streaming.ingest import DOCUMENTS_SCHEMA, start_file_stream
 
 DEDUP_OUT_SCHEMA = T.StructType(
     [
@@ -39,25 +41,40 @@ STATE_SCHEMA = T.StructType([T.StructField("keeper_doc_id", T.LongType())])
 def _dedup_fn(
     key: Tuple[str], pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
-    (text_hash,) = key
-    keeper = state.get[0] if state.exists else None
+    """One text-hash group of one micro-batch: every row comes back with
+    ``is_duplicate`` and ``keeper_doc_id``. The keeper is the first-seen
+    doc across batches (held in state) and the min doc_id within the
+    batch that first sees the hash — the batch exact_dedup's rule."""
     # drain ALL Arrow chunks of the group before choosing the keeper: a
-    # per-chunk choice would be chunk-order dependent and could diverge
-    # from batch exact_dedup's min(doc_id) when one micro-batch spans
-    # multiple chunks
-    doc_ids = sorted(
-        int(d) for pdf in pdfs for d in pdf["doc_id"]
-    )
-    out = []
-    for doc_id in doc_ids:
-        if keeper is None:
-            keeper = doc_id
-            out.append((text_hash, doc_id, False, doc_id))
-        else:
-            out.append((text_hash, doc_id, True, keeper))
+    # per-chunk choice would be chunk-order dependent when one
+    # micro-batch spans multiple chunks
+    pdf = pd.concat(list(pdfs), ignore_index=True)
+    pdf = pdf.sort_values("doc_id", kind="stable", ignore_index=True)
+    first_seen = not state.exists
+    keeper = int(pdf["doc_id"].iloc[0]) if first_seen else state.get[0]
     state.update((keeper,))
-    yield pd.DataFrame(
-        out, columns=["text_hash", "doc_id", "is_duplicate", "keeper_doc_id"]
+    pdf["is_duplicate"] = pdf.index > 0 if first_seen else True
+    pdf["keeper_doc_id"] = keeper
+    yield pdf
+
+
+def _dedup_decisions(keyed: DataFrame) -> DataFrame:
+    """``keyed`` (text_hash, doc_id, any passthrough columns) -> the same
+    rows plus is_duplicate and keeper_doc_id, exactly-once across
+    micro-batches via GroupState."""
+    out = T.StructType(
+        keyed.schema.fields
+        + [
+            T.StructField("is_duplicate", T.BooleanType()),
+            T.StructField("keeper_doc_id", T.LongType()),
+        ]
+    )
+    return keyed.groupBy("text_hash").applyInPandasWithState(
+        _dedup_fn,
+        outputStructType=out,
+        stateStructType=STATE_SCHEMA,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -67,61 +84,17 @@ def streaming_exact_dedup(stream: DataFrame) -> DataFrame:
     keyed = stream.select(
         F.md5("text").alias("text_hash"), F.col("doc_id").cast("long").alias("doc_id")
     )
-    return keyed.groupBy("text_hash").applyInPandasWithState(
-        _dedup_fn,
-        outputStructType=DEDUP_OUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _dedup_decisions(keyed).select(*DEDUP_OUT_SCHEMA.fieldNames())
 
 
 def run_dedup_stream(
     spark, input_dir: str, output_dir: str, checkpoint_dir: str
 ) -> None:
     """AvailableNow runner: process all files currently present, then stop."""
-    from pdf2ocr_spark.streaming.ingest import DOCUMENTS_SCHEMA
-
-    stream = (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(input_dir)
-    )
-    q = (
-        streaming_exact_dedup(stream)
-        .writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def _dedup_keep_fn(
-    key: Tuple[str], pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Pass-through variant for pipeline chaining: the first-seen doc of
-    each text-hash group is emitted with ALL its columns; later
-    duplicates vanish. Same keeper rule as _dedup_fn (min doc_id within
-    the draining batch, first-seen across batches)."""
-    (_text_hash,) = key
-    keeper = state.get[0] if state.exists else None
-    parts = [p for p in pdfs]
-    pdf = pd.concat(parts) if parts else pd.DataFrame()
-    cols = ["doc_id", "text", "lang", "source", "n_chars"]
-    if len(pdf) == 0:
-        yield pd.DataFrame([], columns=cols)
-        return
-    pdf = pdf.sort_values("doc_id")
-    if keeper is None:
-        first = pdf.iloc[[0]]
-        state.update((int(first["doc_id"].iloc[0]),))
-        yield first[cols]
-    else:
-        state.update((int(keeper),))
-        yield pd.DataFrame([], columns=cols)
+    start_file_stream(
+        spark, DOCUMENTS_SCHEMA, streaming_exact_dedup, input_dir, output_dir,
+        checkpoint_dir, max_files_per_trigger=4,
+    ).awaitTermination()
 
 
 def streaming_dedup_keep(stream: DataFrame) -> DataFrame:
@@ -130,13 +103,7 @@ def streaming_dedup_keep(stream: DataFrame) -> DataFrame:
     (streaming/pipeline_chain.py): dedup state drops cross-batch
     duplicates BEFORE the stateless clean/chunk stages, so a document
     re-ingested in a later file produces no chunks at all."""
-    from pdf2ocr_spark.streaming.ingest import DOCUMENTS_SCHEMA
-
-    keyed = stream.withColumn("text_hash", F.md5("text"))
-    return keyed.groupBy("text_hash").applyInPandasWithState(
-        _dedup_keep_fn,
-        outputStructType=DOCUMENTS_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    decided = _dedup_decisions(stream.withColumn("text_hash", F.md5("text")))
+    return decided.where(~F.col("is_duplicate")).select(
+        *DOCUMENTS_SCHEMA.fieldNames()
     )

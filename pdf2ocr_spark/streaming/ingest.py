@@ -1,4 +1,5 @@
-"""Incremental extraction via Structured Streaming.
+"""Incremental extraction via Structured Streaming, and the one file-stream
+runner every streaming operator in this subpackage starts its query with.
 
 The reference is a batch CLI (SURVEY.md §2.6: no streaming), but a
 web-scale ingest pipeline receives documents continuously. This module
@@ -24,10 +25,11 @@ tests and backfills.
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Callable, Optional, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
 
 from pdf2ocr_spark.kernel.emit import ALL_FORMATS
 from pdf2ocr_spark.operators.extract import documents_to_spans
@@ -43,6 +45,39 @@ DOCUMENTS_SCHEMA = T.StructType(
 )
 
 
+def start_file_stream(
+    spark: SparkSession,
+    schema: T.StructType,
+    transform: Callable[[DataFrame], DataFrame],
+    input_dir: str,
+    output_dir: str,
+    checkpoint_dir: str,
+    max_files_per_trigger: int,
+    available_now: bool = True,
+) -> StreamingQuery:
+    """Parquet files in ``input_dir`` (read with ``schema``, at most
+    ``max_files_per_trigger`` per micro-batch) -> ``transform`` -> an
+    append-mode parquet sink at ``output_dir``, exactly-once through
+    ``checkpoint_dir``. ``available_now`` drains what is present and
+    stops (Trigger.AvailableNow); otherwise the default trigger runs
+    until stopped."""
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", str(max_files_per_trigger))
+        .parquet(input_dir)
+    )
+    writer = (
+        transform(stream)
+        .writeStream.format("parquet")
+        .option("path", output_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def start_extract_stream(
     spark: SparkSession,
     input_dir: str,
@@ -54,21 +89,16 @@ def start_extract_stream(
     available_now: bool = False,
 ):
     """Start the extraction stream; returns the StreamingQuery."""
-    stream = (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("maxFilesPerTrigger", "8")
-        .parquet(input_dir)
+    return start_file_stream(
+        spark,
+        DOCUMENTS_SCHEMA,
+        lambda docs: documents_to_spans(docs, formats, lang, max_sentences),
+        input_dir,
+        output_dir,
+        checkpoint_dir,
+        max_files_per_trigger=8,
+        available_now=available_now,
     )
-    spans = documents_to_spans(stream, formats, lang, max_sentences)
-    writer = (
-        spans.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_extract_available_now(

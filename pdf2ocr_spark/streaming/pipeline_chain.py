@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from pdf2ocr_spark.streaming.clean import clean_transform
 from pdf2ocr_spark.streaming.dedup import streaming_dedup_keep
+from pdf2ocr_spark.streaming.ingest import DOCUMENTS_SCHEMA, start_file_stream
 
 
 def run_chained_stream(
@@ -41,24 +42,15 @@ def run_chained_stream(
     gate with the gram set closure-shipped per executor."""
     from pdf2ocr_spark.functions.decontam import overlap_gate_udf
     from pdf2ocr_spark.plans.queries import DECONTAM_N
-    from pdf2ocr_spark.streaming.ingest import DOCUMENTS_SCHEMA
 
-    stream = (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(input_dir)
-    )
-    deduped = streaming_dedup_keep(stream)
-    if bench_grams is not None:
-        gate = overlap_gate_udf(bench_grams, DECONTAM_N)
-        deduped = deduped.where(gate("text"))
-    q = (
-        clean_transform(deduped)
-        .writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    def transform(stream):
+        deduped = streaming_dedup_keep(stream)
+        if bench_grams is not None:
+            gate = overlap_gate_udf(bench_grams, DECONTAM_N)
+            deduped = deduped.where(gate("text"))
+        return clean_transform(deduped)
+
+    start_file_stream(
+        spark, DOCUMENTS_SCHEMA, transform, input_dir, output_dir,
+        checkpoint_dir, max_files_per_trigger=4,
+    ).awaitTermination()

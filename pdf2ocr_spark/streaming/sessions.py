@@ -44,6 +44,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from pdf2ocr_spark.streaming.ingest import start_file_stream
+
 #: must match plans/queries.py SESSION_GAP_MIN
 SESSION_GAP_US = 30 * 60 * 1_000_000
 
@@ -241,6 +243,20 @@ def streaming_sessionize(
     )
 
 
+#: the events table as the stream reads it (``ts`` as TIMESTAMP_NTZ: the
+#: session math stays timezone-free)
+EVENTS_SCHEMA = T.StructType(
+    [
+        T.StructField("event_id", T.LongType()),
+        T.StructField("ts", T.TimestampNTZType()),
+        T.StructField("user_id", T.LongType()),
+        T.StructField("event_type", T.StringType()),
+        T.StructField("value", T.DoubleType()),
+        T.StructField("props", T.StringType()),
+    ]
+)
+
+
 def run_sessions_stream(
     spark,
     input_dir: str,
@@ -251,30 +267,14 @@ def run_sessions_stream(
     max_files_per_trigger: int = 4,
 ) -> None:
     """AvailableNow runner: process all files currently present, stop."""
-    EVENTS_SCHEMA = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampNTZType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(input_dir)
-    )
-    q = (
-        streaming_sessionize(
-            stream, flush_after_gap=flush_after_gap, watermark=watermark
-        )
-        .writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    start_file_stream(
+        spark,
+        EVENTS_SCHEMA,
+        lambda events: streaming_sessionize(
+            events, flush_after_gap=flush_after_gap, watermark=watermark
+        ),
+        input_dir,
+        output_dir,
+        checkpoint_dir,
+        max_files_per_trigger=max_files_per_trigger,
+    ).awaitTermination()

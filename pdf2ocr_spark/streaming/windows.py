@@ -10,6 +10,9 @@ scale — state size is O(open windows x event_types), not O(events)).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import types as T
+
+from pdf2ocr_spark.streaming.ingest import start_file_stream
 
 
 def windowed_event_counts(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
@@ -31,34 +34,25 @@ def windowed_event_counts(stream: DataFrame, watermark: str = "1 hour") -> DataF
     )
 
 
+#: the events table as the stream reads it (``ts`` as TIMESTAMP: the
+#: watermark needs it)
+EVENTS_SCHEMA = T.StructType(
+    [
+        T.StructField("event_id", T.LongType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("user_id", T.LongType()),
+        T.StructField("event_type", T.StringType()),
+        T.StructField("value", T.DoubleType()),
+        T.StructField("props", T.StringType()),
+    ]
+)
+
+
 def run_windowed_stream(
     spark, input_dir: str, output_dir: str, checkpoint_dir: str
 ) -> None:
     """AvailableNow runner over a parquet file stream of events."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(input_dir)
-    )
-    q = (
-        windowed_event_counts(stream)
-        .writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    start_file_stream(
+        spark, EVENTS_SCHEMA, windowed_event_counts, input_dir, output_dir,
+        checkpoint_dir, max_files_per_trigger=4,
+    ).awaitTermination()
