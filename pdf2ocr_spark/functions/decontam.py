@@ -16,36 +16,17 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 
-def distinct_ngrams_udf(n: int):
-    """pandas_udf: array<string> tokens -> array<string> of the doc's
-    DISTINCT space-joined n-grams (first-occurrence order; empty when
-    the doc has fewer than n tokens)."""
-
-    @F.pandas_udf("array<string>")
-    def grams(tok_lists: pd.Series) -> pd.Series:
-        out = []
-        for t in tok_lists:
-            toks = list(t) if t is not None else []
-            if len(toks) < n:
-                out.append([])
-                continue
-            # dict.fromkeys = ordered distinct
-            out.append(
-                list(
-                    dict.fromkeys(
-                        " ".join(toks[i : i + n])
-                        for i in range(len(toks) - n + 1)
-                    )
-                )
-            )
-        return pd.Series(out)
-
-    return grams
+def _ngrams(toks, n: int):
+    """The space-joined n-token windows of ``toks``, in order (none when
+    there are fewer than n tokens)."""
+    for i in range(len(toks) - n + 1):
+        yield " ".join(toks[i : i + n])
 
 
 def counted_ngrams_udf(n: int):
-    """Like distinct_ngrams_udf, but each element carries the doc's
-    total distinct-gram count alongside the gram:
+    """pandas_udf: array<string> tokens -> the doc's DISTINCT n-grams
+    (first-occurrence order; empty when the doc has fewer than n tokens),
+    each carrying the doc's distinct-gram count alongside the gram:
     ``array<struct<g:string, n:int>>``. Referencing one UDF column from
     several operators (size() + explode()) makes Catalyst materialize
     an ArrowEvalPython node PER REFERENCE; packing the count into the
@@ -55,18 +36,9 @@ def counted_ngrams_udf(n: int):
     def grams(tok_lists: pd.Series) -> pd.Series:
         out = []
         for t in tok_lists:
-            toks = list(t) if t is not None else []
-            if len(toks) < n:
-                out.append([])
-                continue
-            gs = list(
-                dict.fromkeys(
-                    " ".join(toks[i : i + n])
-                    for i in range(len(toks) - n + 1)
-                )
-            )
-            k = len(gs)
-            out.append([{"g": g, "n": k} for g in gs])
+            # dict.fromkeys = ordered distinct
+            gs = list(dict.fromkeys(_ngrams(list(t) if t is not None else [], n)))
+            out.append([{"g": g, "n": len(gs)} for g in gs])
         return pd.Series(out)
 
     return grams
@@ -88,15 +60,7 @@ def overlap_gate_udf(bench_grams: frozenset, n: int):
         out = []
         for t in texts:
             toks = (t or "").split(" ")
-            if len(toks) < n:
-                out.append(True)
-                continue
-            out.append(
-                not any(
-                    " ".join(toks[i : i + n]) in bench_grams
-                    for i in range(len(toks) - n + 1)
-                )
-            )
+            out.append(not any(g in bench_grams for g in _ngrams(toks, n)))
         return pd.Series(out)
 
     return clean
@@ -112,9 +76,4 @@ def collect_bench_grams(docs, n: int, mod: int, prefix_toks: int) -> frozenset:
         .select(F.slice(F.split("text", " "), 1, prefix_toks).alias("t"))
         .collect()
     )
-    grams = set()
-    for r in rows:
-        toks = r["t"]
-        for i in range(max(len(toks) - n + 1, 0)):
-            grams.add(" ".join(toks[i : i + n]))
-    return frozenset(grams)
+    return frozenset(g for r in rows for g in _ngrams(r["t"], n))

@@ -33,6 +33,9 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+#: fixed-width, timezone-free timestamp text both engines print alike
+_TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
+
 
 def asof_join(
     left: DataFrame,
@@ -169,7 +172,6 @@ def sessionize_single_pass(events: DataFrame, gap_min: int = 30) -> DataFrame:
     from pyspark.sql.window import Window
 
     iv = F.expr(f"INTERVAL {gap_min} MINUTES")
-    fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     e = events.select("user_id", "event_id", "event_type", "value", "ts")
     prev = F.lag("ts").over(w)
@@ -179,8 +181,8 @@ def sessionize_single_pass(events: DataFrame, gap_min: int = 30) -> DataFrame:
         F.sum("is_new").over(w.rowsBetween(Window.unboundedPreceding, 0)),
     )
     return sess.groupBy("user_id", "session_no").agg(
-        F.date_format(F.min("ts"), fmt).alias("session_start"),
-        F.date_format(F.max("ts"), fmt).alias("session_end"),
+        F.date_format(F.min("ts"), _TS_FMT).alias("session_start"),
+        F.date_format(F.max("ts"), _TS_FMT).alias("session_end"),
         F.count("*").alias("n_events"),
         F.countDistinct("event_type").alias("n_event_types"),
         F.sum(
@@ -225,7 +227,6 @@ def sessionize_two_phase(
     from pyspark.sql.window import Window
 
     iv = F.expr(f"INTERVAL {gap_min} MINUTES")
-    fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 
     e = events.select("user_id", "event_id", "event_type", "value", "ts")
     ck = F.window("ts", chunk)["start"].alias("chunk")
@@ -263,8 +264,8 @@ def sessionize_two_phase(
         F.sum("is_new").over(w2.rowsBetween(Window.unboundedPreceding, 0)),
     )
     return merged.groupBy("user_id", "session_no").agg(
-        F.date_format(F.min("s"), fmt).alias("session_start"),
-        F.date_format(F.max("t"), fmt).alias("session_end"),
+        F.date_format(F.min("s"), _TS_FMT).alias("session_start"),
+        F.date_format(F.max("t"), _TS_FMT).alias("session_end"),
         F.sum("n").alias("n_events"),
         F.size(F.array_distinct(F.flatten(F.collect_list("types"))))
         .cast("long")

@@ -1,10 +1,9 @@
 """Oracle-checked named queries.
 
-Each entry pairs a Spark DataFrame builder (Catalyst-native, column
-expressions only — no Python UDFs) with a DuckDB ANSI-SQL oracle over the
-same parquet tables. Both sides implement the SAME declarative spec, so
-the driver's sf0.01 row-count/schema/value-hash comparison is a real
-correctness gate (see /root/repo/__spark_entry__.py).
+Each entry pairs a Spark DataFrame query with a DuckDB ANSI-SQL oracle
+over the same parquet tables. Both sides implement the SAME declarative
+spec, so the sf0.01 row-count/schema/value-hash comparison (see
+__spark_entry__.py) is a real correctness gate.
 
 The queries re-express the reference's text operators relationally
 (SURVEY.md §2.2/§2.4/§2.5, file:line cited per query) over the
@@ -19,6 +18,17 @@ fixed shared spec:
               line str(page_id+1) (line_no 99) — the relational stand-ins
               for the OCR channel artifacts the kernel pipeline handles.
 
+Most queries are Catalyst column expressions. Five are pure
+per-document functions — page_number_filter, line_predicates,
+heading_detect, boilerplate_strip and quality_repetition: every grouping
+key they have holds ``doc_id``, so each is row-local and runs as one
+Python function per document inside one ``mapInArrow`` stage
+(``_per_document``) above the scan's fan-out, with no shuffle. The line
+spec on the Spark side lives in ``_doc_lines``; the oracle states it
+relationally in ``_SQL_LINES_CTE``. Kernels that the dedup, similarity,
+decontamination and media queries call live in ``functions/`` and
+``operators/``.
+
 Dialect notes: patterns avoid lookarounds (DuckDB is RE2); DuckDB
 regexp_replace needs the 'g' flag to match Spark's global default;
 backreference is $1 (Spark) vs \\1 (DuckDB).
@@ -27,10 +37,17 @@ backreference is $1 (Spark) vs \\1 (DuckDB).
 from __future__ import annotations
 
 import os
+import re
+from collections import Counter
+from itertools import groupby
+from operator import itemgetter
 from typing import Callable, Dict
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from pdf2ocr_spark.functions.dedup import _fan_out
 from pdf2ocr_spark.functions.quality import (
@@ -66,83 +83,45 @@ def _no_push(cond: "F.Column") -> "F.Column":
     return cond | (F.monotonically_increasing_id() < F.lit(0))
 
 
-def _tokens(docs: DataFrame) -> DataFrame:
-    return docs.select(
-        "doc_id",
-        "source",
-        F.posexplode(F.split("text", " ")).alias("pos0", "word"),
-    )
+def _doc_lines(source: str, text: str):
+    """The shared line spec for one document, as ``(page_id, line_no,
+    line_text)`` rows — the ``all_lines`` relation of ``_SQL_LINES_CTE``.
+    Each page is ``PAGE_WORDS`` words of ``text.split(" ")`` (empty words
+    kept) and yields its rows in ``line_no`` order: the header ``(-1,
+    'Journal of <source>')``, the body lines ``0..9`` of ``LINE_WORDS``
+    words each, the footer ``(99, str(page_id + 1))``."""
+    words = text.split(" ")
+    header = "Journal of " + source
+    for p, start in enumerate(range(0, len(words), PAGE_WORDS)):
+        yield p, -1, header
+        end = min(start + PAGE_WORDS, len(words))
+        for ln, i in enumerate(range(start, end, LINE_WORDS)):
+            yield p, ln, " ".join(words[i : i + LINE_WORDS])
+        yield p, 99, str(p + 1)
 
 
-def _body_lines(docs: DataFrame) -> DataFrame:
-    """Derive the line relation with a NARROW plan: lines are built per-row
-    with transform(sequence(...)) + slice and then exploded — no
-    explode->groupBy shuffle (the first version shuffled every token; this
-    one shuffles nothing and the whole derivation fuses into the scan
-    stage under whole-stage codegen)."""
-    toks = F.split("text", " ")
-    n_lines = F.ceil(F.size(toks) / F.lit(LINE_WORDS)).cast("long")
-    lines_arr = F.transform(
-        F.sequence(F.lit(0), n_lines - 1),
-        lambda i: F.struct(
-            F.floor(i * LINE_WORDS / PAGE_WORDS).cast("long").alias("page_id"),
-            ((i * LINE_WORDS) % PAGE_WORDS / LINE_WORDS)
-            .cast("long")
-            .alias("line_no"),
-            F.array_join(
-                F.slice(toks, (i * LINE_WORDS + 1).cast("int"), LINE_WORDS), " "
-            ).alias("line_text"),
-        ),
-    )
-    return (
-        _fan_out(docs).select("doc_id", F.explode(lines_arr).alias("ln"))
-        .select("doc_id", "ln.page_id", "ln.line_no", "ln.line_text")
-    )
+def _per_document(
+    spark: SparkSession, sf_dir: str, ddl: str, fn: Callable[[str, str], tuple]
+) -> DataFrame:
+    """A row-local query: one ``ddl`` row ``(doc_id, *fn(source, text))``
+    per document (a null text reads as ``""``).
 
+    The narrow ``(doc_id, source, text)`` scan fans out, then one
+    ``mapInArrow`` loop calls ``fn`` for each row and builds each output
+    batch in ``ddl``'s Arrow schema — no shuffle, no pandas."""
+    schema = to_arrow_schema(StructType.fromDDL(ddl))
 
-def _all_lines(docs: DataFrame) -> DataFrame:
-    """Body lines + synthetic header/footer lines per page — ONE scan, one
-    explode: the header/footer structs are appended to the body-line array
-    per row before the explode (round 1 unioned three scans of the same
-    parquet; the single-generate form reads the input once and keeps the
-    whole derivation narrow)."""
-    toks = F.split("text", " ")
-    n_lines = F.ceil(F.size(toks) / F.lit(LINE_WORDS)).cast("long")
-    n_pages = F.ceil(F.size(toks) / F.lit(PAGE_WORDS)).cast("long")
-    body = F.transform(
-        F.sequence(F.lit(0), n_lines - 1),
-        lambda i: F.struct(
-            F.floor(i * LINE_WORDS / PAGE_WORDS).cast("long").alias("page_id"),
-            ((i * LINE_WORDS) % PAGE_WORDS / LINE_WORDS)
-            .cast("long")
-            .alias("line_no"),
-            F.array_join(
-                F.slice(toks, (i * LINE_WORDS + 1).cast("int"), LINE_WORDS), " "
-            ).alias("line_text"),
-        ),
-    )
-    edges = F.flatten(
-        F.transform(
-            F.sequence(F.lit(0), n_pages - 1),
-            lambda p: F.array(
-                F.struct(
-                    p.cast("long").alias("page_id"),
-                    F.lit(-1).cast("long").alias("line_no"),
-                    F.concat(F.lit("Journal of "), F.col("source")).alias(
-                        "line_text"
-                    ),
-                ),
-                F.struct(
-                    p.cast("long").alias("page_id"),
-                    F.lit(99).cast("long").alias("line_no"),
-                    (p + 1).cast("string").alias("line_text"),
-                ),
-            ),
-        )
-    )
-    return _fan_out(docs).select(
-        "doc_id", F.explode(F.concat(body, edges)).alias("ln")
-    ).select("doc_id", "ln.page_id", "ln.line_no", "ln.line_text")
+    def run(batches):
+        for batch in batches:
+            cols = [batch.column(c).to_pylist() for c in ("doc_id", "source", "text")]
+            rows = [(d, *fn(s, t or "")) for d, s, t in zip(*cols)]
+            out = list(zip(*rows)) or [()] * len(schema)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(out, schema)], schema=schema
+            )
+
+    docs = _documents(spark, sf_dir).select("doc_id", "source", "text")
+    return _fan_out(docs).mapInArrow(run, ddl)
 
 
 # DuckDB-side shared CTEs, textually identical spec
@@ -316,60 +295,24 @@ GROUP BY source, lang
 """
 
 
-def _doc_lines(text, source):
-    """The shared line spec as a per-document Python generator: body
-    lines (page_id, line_no 0..9, 2-word text) followed by each page's
-    header (-1, 'Journal of <source>') and footer (99, str(page+1)) —
-    exactly the relation _all_lines derives (used by the per-doc line
-    kernels below; counts are order-insensitive)."""
-    words = (text if text is not None else "").split(" ")
-    n_lines = (len(words) + 1) // 2
-    n_pages = (len(words) + 19) // 20
-    for i in range(n_lines):
-        yield i % 10, " ".join(words[2 * i : 2 * i + 2])
-    header = "Journal of " + source
-    for p in range(n_pages):
-        yield -1, header
-        yield 99, str(p + 1)
+_PAGE_NUMBER = re.compile(r"^\s*\d{1,4}\s*$")
 
 
-def _page_number_kernel(it):
-    import re
-
-    import pandas as pd
-
-    pat = re.compile(r"^\s*\d{1,4}\s*$")
-    for pdf in it:
-        doc_ids, n_lines, n_pn = [], [], []
-        for doc_id, source, text in zip(
-            pdf["doc_id"], pdf["source"], pdf["text"]
-        ):
-            n = 0
-            hits = 0
-            for _ln, lt in _doc_lines(text, source):
-                n += 1
-                if pat.match(lt):
-                    hits += 1
-            doc_ids.append(doc_id)
-            n_lines.append(n)
-            n_pn.append(hits)
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(doc_ids, dtype="int64"),
-                "n_lines": pd.Series(n_lines, dtype="int64"),
-                "n_pagenum_lines": pd.Series(n_pn, dtype="int64"),
-            }
-        )
+def _page_number_counts(source, text):
+    n = hits = 0
+    for _page, _ln, line in _doc_lines(source, text):
+        n += 1
+        hits += bool(_PAGE_NUMBER.match(line))
+    return n, hits
 
 
 def q_page_number_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Standalone page-number line filter (ref common.py:8,73). Pure
-    per-document counts — one zero-shuffle kernel over the fanned-out
-    scan (round 6; was explode + regex + groupBy over the 1.5e6-row line
-    relation)."""
-    docs = _fan_out(_documents(spark, sf_dir).select("doc_id", "source", "text"))
-    return docs.mapInPandas(
-        _page_number_kernel, "doc_id long, n_lines long, n_pagenum_lines long"
+    """Standalone page-number line filter (ref common.py:8,73): per
+    document, its line count and how many lines are a bare page number.
+    Every grouping key holds doc_id, so no shuffle is needed."""
+    return _per_document(
+        spark, sf_dir, "doc_id long, n_lines long, n_pagenum_lines long",
+        _page_number_counts,
     )
 
 
@@ -386,72 +329,36 @@ GROUP BY doc_id
 )
 
 
-def _line_predicates_kernel(it):
-    import re
+_SELF_HEADER = re.compile(r"^pdf2ocr\s*-\s*Page\s*\d+$")
+_BULLET = re.compile(r"^[•\-–—▪]")
+_ENUMERATED = re.compile(r"^[0-9][.)].")
 
-    import pandas as pd
 
-    p_header = re.compile(r"^pdf2ocr\s*-\s*Page\s*\d+$")
-    p_bullet = re.compile(r"^[•\-–—▪]")
-    p_enum = re.compile(r"^[0-9][.)].")
-    for pdf in it:
-        doc_ids, n_sh, n_li, n_lines = [], [], [], []
-        for doc_id, source, text in zip(
-            pdf["doc_id"], pdf["source"], pdf["text"]
-        ):
-            words = (text if text is not None else "").split(" ")
-            nl = (len(words) + 1) // 2
-            n_pages = (len(words) + 19) // 20
-            sh = 0
-            li = 0
-            for i in range(nl):
-                ln = i % 10
-                if ln == 1:
-                    page_id = (2 * i) // 20
-                    d = "pdf2ocr - Page " + str(page_id + 1)
-                elif ln == 2:
-                    d = "• " + " ".join(words[2 * i : 2 * i + 2])
-                else:
-                    d = " ".join(words[2 * i : 2 * i + 2])
-                if p_header.match(d):
-                    sh += 1
-                if p_bullet.match(d) or p_enum.match(d):
-                    li += 1
-            # headers/footers: 'Journal of …' matches neither predicate;
-            # footers are bare digits (no '.'/')' follower) — still run
-            # the predicates so the kernel states the same spec
-            header = "Journal of " + source
-            for p in range(n_pages):
-                for d in (header, str(p + 1)):
-                    if p_header.match(d):
-                        sh += 1
-                    if p_bullet.match(d) or p_enum.match(d):
-                        li += 1
-            doc_ids.append(doc_id)
-            n_sh.append(sh)
-            n_li.append(li)
-            n_lines.append(nl + 2 * n_pages)
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(doc_ids, dtype="int64"),
-                "n_self_header_lines": pd.Series(n_sh, dtype="int64"),
-                "n_list_item_lines": pd.Series(n_li, dtype="int64"),
-                "n_lines": pd.Series(n_lines, dtype="int64"),
-            }
-        )
+def _line_predicate_counts(source, text):
+    n = sh = li = 0
+    for page, ln, line in _doc_lines(source, text):
+        if ln == 1:
+            line = f"pdf2ocr - Page {page + 1}"
+        elif ln == 2:
+            line = "• " + line
+        n += 1
+        if _SELF_HEADER.match(line):
+            sh += 1
+        if _BULLET.match(line) or _ENUMERATED.match(line):
+            li += 1
+    return sh, li, n
 
 
 def q_line_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Self-header + list-item predicates over lines (ref common.py:9,73
     and common.py:80-84): the channel turns line 1 of each page into a
     'pdf2ocr - Page N' self-header and line 2 into a bullet item, then the
-    predicates count them back. Per-document counts — one zero-shuffle
-    kernel over the fanned-out scan (round 6)."""
-    docs = _fan_out(_documents(spark, sf_dir).select("doc_id", "source", "text"))
-    return docs.mapInPandas(
-        _line_predicates_kernel,
-        "doc_id long, n_self_header_lines long, n_list_item_lines long, "
-        "n_lines long",
+    predicates count them back. Every grouping key holds doc_id, so no
+    shuffle is needed."""
+    return _per_document(
+        spark, sf_dir,
+        "doc_id long, n_self_header_lines long, n_list_item_lines long, n_lines long",
+        _line_predicate_counts,
     )
 
 
@@ -478,44 +385,25 @@ GROUP BY doc_id
 )
 
 
-def _heading_kernel(it):
-    import re
+_DIGITS_ONLY = re.compile(r"^[0-9 ]*$")
 
-    import pandas as pd
 
-    p_digits = re.compile(r"^[0-9 ]*$")
-    for pdf in it:
-        doc_ids, n_h, n_lines = [], [], []
-        for doc_id, source, text in zip(
-            pdf["doc_id"], pdf["source"], pdf["text"]
-        ):
-            n = 0
-            hits = 0
-            for ln, lt in _doc_lines(text, source):
-                n += 1
-                lu = lt.upper() if ln == 0 else lt
-                if lu == lu.upper() and len(lu) > 3 and not p_digits.match(lu):
-                    hits += 1
-            doc_ids.append(doc_id)
-            n_h.append(hits)
-            n_lines.append(n)
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(doc_ids, dtype="int64"),
-                "n_heading_lines": pd.Series(n_h, dtype="int64"),
-                "n_lines": pd.Series(n_lines, dtype="int64"),
-            }
-        )
+def _heading_counts(source, text):
+    n = hits = 0
+    for _page, ln, line in _doc_lines(source, text):
+        up = line.upper() if ln == 0 else line
+        n += 1
+        hits += up == up.upper() and len(up) > 3 and not _DIGITS_ONLY.match(up)
+    return hits, n
 
 
 def q_heading_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heading predicate over lines (ref common.py:10-13,76-78): lines with
     line_no 0 are upper-cased by the channel, then detected ALL-CAPS.
-    Per-document counts — one zero-shuffle kernel over the fanned-out
-    scan (round 6)."""
-    docs = _fan_out(_documents(spark, sf_dir).select("doc_id", "source", "text"))
-    return docs.mapInPandas(
-        _heading_kernel, "doc_id long, n_heading_lines long, n_lines long"
+    Every grouping key holds doc_id, so no shuffle is needed."""
+    return _per_document(
+        spark, sf_dir, "doc_id long, n_heading_lines long, n_lines long",
+        _heading_counts,
     )
 
 
@@ -538,81 +426,32 @@ GROUP BY doc_id
 )
 
 
-def _boilerplate_kernel(it):
-    """Per-document boilerplate totals, whole computation fused into one
-    Arrow kernel (see q_boilerplate_strip). Implements exactly the shared
-    line spec: words = split(text, ' ') (empties kept), 2-word lines,
-    10-line pages, per-page header 'Journal of <source>' / footer
-    str(page_id+1), edge lines = first/last two by line_no within a page,
-    boiler = text hitting an edge slot on >= 60% of pages of a >= 3-page
-    doc (float compare, identical to the JVM double arithmetic)."""
-    import pandas as pd
-
-    for pdf in it:
-        out_doc, out_np, out_nb, out_nk = [], [], [], []
-        for doc_id, source, text in zip(
-            pdf["doc_id"], pdf["source"], pdf["text"]
-        ):
-            words = (text if text is not None else "").split(" ")
-            n_lines = (len(words) + 1) // 2
-            n_pages = (len(words) + 19) // 20
-            header = "Journal of " + source
-            occ: dict = {}
-            hits: dict = {}
-            for p in range(n_pages):
-                start = 10 * p
-                end = min(start + 10, n_lines)
-                occ[header] = occ.get(header, 0) + 1
-                footer = str(p + 1)
-                occ[footer] = occ.get(footer, 0) + 1
-                lines = [
-                    " ".join(words[2 * i : 2 * i + 2])
-                    for i in range(start, end)
-                ]
-                for lt in lines:
-                    occ[lt] = occ.get(lt, 0) + 1
-                for t in {header, footer, lines[0], lines[-1]}:
-                    hits[t] = hits.get(t, 0) + 1
-            n_boiler = 0
-            n_kept = 0
-            thresh = 0.6 * n_pages
-            for t, n in occ.items():
-                if n_pages >= 3 and hits.get(t, 0) >= thresh:
-                    n_boiler += 1
-                else:
-                    n_kept += n
-            out_doc.append(doc_id)
-            out_np.append(n_pages)
-            out_nb.append(n_boiler)
-            out_nk.append(n_kept)
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(out_doc, dtype="int64"),
-                "n_pages": pd.Series(out_np, dtype="int64"),
-                "n_boiler_lines": pd.Series(out_nb, dtype="int64"),
-                "n_kept_lines": pd.Series(out_nk, dtype="int64"),
-            }
-        )
+def _boilerplate_counts(source, text):
+    occurrences, hit_pages = Counter(), Counter()
+    n_pages = 0
+    for _page, rows in groupby(_doc_lines(source, text), key=itemgetter(0)):
+        lines = [line for _p, _ln, line in rows]  # in line_no order
+        occurrences.update(lines)
+        hit_pages.update({*lines[:2], *lines[-2:]})
+        n_pages += 1
+    # float 0.6 is just under 3/5, so 0.6 * n_pages never rounds above a
+    # whole threshold: this equals the oracle's exact DECIMAL compare
+    boiler = [t for t, h in hit_pages.items() if n_pages >= 3 and h >= 0.6 * n_pages]
+    n_kept = sum(occurrences.values()) - sum(occurrences[t] for t in boiler)
+    return n_pages, len(boiler), n_kept
 
 
 def q_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Repeated header/footer strip (ref common.py:116-150): edge lines
-    (first/last two by position) -> per-doc distinct-page frequency >=
-    60% with >= 3 pages. Returns per-doc totals (pages, boilerplate
-    lines, kept lines).
-
-    EVERY grouping key of this computation contains doc_id — it is a
-    pure per-document function — so the round-6 plan fuses the whole
-    thing into one mapInPandas kernel over the fanned-out scan: zero
-    shuffles, zero sorts, vs the round-5 relational form's 4 exchanges +
-    2 window sorts over the exploded line relation plus the interpreted
-    line-construction HOF (measured 7.6 s -> ~0.6 s at 10x; result
-    hashes identical at sf0.01/0.1/10x — the kernel implements the same
-    shared line spec the DuckDB oracle states relationally)."""
-    docs = _fan_out(_documents(spark, sf_dir).select("doc_id", "source", "text"))
-    return docs.mapInPandas(
-        _boilerplate_kernel,
+    """Repeated header/footer strip (ref common.py:116-150): a page's edge
+    lines are its first two and last two lines by line_no; a line text is
+    boilerplate when it is an edge line on >= 60% of the pages of a
+    document with >= 3 pages. Returns per-doc totals (pages, distinct
+    boilerplate texts, kept lines). Every grouping key of the spec holds
+    doc_id, so the whole computation is one per-document function."""
+    return _per_document(
+        spark, sf_dir,
         "doc_id long, n_pages long, n_boiler_lines long, n_kept_lines long",
+        _boilerplate_counts,
     )
 
 
@@ -701,15 +540,10 @@ FROM documents
 """
 
 
-def q_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-checked multimodal decode stage (operators/media.py): a
-    SQL-derivable synthetic ref set (one media ref per doc) is pushed
-    through the SAME payload-synthesis + mapInPandas decode stage as the
-    channel's media spans, and every output is serialized to scalars the
-    oracle can reproduce (feature bytes recovered via round(f*255))."""
-    from pdf2ocr_spark.operators.media import decode_media, synthesize_payloads
-
-    refs = (
+def _media_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The SQL-derivable synthetic media ref set: one
+    ``media://<doc_id>/0`` ref per document with doc_id < 200."""
+    return (
         _documents(spark, sf_dir)
         .where(F.col("doc_id") < 200)
         .select(
@@ -719,7 +553,26 @@ def q_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("media_ref"),
         )
     )
-    feats = decode_media(synthesize_payloads(refs), fake=True)
+
+
+#: ``_media_refs`` on the DuckDB side, as the head of a WITH clause
+_SQL_MEDIA_REFS = """
+WITH refs AS (
+    SELECT CAST(doc_id AS VARCHAR) AS doc_id,
+           'media://' || CAST(doc_id AS VARCHAR) || '/0' AS media_ref
+    FROM documents WHERE doc_id < 200
+),"""
+
+
+def q_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Oracle-checked multimodal decode stage (operators/media.py): a
+    SQL-derivable synthetic ref set (one media ref per doc) is pushed
+    through the SAME payload-synthesis + mapInPandas decode stage as the
+    channel's media spans, and every output is serialized to scalars the
+    oracle can reproduce (feature bytes recovered via round(f*255))."""
+    from pdf2ocr_spark.operators.media import decode_media, synthesize_payloads
+
+    feats = decode_media(synthesize_payloads(_media_refs(spark, sf_dir)), fake=True)
     return feats.select(
         "doc_id",
         "media_ref",
@@ -743,29 +596,14 @@ def q_media_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic md5('frame:<ref>:<k>') both engines compute."""
     from pdf2ocr_spark.operators.media import sample_frames, synthesize_payloads
 
-    refs = (
-        _documents(spark, sf_dir)
-        .where(F.col("doc_id") < 200)
-        .select(
-            F.col("doc_id").cast("string").alias("doc_id"),
-            F.concat(
-                F.lit("media://"), F.col("doc_id").cast("string"), F.lit("/0")
-            ).alias("media_ref"),
-        )
-    )
-    return sample_frames(synthesize_payloads(refs), fake=True)
+    return sample_frames(synthesize_payloads(_media_refs(spark, sf_dir)), fake=True)
 
 
 # mirrors operators/media.py sample_frames: video rows are
 # md5('media:'||ref)[0]%3 == 2; duration_ms = md5 byte 5 * 250
 # (substr(mh,9,2)); frame ts = (k+1)*duration // (N_FRAMES+1); frame
 # hash = first 32 bits of md5('frame:'||ref||':'||k).
-SQL_MEDIA_FRAMES = """
-WITH refs AS (
-    SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-           'media://' || CAST(doc_id AS VARCHAR) || '/0' AS media_ref
-    FROM documents WHERE doc_id < 200
-),
+SQL_MEDIA_FRAMES = _SQL_MEDIA_REFS + """
 seeded AS (
     SELECT doc_id, media_ref, md5('media:' || media_ref) AS mh FROM refs
 ),
@@ -795,12 +633,7 @@ FROM frames
 # 'payload:'||ref digest repeated n_bytes/16 times, feature bytes = the
 # first 16 bytes of md5(lowercase-hex(payload)); thumbs clamp to 32 except
 # audio (NULL -> '-').
-SQL_MEDIA_DECODE = """
-WITH refs AS (
-    SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-           'media://' || CAST(doc_id AS VARCHAR) || '/0' AS media_ref
-    FROM documents WHERE doc_id < 200
-),
+SQL_MEDIA_DECODE = _SQL_MEDIA_REFS + """
 seeded AS (
     SELECT doc_id, media_ref,
            md5('media:' || media_ref) AS mh,
@@ -1456,25 +1289,21 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per element (perf landmine #9 — measured 96.8 s at sf0.1 vs
     # ~1 s kernelized), and referencing the expression twice (size +
     # explode) re-inlines the whole tree via CollapseProject
-    from pdf2ocr_spark.functions.decontam import (
-        counted_ngrams_udf,
-        distinct_ngrams_udf,
-    )
+    from pdf2ocr_spark.functions.decontam import counted_ngrams_udf
 
-    grams = distinct_ngrams_udf(DECONTAM_N)
-    bench_toks = F.slice(toks, 1, DECONTAM_PREFIX_TOKS)
+    # counted grams: one explode yields gram AND per-doc total, so the
+    # kernel evaluates exactly once on the training side (size() +
+    # explode() of one UDF column would each get their own
+    # ArrowEvalPython node); the benchmark side keeps only the gram
+    grams = counted_ngrams_udf(DECONTAM_N)
     bench_grams = (
         docs.where(F.col("doc_id") % DECONTAM_MOD == 0)
-        .select(F.explode(grams(bench_toks)).alias("g"))
+        .select(F.explode(grams(F.slice(toks, 1, DECONTAM_PREFIX_TOKS))).alias("x"))
+        .select(F.col("x.g").alias("g"))
         .distinct()
     )
-    # counted variant: one explode yields gram AND per-doc total, so
-    # the kernel evaluates exactly once on the training side (size() +
-    # explode() of one UDF column would each get their own
-    # ArrowEvalPython node)
-    cg = counted_ngrams_udf(DECONTAM_N)
     train_grams = docs.select(
-        "doc_id", F.explode(cg(toks)).alias("x")
+        "doc_id", F.explode(grams(toks)).alias("x")
     ).select(
         "doc_id", F.col("x.n").alias("n_grams"), F.col("x.g").alias("g")
     )
@@ -1787,57 +1616,13 @@ WHERE sample_bucket < (CASE WHEN lang = 'en' THEN {_SAMPLE_RATES_BP["en"]}
 VOCAB_ZIPF_V = 4096
 
 
-def _enriched_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents with `text` replaced by its Zipf-enriched derivation
-    (see VOCAB_ZIPF_V). One narrow projection — a single-level
-    array transform fused with the scan; no shuffle, no Python."""
-    docs = _documents(spark, sf_dir)
-    two32 = F.lit(4294967296).cast("long")
-
-    def enrich(t, i):
-        h = F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        ":", F.col("doc_id").cast("string"), i.cast("string"), t
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long") + F.lit(1).cast("long")
-        # exact integer floor(2^32 / h) in pure codegen: subtracting the
-        # mod first makes the double division exact (a bare float divide
-        # can round across an integer boundary and diverge from the
-        # oracle's `//`)
-        rank = ((two32 - F.pmod(two32, h)) / h).cast("long")
-        return F.concat_ws(
-            "_", t, F.least(F.lit(VOCAB_ZIPF_V).cast("long"), rank).cast("string")
-        )
-
-    return docs.select(
-        "doc_id",
-        "lang",
-        "source",
-        "n_chars",
-        F.array_join(F.transform(F.split("text", " "), enrich), " ").alias("text"),
-    )
-
-
 def _enriched_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, token) stream of the Zipf-enriched derivation — the form
-    the vocabulary/tf-idf consumers actually need. Equivalent to
-    ``split(_enriched_documents().text, ' ')`` exploded, but ~10x faster
-    (guide §1.2/§4.1): ``_enriched_documents`` evaluates the per-token md5
-    inside an ``ArrayTransform`` lambda, which runs INTERPRETED per
-    element, and the projection sits BELOW the fan-out exchange, so the
-    whole enrichment ran serialized on the single scan split. Here the
-    raw docs fan out FIRST, ``posexplode`` flattens the token stream, and
-    the md5 + integer-rank math compiles to whole-stage codegen over flat
-    rows — bit-identical integer arithmetic, same (doc_id, pos, token)
-    md5 inputs, so every derived token string is unchanged."""
+    """(doc_id, token) stream of the Zipf-enriched derivation (see
+    VOCAB_ZIPF_V), the form the vocabulary/tf-idf consumers need. The
+    raw docs fan out first and ``posexplode`` flattens the token stream,
+    so the md5 + integer-rank math compiles to whole-stage codegen over
+    flat rows (inside an array ``transform`` lambda it would run
+    interpreted per element, on the single scan split)."""
     docs = _fan_out(_documents(spark, sf_dir).select("doc_id", "text"))
     tok = docs.select(
         "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "t")
@@ -1859,7 +1644,9 @@ def _enriched_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         16,
         10,
     ).cast("long") + F.lit(1).cast("long")
-    # exact integer floor(2^32 / h): see _enriched_documents
+    # exact integer floor(2^32 / h) in pure codegen: subtracting the mod
+    # first makes the double division exact (a bare float divide can round
+    # across an integer boundary and diverge from the oracle's `//`)
     rank = ((two32 - F.pmod(two32, h)) / h).cast("long")
     return tok.select(
         "doc_id",
@@ -1871,7 +1658,7 @@ def _enriched_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: DuckDB twin of _enriched_documents — WITH-clause body (no leading
+#: The enriched documents on the DuckDB side — WITH-clause body (no leading
 #: WITH) so consumers can prepend it to their own CTE chains. Multiple
 #: unnests in one SELECT zip positionally in DuckDB; string_agg ORDER BY
 #: pos rebuilds the text in token order.
@@ -2121,19 +1908,12 @@ FROM st
 """
 
 
-_TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-
-
-def q_events_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AS-OF join (functions/temporal.py): every click event joined to
-    the most recent view event at-or-before it by the same user — the
-    operator Spark lacks natively, composed as tag-union-window (ONE
-    shuffle+sort per key; a naive inequality join would plan
-    BroadcastNestedLoop). Oracle = DuckDB's NATIVE ASOF LEFT JOIN, so
-    the composition is checked against a first-class implementation.
-    Timestamps emit as fixed-width strings (timezone-free NTZ path);
-    the matched view's value as integer bp."""
-    from pdf2ocr_spark.functions.temporal import asof_join
+def _events_asof(spark: SparkSession, sf_dir: str, **asof_args) -> DataFrame:
+    """Every click event as-of joined to the view events of the same user
+    by ``asof_join`` with ``asof_args``. Timestamps emit as fixed-width
+    strings (timezone-free NTZ path); the matched view's value as integer
+    bp."""
+    from pdf2ocr_spark.functions.temporal import _TS_FMT, asof_join
 
     ev = _table(spark, sf_dir, "events")
     clicks = ev.where(F.col("event_type") == "click").select(
@@ -2153,7 +1933,7 @@ def q_events_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = asof_join(
         clicks, views, on="user_id", ts="ts",
-        right_payload=("ts", "view_id", "value"),
+        right_payload=("ts", "view_id", "value"), **asof_args,
     )
     return out.select(
         "click_id",
@@ -2165,6 +1945,16 @@ def q_events_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("view_value_bp"),
     )
+
+
+def q_events_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """AS-OF join (functions/temporal.py): every click event joined to
+    the most recent view event at-or-before it by the same user — the
+    operator Spark lacks natively, composed as tag-union-window (ONE
+    shuffle+sort per key; a naive inequality join would plan
+    BroadcastNestedLoop). Oracle = DuckDB's NATIVE ASOF LEFT JOIN, so
+    the composition is checked against a first-class implementation."""
+    return _events_asof(spark, sf_dir)
 
 
 def q_events_asof_fwd(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2173,34 +1963,7 @@ def q_events_asof_fwd(spark: SparkSession, sf_dir: str) -> DataFrame:
     e.g. time-to-conversion). Same tag-union-window composition with
     the frame reversed (first-following instead of last-preceding);
     oracle = DuckDB's native ASOF LEFT JOIN with the <= comparator."""
-    from pdf2ocr_spark.functions.temporal import asof_join
-
-    ev = _table(spark, sf_dir, "events")
-    clicks = ev.where(F.col("event_type") == "click").select(
-        "user_id", "ts", F.col("event_id").alias("click_id")
-    )
-    views = (
-        ev.where(F.col("event_type") == "view")
-        .groupBy("user_id", "ts")
-        .agg(
-            F.max("event_id").alias("view_id"),
-            F.max_by("value", "event_id").alias("value"),
-        )
-    )
-    out = asof_join(
-        clicks, views, on="user_id", ts="ts",
-        right_payload=("ts", "view_id", "value"), direction="forward",
-    )
-    return out.select(
-        "click_id",
-        "user_id",
-        F.date_format("ts", _TS_FMT).alias("click_ts"),
-        F.col("asof_view_id").alias("view_id"),
-        F.date_format("asof_ts", _TS_FMT).alias("view_ts"),
-        F.floor(F.col("asof_value") * 10000 + F.lit(0.5))
-        .cast("long")
-        .alias("view_value_bp"),
-    )
+    return _events_asof(spark, sf_dir, direction="forward")
 
 
 def q_events_asof_tol(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2210,35 +1973,7 @@ def q_events_asof_tol(spark: SparkSession, sf_dir: str) -> DataFrame:
     branches well-populated). Applied as a pure post-carry filter on the carried match ts
     — same one-shuffle-one-sort plan. Oracle = DuckDB native ASOF with
     the tolerance re-expressed as a CASE over the join result."""
-    from pdf2ocr_spark.functions.temporal import asof_join
-
-    ev = _table(spark, sf_dir, "events")
-    clicks = ev.where(F.col("event_type") == "click").select(
-        "user_id", "ts", F.col("event_id").alias("click_id")
-    )
-    views = (
-        ev.where(F.col("event_type") == "view")
-        .groupBy("user_id", "ts")
-        .agg(
-            F.max("event_id").alias("view_id"),
-            F.max_by("value", "event_id").alias("value"),
-        )
-    )
-    out = asof_join(
-        clicks, views, on="user_id", ts="ts",
-        right_payload=("ts", "view_id", "value"),
-        tolerance="12 hours",
-    )
-    return out.select(
-        "click_id",
-        "user_id",
-        F.date_format("ts", _TS_FMT).alias("click_ts"),
-        F.col("asof_view_id").alias("view_id"),
-        F.date_format("asof_ts", _TS_FMT).alias("view_ts"),
-        F.floor(F.col("asof_value") * 10000 + F.lit(0.5))
-        .cast("long")
-        .alias("view_value_bp"),
-    )
+    return _events_asof(spark, sf_dir, tolerance="12 hours")
 
 
 SQL_EVENTS_ASOF_TOL = """
@@ -2314,6 +2049,29 @@ ASOF LEFT JOIN views r ON l.user_id = r.user_id AND l.ts >= r.ts
 """
 
 
+def _events_range(
+    spark: SparkSession, sf_dir: str, join: Callable[..., DataFrame], **join_args
+) -> DataFrame:
+    """Per error event, the count of click events by the same user in the
+    trailing 5 minutes, computed by ``join`` (a functions/temporal.py
+    range-count join) with ``join_args``; the error ts emits as a
+    fixed-width string."""
+    from pdf2ocr_spark.functions.temporal import _TS_FMT
+
+    ev = _table(spark, sf_dir, "events")
+    errors = ev.where(F.col("event_type") == "error").select(
+        F.col("event_id").alias("error_id"), "user_id", "ts"
+    )
+    clicks = ev.where(F.col("event_type") == "click").select("user_id", "ts")
+    out = join(errors, clicks, on="user_id", ts="ts", width="5 minutes", **join_args)
+    return out.select(
+        "error_id",
+        "user_id",
+        F.date_format("ts", _TS_FMT).alias("error_ts"),
+        F.col("n_in_range").alias("n_clicks_5min"),
+    )
+
+
 def q_events_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded RANGE join (functions/temporal.py): per error event, the
     count of click events by the same user in the trailing 5 minutes.
@@ -2324,19 +2082,7 @@ def q_events_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     native inequality join."""
     from pdf2ocr_spark.functions.temporal import range_count_join
 
-    ev = _table(spark, sf_dir, "events")
-    errors = ev.where(F.col("event_type") == "error").select(
-        F.col("event_id").alias("error_id"), "user_id", "ts"
-    )
-    clicks = ev.where(F.col("event_type") == "click").select("user_id", "ts")
-    out = range_count_join(errors, clicks, on="user_id", ts="ts",
-                           width="5 minutes")
-    return out.select(
-        "error_id",
-        "user_id",
-        F.date_format("ts", _TS_FMT).alias("error_ts"),
-        F.col("n_in_range").alias("n_clicks_5min"),
-    )
+    return _events_range(spark, sf_dir, range_count_join)
 
 
 def q_events_range_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2353,20 +2099,7 @@ def q_events_range_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
     sized to its constructed hot band."""
     from pdf2ocr_spark.functions.temporal import range_count_join_hierarchical
 
-    ev = _table(spark, sf_dir, "events")
-    errors = ev.where(F.col("event_type") == "error").select(
-        F.col("event_id").alias("error_id"), "user_id", "ts"
-    )
-    clicks = ev.where(F.col("event_type") == "click").select("user_id", "ts")
-    out = range_count_join_hierarchical(
-        errors, clicks, on="user_id", ts="ts", width="5 minutes", split=4
-    )
-    return out.select(
-        "error_id",
-        "user_id",
-        F.date_format("ts", _TS_FMT).alias("error_ts"),
-        F.col("n_in_range").alias("n_clicks_5min"),
-    )
+    return _events_range(spark, sf_dir, range_count_join_hierarchical, split=4)
 
 
 def q_events_range_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2375,20 +2108,8 @@ def q_events_range_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast heavy-(key, band) set. Same oracle as events_range."""
     from pdf2ocr_spark.functions.temporal import range_count_join_adaptive
 
-    ev = _table(spark, sf_dir, "events")
-    errors = ev.where(F.col("event_type") == "error").select(
-        F.col("event_id").alias("error_id"), "user_id", "ts"
-    )
-    clicks = ev.where(F.col("event_type") == "click").select("user_id", "ts")
-    out = range_count_join_adaptive(
-        errors, clicks, on="user_id", ts="ts", width="5 minutes",
-        split=20, heavy_per_band=64,
-    )
-    return out.select(
-        "error_id",
-        "user_id",
-        F.date_format("ts", _TS_FMT).alias("error_ts"),
-        F.col("n_in_range").alias("n_clicks_5min"),
+    return _events_range(
+        spark, sf_dir, range_count_join_adaptive, split=20, heavy_per_band=64
     )
 
 
@@ -2556,40 +2277,13 @@ def q_events_sessionized_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sessionize_two_phase(ev, gap_min=SESSION_GAP_MIN, chunk="1 day")
 
 
-def _repetition_kernel(it):
-    """Per-document Gopher repetition gates (see q_quality_repetition):
-    dup-word and top-bigram mass in integer basis points, thresholds
-    shared with the streaming clean gate via functions/quality.py."""
-    from collections import Counter
-
-    import pandas as pd
-
-    for pdf in it:
-        doc_ids, nws, dups, tops, reps = [], [], [], [], []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            words = (text if text is not None else "").split(" ")
-            nw = len(words)
-            nd = len(set(words))
-            dup_bp = ((nw - nd) * 10000) // nw
-            if nw >= 2:
-                grams = Counter(zip(words, words[1:]))
-                top_bp = (max(grams.values()) * 10000) // (nw - 1)
-            else:
-                top_bp = 0
-            doc_ids.append(doc_id)
-            nws.append(nw)
-            dups.append(dup_bp)
-            tops.append(top_bp)
-            reps.append(dup_bp > DUP_WORD_MAX_BP or top_bp > TOP_BIGRAM_MAX_BP)
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(doc_ids, dtype="int64"),
-                "n_words": pd.Series(nws, dtype="int64"),
-                "dup_word_frac_bp": pd.Series(dups, dtype="int64"),
-                "top_bigram_frac_bp": pd.Series(tops, dtype="int64"),
-                "is_repetitive": pd.Series(reps, dtype="bool"),
-            }
-        )
+def _repetition_stats(source, text):
+    words = text.split(" ")
+    n = len(words)
+    dup_bp = ((n - len(set(words))) * 10000) // n
+    grams = Counter(zip(words, words[1:]))
+    top_bp = (max(grams.values()) * 10000) // (n - 1) if grams else 0
+    return n, dup_bp, top_bp, dup_bp > DUP_WORD_MAX_BP or top_bp > TOP_BIGRAM_MAX_BP
 
 
 def q_quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2602,20 +2296,16 @@ def q_quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
       n_bigrams (boilerplate-y texts concentrate mass in one bigram);
     - is_repetitive: either fraction over the Gopher-ish thresholds.
 
-    All ratios are INTEGER basis points (floor division) so both engines
-    agree bit-for-bit. Both statistics are pure PER-DOCUMENT functions,
-    so the round-6 plan computes them in one zero-shuffle mapInPandas
-    kernel over the fanned-out scan (the round-5 relational form ran two
-    explode -> two-level-aggregation pipelines — 4 hash aggregations +
-    3 exchanges over the exploded token/bigram relations — for
-    quantities derivable row-locally; measured 2.8 s -> ~0.6 s at 10x,
-    hashes identical). Integer arithmetic is Python int floor division,
-    exactly the oracle's // semantics."""
-    docs = _fan_out(_documents(spark, sf_dir).select("doc_id", "text"))
-    return docs.mapInPandas(
-        _repetition_kernel,
+    All ratios are INTEGER basis points (Python int floor division,
+    exactly the oracle's //) so both engines agree bit-for-bit. Both
+    statistics are per-document, so no shuffle is needed. Kept apart
+    from ``clean_gates`` on purpose: the streaming clean tests use it as
+    the independent reference for those gates."""
+    return _per_document(
+        spark, sf_dir,
         "doc_id long, n_words long, dup_word_frac_bp long, "
         "top_bigram_frac_bp long, is_repetitive boolean",
+        _repetition_stats,
     )
 
 

@@ -1,7 +1,10 @@
 """One definition each: the package starts every file stream through one
 runner, keeps one clean-gate / chunk-window / PII-scrub / dedup-state /
 fan-out definition, and corpus_clean's gate filters stay above its
-fan-out exchange."""
+fan-out exchange. In the query layer: one line spec, one per-document
+batch loop (no ``mapInPandas`` in plans/queries.py), one as-of join
+call, one n-gram window, and none of the Catalyst line helpers the
+per-document kernel replaced."""
 
 import os
 import re
@@ -40,6 +43,14 @@ def test_one_definition_each():
     assert len(re.findall(r"state: GroupState", src["streaming/dedup.py"])) == 1
     assert _count(r"def _fan_out\b", src) == 1
     assert _count(r"_fan_out_vecs", src) == 0
+    # one line spec, one per-document loop, one as-of join call
+    assert _count(r'"Journal of "', src) == 1
+    assert src["plans/queries.py"].count("mapInPandas(") == 0
+    assert src["plans/queries.py"].count("asof_join(") == 1
+    dead = r"def (?:_body_lines|_all_lines|_tokens|_enriched_documents)\b"
+    assert _count(dead, src) == 0
+    # one n-gram window
+    assert src["functions/decontam.py"].count("toks[i : i + n]") == 1
 
 
 def test_corpus_clean_gates_sit_above_the_fan_out(spark, sf_dir):
