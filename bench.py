@@ -324,7 +324,7 @@ def skew_spread(tile: int) -> dict:
         LINEAGE_JSON_SCHEMA,
     )
     from pdf2ocr_spark.operators.extract import extraction_kernel
-    from pdf2ocr_spark.pipeline import stripe_key
+    from pdf2ocr_spark.pipeline import stripe_column, stripe_key
 
     cache = materialize_corpus(tile)
     n_parts = CPUS * 4
@@ -333,11 +333,13 @@ def skew_spread(tile: int) -> dict:
         docs = spark.read.parquet(cache).withColumn(
             "part_id", stripe_key(n_parts)
         )
+        # one task per part_id: the stripe column sends part_id p to
+        # shuffle partition p
         out = (
-            docs.repartition(n_parts, "part_id")
+            docs.repartition(n_parts, stripe_column())
             .select("doc_id", "spans", "part_id")
             .mapInArrow(
-                extraction_kernel(("text", "markdown"), "eng", None, lineage=True),
+                extraction_kernel(("text", "markdown"), "eng", None, lineage=n_parts),
                 schema=CHECKPOINT_OUT_SCHEMA,
             )
         )

@@ -100,15 +100,12 @@ def main() -> None:
     # (Amdahl fraction that caps scaling; same move as pipeline.run_pipeline)
     documents = load_documents(spark, args.sf_dir).repartition(args.partitions)
     documents = tile_documents(documents, args.tile)
-    # the job's ONLY shuffle: ~100-byte text rows, partitioned by
-    # stripe_key (a hash of doc_id, the same map on every run, so resume
-    # skips the right documents); channel+extract then run as ONE fused
-    # Python stage (run_checkpointed fused_channel) so the nested span
-    # arrays are never exchanged — at 10^12 docs the nested relation is
-    # the one you cannot afford to shuffle
-    small = documents.withColumn(
-        "part_id", stripe_key(args.partitions)
-    ).repartition(args.partitions, "part_id")
+    # part_id is stripe_key, a hash of doc_id: the same map on every run,
+    # so resume skips the right documents. run_checkpointed shuffles these
+    # ~100-byte text rows and runs channel+extract as ONE fused Python
+    # stage, so the nested span arrays are never exchanged — at 10^12 docs
+    # the nested relation is the one you cannot afford to shuffle
+    small = documents.withColumn("part_id", stripe_key(args.partitions))
     res = run_checkpointed(
         spark,
         small,
@@ -128,8 +125,8 @@ def main() -> None:
         from pdf2ocr_spark.operators.ocr import ocr_recover_stats
 
         # the raster stage consumes the nested docs relation; derive it
-        # from the already-partitioned small rows (this opt-in stage is
-        # the only consumer — the fused extract path never materializes it)
+        # from the small rows (this opt-in stage is the only consumer —
+        # the fused extract path never materializes it)
         st = ocr_recover_stats(
             documents_to_docs(small),
             max_pages_per_doc=args.ocr_max_pages,

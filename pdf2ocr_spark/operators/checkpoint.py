@@ -6,7 +6,8 @@ This engine checkpoints at partition granularity (north rule):
 
 - every document gets a STABLE partition id (``part_id``) from
   ``pipeline.stripe_key`` — deterministic across runs, cluster sizes and
-  input shapes, so a resume sees the identical doc->partition map;
+  input shapes, so a resume sees the identical doc->partition map; the
+  kernel runs one task per slot, each over whole part_ids;
 - the extraction kernel (``operators.extract.extraction_kernel``) runs in
   lineage mode and emits, per Spark task, one sentinel '_lineage' row per
   part_id with real in-kernel metrics (doc/page/span counts, wall time,
@@ -38,6 +39,7 @@ from pdf2ocr_spark.operators.extract import (
     LINEAGE_KIND,
     PART_MAP,
     extraction_kernel,
+    stripe_column,
     stripe_key,
 )
 
@@ -61,30 +63,29 @@ LINEAGE_JSON_SCHEMA = T.StructType(
         T.StructField("docs_per_sec", T.DoubleType()),
         T.StructField("status", T.StringType()),
         T.StructField("errors", T.ArrayType(T.StringType())),
-        # which doc->partition map produced this partition (PART_MAP).
-        # Resume refuses any other map (older engines wrote 'nested' or
-        # 'fused'): another map puts DIFFERENT documents in the same
-        # part_id, so skipping a "done" partition would skip the wrong
-        # documents
+        # which doc->partition map produced this partition (PART_MAP),
+        # and its partition count n. Resume refuses any other map or n
+        # (older engines wrote 'nested', 'fused' or 'xxhash64(doc_id)'):
+        # another map puts DIFFERENT documents in the same part_id, so
+        # skipping a "done" partition would skip the wrong documents
         T.StructField("part_mode", T.StringType()),
+        T.StructField("partitions", T.LongType()),
     ]
 )
 
 
-def _completed_partitions(
-    spark: SparkSession, output_dir: str
-) -> tuple[set[int], set[Optional[str]]]:
-    """(done part_ids, partition maps recorded in their lineage)."""
+def _completed_partitions(spark: SparkSession, output_dir: str) -> tuple[set, set]:
+    """(done part_ids, (part_mode, partitions) pairs in their lineage)."""
     try:
         lin = read_lineage(spark, output_dir)
     except Exception:
         return set(), set()
     rows = (
         lin.where(F.col("status") == "success")
-        .select("part_id", "part_mode")
+        .select("part_id", "part_mode", "partitions")
         .collect()
     )
-    return {r["part_id"] for r in rows}, {r["part_mode"] for r in rows}
+    return {r.part_id for r in rows}, {(r.part_mode, r.partitions) for r in rows}
 
 
 def run_checkpointed(
@@ -100,14 +101,18 @@ def run_checkpointed(
 ) -> dict:
     """Execute the extraction job with per-partition checkpointing.
 
-    Default mode consumes the nested ``docs(doc_id, spans)`` relation and
-    shuffles it by ``pipeline.stripe_key``. ``fused_channel=True`` consumes
-    the SMALL pre-channel relation ``(doc_id, text, source, part_id)``
-    instead and runs channel+extract in one Python pass: the caller
-    computes part_id on the text rows (``pipeline.stripe_key``) and
-    repartitions the cheap side, so NO nested data is ever shuffled —
-    the scale-critical layout for the spark-submit job. Both modes map a
-    document to the same part_id, so either can resume the other's output.
+    ``num_partitions`` is the resume granularity (part_ids, partition
+    directories, lineage rows); the kernel runs ``min(num_partitions,
+    slots)`` tasks over whole part_ids, as a Python task's fixed cost does
+    not shrink with its work. Default mode consumes the nested
+    ``docs(doc_id, spans)`` relation and tags it with
+    ``pipeline.stripe_key``. ``fused_channel=True`` consumes the SMALL
+    pre-channel relation ``(doc_id, text, source, part_id)`` instead and
+    runs channel+extract in one Python pass: the caller computes part_id
+    on the text rows (``pipeline.stripe_key``), so NO nested data is ever
+    shuffled — the scale-critical layout for the spark-submit job. Both
+    modes run the same stripe shuffle and map a document to the same
+    part_id, so either can resume the other's output.
 
     Returns a summary dict: partitions planned/skipped/processed.
     """
@@ -120,17 +125,17 @@ def run_checkpointed(
                 "column (pipeline.stripe_key) so resume sees the same "
                 "doc -> partition mapping on every run"
             )
-        tagged = docs
     else:
-        tagged = docs.withColumn("part_id", stripe_key(num_partitions))
+        docs = docs.withColumn("part_id", stripe_key(num_partitions))
+    # part_id p -> shuffle partition p; the optimizer collapses a caller's
+    # own repartition(n, "part_id") right below into this one
+    tagged = docs.repartition(num_partitions, stripe_column())
 
     if not resume:
-        # a fresh (non-resume) run must not inherit stale state: dynamic
-        # partition overwrite preserves partitions this run never writes,
-        # which would both leak old spans into read_spans() and inflate the
-        # processed count (stale lineage rows read back as "present");
-        # local-FS delete here — an object-store deployment would drop the
-        # table / prefix through its catalog instead
+        # a fresh run must not inherit stale state: dynamic overwrite keeps
+        # partitions this run never writes (old spans, and stale lineage
+        # read back as "present"). Local-FS delete; an object store would
+        # drop the table / prefix through its catalog instead
         import shutil
 
         shutil.rmtree(os.path.join(output_dir, "combined"), ignore_errors=True)
@@ -138,27 +143,27 @@ def run_checkpointed(
     done, done_maps = (
         _completed_partitions(spark, output_dir) if resume else (set(), set())
     )
-    if done and done_maps != {PART_MAP}:
-        # lineage that records no map (written before part_mode existed)
-        # or another map ('nested'/'fused' from older engines) may hold
+    this_map = (PART_MAP, num_partitions)
+    if done and done_maps != {this_map}:
+        # lineage that records no map (written before part_mode existed),
+        # another map (older engines) or another num_partitions may hold
         # DIFFERENT documents under the same part_id, so skipping its
         # "done" partitions could drop documents this map assigns there.
         # Refuse instead of silently dropping documents.
         raise ValueError(
             f"output_dir {output_dir!r} was written in partitioning mode(s) "
-            f"{sorted(map(str, done_maps))} but this run uses {PART_MAP!r}; "
-            "resuming would apply a different doc->partition map. "
-            "Pass resume=False to start over."
+            f"{sorted(map(str, done_maps))} but this run uses {this_map}; "
+            "resuming would apply a different doc->partition map (another "
+            "map or num_partitions). Pass resume=False to start over."
         )
     if done:
         tagged = tagged.where(~F.col("part_id").isin(list(done)))
 
     planned = num_partitions - len(done)
     # no isEmpty probe when partitions remain: it would cost the same pass
-    # over the input's map side as the write itself. A remainder holding
-    # no documents (only never-seen partitions left) makes the write below
-    # a no-op, since dynamic overwrite replaces only the partitions it
-    # writes.
+    # over the input's map side as the write. A remainder holding no
+    # documents (only never-seen partitions left) makes the write below a
+    # no-op, since dynamic overwrite replaces only the partitions it writes.
     if planned <= 0:
         return {"partitions": num_partitions, "skipped": len(done), "processed": 0}
     t_resume = time.monotonic() - t_resume0
@@ -167,18 +172,16 @@ def run_checkpointed(
     # write; spans and lineage are views over the combined relation, so a
     # resumed/re-run partition atomically replaces both its spans and its
     # lineage row together (no spans-written-but-lineage-missing window).
-    # In fused mode the caller already repartitioned the small rows by
-    # part_id — repeating it here would put a second (elided or worse,
-    # real) exchange in the plan.
-    if fused_channel:
-        rows = tagged.select("doc_id", "text", "source", "part_id")
-    else:
-        rows = tagged.repartition(num_partitions, "part_id").select(
-            "doc_id", "spans", "part_id"
+    # One kernel task per slot over a contiguous run of whole shuffle
+    # partitions, so each part_id still lands in one task and one file.
+    data = ["text", "source"] if fused_channel else ["spans"]
+    out = (
+        tagged.select("doc_id", *data, "part_id")
+        .coalesce(min(num_partitions, spark.sparkContext.defaultParallelism))
+        .mapInArrow(
+            extraction_kernel(formats, lang, max_sentences, lineage=num_partitions),
+            schema=CHECKPOINT_OUT_SCHEMA,
         )
-    out = rows.mapInArrow(
-        extraction_kernel(formats, lang, max_sentences, lineage=True),
-        schema=CHECKPOINT_OUT_SCHEMA,
     )
     t_write0 = time.monotonic()
     out.write.mode("overwrite").partitionBy("part_id").parquet(
@@ -186,17 +189,13 @@ def run_checkpointed(
     )
     t_write = time.monotonic() - t_write0
 
-    # partitions that received ZERO documents emit no kernel sentinel (the
-    # kernel never saw them), so `planned` is only an upper bound — count
-    # processed from the lineage rows actually present after the write
-    # (done-partitions keep their old rows under dynamic overwrite, so the
-    # difference is exactly this run's work). A never-seen partition stays
-    # unmarked and is re-planned on resume, which is a no-op (zero rows);
-    # marking it done instead would wrongly skip its documents when a
-    # resume is fed input the crashed run never read. The read-back scans
-    # one lineage row per (task, partition) pair, one per partition when
-    # the input is partitioned by part_id; the set drops repeats, so no
-    # distinct (and its shuffle) is needed.
+    # a partition that got ZERO documents emits no sentinel, so `planned`
+    # is only an upper bound: count processed from the lineage rows present
+    # after the write (done partitions keep their rows under dynamic
+    # overwrite). A never-seen partition stays unmarked and is re-planned
+    # on resume, a no-op; marking it done would skip its documents when a
+    # resume reads input the crashed run never did. The read-back scans
+    # one lineage row per partition, so no distinct (or shuffle) is needed.
     t_verify0 = time.monotonic()
     present = {
         r["part_id"]

@@ -38,25 +38,29 @@ from pdf2ocr_spark.schema import SPANS_OUT_SCHEMA
 #: ``kind`` of the one lineage sentinel row per part_id in lineage mode
 LINEAGE_KIND = "_lineage"
 
-#: the doc -> part_id map, as recorded in lineage ``part_mode``: resume
-#: skips a "done" partition only when it was written under this map
-PART_MAP = "xxhash64(doc_id)"
+#: the doc -> part_id map, recorded in lineage ``part_mode`` next to its
+#: ``partitions`` n: resume skips a "done" partition only under both
+PART_MAP = "pmod(hash(cast(doc_id as string)), n)"
 
 _OUT_NAMES = ["doc_id", "kind", "text", "media_ref", "offset"]
 
 
+def stripe_column():
+    """The stripe shuffle's key: ``repartition(n, stripe_column())`` puts
+    each document in shuffle partition ``stripe_key(n)``."""
+    return F.col("doc_id").cast("string")
+
+
 def stripe_key(num_partitions: int):
-    """The doc -> partition key, ``pmod(xxhash64(cast(doc_id as string)), n)``.
+    """The doc -> partition key, ``pmod(hash(cast(doc_id as string)), n)``.
 
     Needs only ``doc_id``, so it is the same on the small documents
     relation (int64 ids) and the nested docs relation (string ids): every
     mode and every run maps a document to the same ``part_id``, which the
     checkpoint resume contract relies on. Hashing alone balances the
-    skewed corpus: a heavy document lands in a partition independently of
-    every other heavy one."""
-    return F.pmod(
-        F.xxhash64(F.col("doc_id").cast("string")), F.lit(num_partitions)
-    ).cast("int")
+    skewed corpus. ``hash`` is the hash partitioner's own Murmur3, so
+    part_id p is shuffle partition p (re-hashing part_id would not be)."""
+    return F.pmod(F.hash(stripe_column()), F.lit(num_partitions))
 
 
 def _pages_reader(batch):
@@ -111,23 +115,23 @@ def extraction_kernel(
     formats: Sequence[str],
     lang: str,
     max_sentences: Optional[int],
-    lineage: bool = False,
+    lineage: int = 0,
 ):
     """The ``mapInArrow`` function every extraction path runs.
 
     Input batches hold ``(doc_id, spans)`` or ``(doc_id, text, source)``,
     plus ``part_id`` in lineage mode; output is ``SPANS_OUT_SCHEMA`` rows.
     A span with a null ``offset`` has no reading order, so its document
-    raises ``ValueError``. In lineage mode the output also carries
-    ``part_id``; each document is timed and its errors are isolated
-    (reference-style per-file try/except, pdf.py:743-746) into the
-    partition's lineage, and after the last batch one ``LINEAGE_KIND``
-    sentinel per ``part_id`` carries the partition's metrics as JSON."""
+    raises ``ValueError``. ``lineage=n`` (n > 0) is lineage mode for n
+    partitions: the output also carries ``part_id``; each document is
+    timed and its errors are isolated (reference-style per-file
+    try/except, pdf.py:743-746) into the partition's lineage, and after
+    the last batch one ``LINEAGE_KIND`` sentinel per ``part_id`` carries
+    the partition's metrics as JSON."""
     fmts = tuple(formats)
 
     def run(batches):
-        # one Spark task can carry several part_id values (value-hash
-        # collisions in repartition), so metrics are bucketed per part_id
+        # a checkpoint task holds several whole part_ids (coalesce): bucket per part_id
         stats: dict[int, dict] = {}
         for batch in batches:
             doc_ids, pages_of = _pages_reader(batch)
@@ -159,7 +163,7 @@ def extraction_kernel(
             yield _record_batch(out, out_pids if lineage else None)
         if stats:
             sentinels = [
-                (None, LINEAGE_KIND, _lineage_json(st), None, 0)
+                (None, LINEAGE_KIND, _lineage_json(st, lineage), None, 0)
                 for _, st in sorted(stats.items())
             ]
             yield _record_batch(sentinels, sorted(stats))
@@ -167,7 +171,7 @@ def extraction_kernel(
     return run
 
 
-def _lineage_json(st: dict) -> str:
+def _lineage_json(st: dict, num_partitions: int) -> str:
     return json.dumps(
         {
             "doc_count": st["docs"],
@@ -180,6 +184,7 @@ def _lineage_json(st: dict) -> str:
             "status": "success",
             "errors": st["errors"],
             "part_mode": PART_MAP,
+            "partitions": num_partitions,
         }
     )
 

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pdf2ocr_spark.kernel.emit import ALL_FORMATS
 from pdf2ocr_spark.operators.docgen import documents_to_docs
-from pdf2ocr_spark.operators.extract import documents_to_spans, stripe_key
+from pdf2ocr_spark.operators.extract import documents_to_spans, stripe_column, stripe_key
 
 
 def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -47,12 +47,12 @@ def load_docs_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def stripe_documents(documents: DataFrame, num_partitions: int) -> DataFrame:
-    """``stripe_key`` repartition of the SMALL documents relation, before
-    span expansion — the scale-critical move: the shuffle moves ~100-byte
-    rows, not the expanded nested span arrays, and the downstream
-    docgen+extract stages then run fused with no further shuffle.
-    """
-    return documents.repartition(num_partitions, stripe_key(num_partitions))
+    """``stripe_key`` repartition (document -> partition ``stripe_key(n)``)
+    of the SMALL documents relation, before span expansion — the
+    scale-critical move: the shuffle moves ~100-byte rows, not the
+    expanded nested span arrays, and the downstream docgen+extract stages
+    then run fused with no further shuffle."""
+    return documents.repartition(num_partitions, stripe_column())
 
 
 def run_pipeline(
@@ -73,16 +73,12 @@ def run_pipeline(
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism * 2
     documents = load_documents(spark, sf_dir)
-    # a single small parquet file arrives as ONE input split; everything
-    # downstream of the scan (tile explode + the map side of the stripe
-    # shuffle) would run in one task — a serial fraction that destroys
-    # scaling. Fan the small relation out first (tiny shuffle), THEN
-    # expand: each subsequent stage is fully parallel.
+    # a single small parquet file arrives as ONE input split, so the tile
+    # explode and the stripe shuffle's map side would run in one task: fan
+    # the small relation out first (tiny shuffle), THEN expand.
     documents = documents.repartition(num_partitions)
     striped = stripe_documents(tile_documents(documents, tile), num_partitions)
-    # fused channel+extract: one Python worker pass, no nested-Arrow
-    # intermediate (the docs relation is still available separately via
-    # load_docs_corpus for operators that consume it)
+    # fused channel+extract: one Python pass, no nested-Arrow intermediate
     return documents_to_spans(
         striped, formats=formats, lang=lang, max_sentences=max_sentences
     )
