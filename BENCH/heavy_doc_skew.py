@@ -1,26 +1,23 @@
 #!/usr/bin/env python
-"""Heavy-document straggler evidence for the EXPLODED (page-parallel) path.
+"""Heavy-document straggler evidence for the one extraction path.
 
-Round-3 verdict #7: the skew section of the ledger proves balance for
-the fused per-doc path; the exploded path (operators/exploded.py —
-page-level parallelism for monster documents) had correctness tests but
-no bench row. This harness builds a corpus with a handful of 1,000+-page
-documents plus a normal background population, runs
-``extract_spans_exploded`` over it, and reads PER-TASK durations from
-Spark's own REST status API (the UI's /api/v1 taskSummary endpoint) for
-the heaviest stages — the direct measurement of whether a monster
-document straggles a stage.
+Builds a corpus with a handful of 1,000+-page documents plus a normal
+background population, runs ``extract_spans_arrow`` (the fused
+per-document kernel) over ``corpus.repartition(n, stripe_column())``,
+and reads PER-TASK durations from Spark's own REST status API (the UI's
+/api/v1 taskSummary endpoint) for the heaviest stages: the direct
+measurement of how far a monster document straggles a stage.
 
-Contrast measured here: through the FUSED per-doc path one 1,000-page
-document is one kernel call in one task — the stage cannot finish before
-that single task does. Through the exploded path the same document is
-~1,000 independent page rows spread by ``repartition(doc_id, offset)``,
-so task durations should be tightly clustered (spread = p100/p75 of the
-dominant stage's task time ~ 1, not pages_heavy/pages_mean).
+The paragraph FSM is sequential per document, so one monster document
+is one kernel call in one task, and the stage cannot finish before that
+task does. The same background population without the monster
+documents is the control: what the monsters ADD to the wall and to the
+dominant stage's slowest task is the heavy-document cost.
 
-Usage: python BENCH/exploded_skew.py   (prints one JSON line)
-Env:   EXPLODED_CPUS (32), EXPLODED_HEAVY (8 monster docs),
-       EXPLODED_PAGES (1000 pages per monster), EXPLODED_NORMAL (2000).
+Usage: python BENCH/heavy_doc_skew.py   (prints one JSON line)
+Env:   SPARK_GRAFT_CPUS (the cores this process may use), HEAVY_DOCS
+       (8 monster docs), HEAVY_PAGES (1000 pages per monster),
+       HEAVY_NORMAL (2000 background docs), HEAVY_FORMATS (text,html).
 """
 
 from __future__ import annotations
@@ -33,19 +30,16 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-CPUS = int(os.environ.get("EXPLODED_CPUS", "32"))
-N_HEAVY = int(os.environ.get("EXPLODED_HEAVY", "8"))
-PAGES_HEAVY = int(os.environ.get("EXPLODED_PAGES", "1000"))
-N_NORMAL = int(os.environ.get("EXPLODED_NORMAL", "2000"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+N_HEAVY = int(os.environ.get("HEAVY_DOCS", "8"))
+PAGES_HEAVY = int(os.environ.get("HEAVY_PAGES", "1000"))
+N_NORMAL = int(os.environ.get("HEAVY_NORMAL", "2000"))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-#: which span formats to emit. The page-parallel formats (text, html)
-#: are what the exploded path exists for; docx_para/markdown funnel
-#: through the whole-document paragraph FSM (applyInPandas per doc_id —
-#: inherently serial per document, operators/exploded.py docstring), so
-#: including them re-introduces a monster-doc straggler BY DESIGN.
-#: Measure both: FORMATS=text,html (headline) and FORMATS=all (funnel).
+#: which span formats to emit. text,html is the round-4 headline corpus
+#: (BENCH/BASELINE.md), so its walls compare with the rows recorded there;
+#: the whole-document formats cost more per page (markdown, docx_para).
 FORMATS = tuple(
-    f for f in os.environ.get("EXPLODED_FORMATS", "text,html").split(",") if f
+    f for f in os.environ.get("HEAVY_FORMATS", "text,html").split(",") if f
 )
 
 # one docgen page = SENTENCES_PER_PAGE * WORDS_PER_SENTENCE words
@@ -135,11 +129,11 @@ def task_summaries(spark, min_stage_id: int = 0) -> list[dict]:
 
 
 def main() -> None:
+    from pdf2ocr_spark.operators.extract import extract_spans_arrow, stripe_column
     from pdf2ocr_spark.session import get_spark
-    from pdf2ocr_spark.operators.exploded import extract_spans_exploded
 
     spark = get_spark(
-        app_name="exploded-skew",
+        app_name="heavy-doc-skew",
         master=f"local[{CPUS}]",
         shuffle_partitions=CPUS * 4,
         extra_confs={"spark.ui.enabled": "true", "spark.ui.port": "4055"},
@@ -150,8 +144,8 @@ def main() -> None:
         the session's Python/Arrow worker pool — otherwise the first
         task on each core pays 1-5 s of worker startup, which reads as a
         fake "straggler" in the task times."""
-        out_df = extract_spans_exploded(
-            corpus, formats=FORMATS, num_partitions=CPUS * 4
+        out_df = extract_spans_arrow(
+            corpus.repartition(CPUS * 4, stripe_column()), formats=FORMATS
         )
         out_df.write.format("noop").mode("overwrite").save()  # warmup
         first_timed_stage = (
@@ -213,7 +207,7 @@ def main() -> None:
         print(
             json.dumps(
                 {
-                    "metric": "exploded_heavy_doc_skew",
+                    "metric": "heavy_doc_skew",
                     "formats": list(FORMATS),
                     "cpus": CPUS,
                     "docs": n_docs,

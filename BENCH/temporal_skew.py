@@ -64,7 +64,7 @@ HOT_USER = -1  # remapped hot key (driver user_ids are non-negative)
 
 def task_summaries(spark, min_stage_id: int) -> list[dict]:
     """Per-stage task-duration quantiles from the Spark REST API (same
-    protocol as BENCH/exploded_skew.py: anonymous stage names, so
+    protocol as BENCH/heavy_doc_skew.py: anonymous stage names, so
     attribution is by warmup-boundary stage id + A/B control)."""
     ui = spark.sparkContext.uiWebUrl
     app = spark.sparkContext.applicationId

@@ -12,6 +12,10 @@ Engine: ``pdf2ocr_spark`` (see SURVEY.md §7). Registered queries:
 - the full extraction pipeline (paragraph-FSM based, inherently
   non-SQL-expressible per SURVEY §2.4) registered rows-only:
   ``extract_pipeline`` and ``docs_corpus`` have no oracle entry.
+  ``extract_pipeline`` runs the one extraction path, the fused
+  per-document kernel (``operators/extract.py``); there is no
+  page-parallel variant, since one kernel call per document was faster
+  on every corpus measured, 10,000-page documents included.
 """
 
 from __future__ import annotations
@@ -80,21 +84,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out["ocr_roundtrip"] = _q_ocr_roundtrip
     out["ocr_roundtrip_adaptive"] = _q_ocr_roundtrip_adaptive
     out["media_features"] = _q_media_features
-    out["extract_pipeline_paged"] = _q_extract_paged
     # (similarity_ivf_trained moved to plans.QUERIES in round 5: the
     # Lloyd loop unrolls into per-round DuckDB CTEs, so it is
     # oracle-checked after all — see similarity_sql.sql_ivf_trained)
     return out
-
-
-def _q_extract_paged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heavy-document path: page-parallel extraction (posexplode ->
-    distributed boilerplate anti-join -> per-page pandas_udf -> per-doc
-    applyInPandas funnel). Span-for-span equal to extract_pipeline
-    (tests/test_exploded_path.py); rows-only check."""
-    from pdf2ocr_spark.operators.exploded import extract_spans_exploded
-
-    return extract_spans_exploded(load_docs_corpus(spark, sf_dir), num_partitions=16)
 
 
 def _q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -60,8 +60,11 @@ LINE_WORDS = 2
 PAGE_LINES = 10
 PAGE_WORDS = LINE_WORDS * PAGE_LINES
 
-# Portuguese charset allowlist — must stay identical to kernel/textproc.py
-PT_DISALLOWED = "[^a-zA-Z0-9áéíóúàãõâêôçÁÉÍÓÚÀÃÕÂÊÔÇ\\s.,;:?!()\\[\\]{}\"'-]"
+# Portuguese charset allowlist for pt_clean. Its whitespace is spelled out
+# as ASCII ``\t\n\f\r `` because ``\s`` differs between Spark's Java regex
+# (which adds \x0b) and DuckDB's RE2. The extraction kernel's allowlist
+# (kernel/textproc.py) keeps Unicode ``\s`` whitespace instead.
+PT_DISALLOWED = "[^a-zA-Z0-9áéíóúàãõâêôçÁÉÍÓÚÀÃÕÂÊÔÇ\\t\\n\\f\\r .,;:?!()\\[\\]{}\"'-]"
 
 
 def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:

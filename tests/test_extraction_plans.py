@@ -1,6 +1,7 @@
 """Plan shape of every extraction path: one Python node (``MapInArrow``),
-and one doc -> partition key in the package."""
+one doc -> partition key and one extraction path in the package."""
 
+import ast
 import os
 import re
 import shutil
@@ -104,3 +105,25 @@ def test_one_partition_key_and_no_pandas_extraction():
     ]
     for module in ("extract.py", "checkpoint.py"):
         assert "mapInPandas" not in sources[os.path.join("operators", module)]
+    # one extraction path: the fused kernel, with no page-parallel copy
+    assert not os.path.exists(os.path.join(PACKAGE, "operators", "exploded.py"))
+    for path, src in sources.items():
+        if path.startswith("operators" + os.sep):
+            assert "pandas_udf" not in src and "applyInPandas" not in src, path
+
+    def callers(src):
+        """The functions in ``src`` that call ``extract_from_pages``."""
+        return {
+            fn.name
+            for fn in ast.walk(ast.parse(src))
+            if isinstance(fn, ast.FunctionDef)
+            for node in ast.walk(fn)
+            if isinstance(node, ast.Call)
+            and getattr(node.func, "id", getattr(node.func, "attr", None))
+            == "extract_from_pages"
+        }
+
+    assert {path: c for path, src in sources.items() if (c := callers(src))} == {
+        os.path.join("operators", "extract.py"): {"extraction_kernel", "run"},
+        os.path.join("kernel", "emit.py"): {"extract_document"},
+    }

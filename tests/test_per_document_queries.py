@@ -53,29 +53,52 @@ def test_per_document_query_runs_one_map_in_arrow_above_the_fan_out(name, spark,
     assert nodes == ["MapInArrow"]
 
 
-@pytest.fixture(scope="module")
-def edge_dir(sf_dir, tmp_path_factory):
-    """A ``documents`` table of EDGE_TEXTS in the fixture's schema."""
+#: whitespace the pt allowlist must treat alike on Spark (Java regex) and
+#: DuckDB (RE2): ``\s`` is ``[ \t\n\x0b\f\r]`` in one, ``[ \t\n\f\r]`` in the other
+PT_TEXTS = [
+    "a b\x0bc d\x1ce",
+    "não\xa0há\tespaço\u2003aqui",
+    "\x0b\xa0\t\u2003",
+]
+
+
+def _documents_dir(sf_dir, tmp_path_factory, texts, lang):
+    """A ``documents`` table of ``texts`` in the fixture's schema."""
     schema = pq.read_schema(f"{sf_dir}/documents.parquet").remove_metadata()
-    out = tmp_path_factory.mktemp("edge_docs")
+    out = tmp_path_factory.mktemp("documents")
     rows = {
-        "doc_id": list(range(len(EDGE_TEXTS))),
-        "text": EDGE_TEXTS,
-        "lang": ["en"] * len(EDGE_TEXTS),
-        "source": [f"src{i % 3}" for i in range(len(EDGE_TEXTS))],
-        "n_chars": [len(t) for t in EDGE_TEXTS],
+        "doc_id": list(range(len(texts))),
+        "text": texts,
+        "lang": [lang] * len(texts),
+        "source": [f"src{i % 3}" for i in range(len(texts))],
+        "n_chars": [len(t) for t in texts],
     }
     pq.write_table(pa.table(rows, schema=schema), out / "documents.parquet")
     return str(out)
 
 
-@pytest.mark.parametrize("name", PER_DOCUMENT + ["doc_chunks", "line_dedup"])
-def test_edge_documents_match_the_oracle(name, spark, edge_dir):
-    spark_df = QUERIES[name](spark, edge_dir).toPandas()
+@pytest.fixture(scope="module")
+def edge_dir(sf_dir, tmp_path_factory):
+    return _documents_dir(sf_dir, tmp_path_factory, EDGE_TEXTS, "en")
+
+
+def _assert_matches_oracle(spark, name, docs_dir):
+    spark_df = QUERIES[name](spark, docs_dir).toPandas()
     con = duckdb.connect()
-    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{edge_dir}/documents.parquet'")
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{docs_dir}/documents.parquet'")
     oracle_df = con.execute(ORACLE_SQL[name]).df()
     assert normalize(spark_df) == normalize(oracle_df)
     assert {c: k.kind for c, k in spark_df.dtypes.items()} == {
         c: k.kind for c, k in oracle_df.dtypes.items()
     }
+
+
+@pytest.mark.parametrize("name", PER_DOCUMENT + ["doc_chunks", "line_dedup"])
+def test_edge_documents_match_the_oracle(name, spark, edge_dir):
+    _assert_matches_oracle(spark, name, edge_dir)
+
+
+def test_pt_clean_whitespace_matches_the_oracle(spark, sf_dir, tmp_path_factory):
+    _assert_matches_oracle(
+        spark, "pt_clean", _documents_dir(sf_dir, tmp_path_factory, PT_TEXTS, "pt")
+    )

@@ -8,9 +8,16 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from pdf2ocr_spark.kernel.docgen import build_spans
-from pdf2ocr_spark.kernel.emit import extract_document
+from pdf2ocr_spark.kernel.docgen import (
+    SENTENCES_PER_PAGE,
+    WORDS_PER_SENTENCE,
+    build_spans,
+)
+from pdf2ocr_spark.kernel.emit import ALL_FORMATS, extract_document
 from pdf2ocr_spark.pipeline import load_docs_corpus, load_documents, run_pipeline
+
+#: page count of the one heavy document the Arrow/kernel parity test adds
+MONSTER_PAGES = 1000
 
 
 @pytest.fixture(scope="module")
@@ -56,22 +63,54 @@ def test_partitioning_invariance(spark, sf_dir):
     pd.testing.assert_frame_equal(a, b)
 
 
-def test_arrow_path_matches_pure_kernel(spark, docs_df):
+@pytest.fixture(scope="module")
+def docs_with_monster(spark, sf_dir, docs_df):
+    """``docs_df`` plus one document of at least 1,000 pages: a corpus text
+    tiled through the docgen channel."""
+    first = load_documents(spark, sf_dir).orderBy("doc_id").first()
+    words = first["text"].split()
+    reps = -(-MONSTER_PAGES * SENTENCES_PER_PAGE * WORDS_PER_SENTENCE // len(words))
+    spans = build_spans("monster", " ".join(words * reps), first["source"])
+    assert sum(s["kind"] == "page" for s in spans) >= MONSTER_PAGES
+    monster = spark.createDataFrame([("monster", spans)], docs_df.schema)
+    return docs_df.unionByName(monster).cache()
+
+
+@pytest.mark.parametrize(
+    "formats,lang",
+    [
+        (ALL_FORMATS, "eng"),
+        (ALL_FORMATS, "por"),
+        (["html"], "eng"),
+        (["docx_para"], "eng"),
+        (["text", "markdown"], "eng"),
+    ],
+    ids=["all-eng", "all-por", "html", "docx_para", "text+markdown"],
+)
+def test_arrow_path_matches_pure_kernel(docs_with_monster, formats, lang):
     """extract_spans_arrow (the nested mapInArrow path) emits exactly the
-    rows of the pure kernel run over the same collected docs rows."""
+    rows of the pure kernel run over the same collected docs rows, a
+    1,000-page document included."""
     from pdf2ocr_spark.operators.extract import extract_spans_arrow
 
     key = ["doc_id", "kind", "offset"]
-    a = extract_spans_arrow(docs_df).toPandas().sort_values(key).reset_index(drop=True)
+    a = (
+        extract_spans_arrow(docs_with_monster, formats=formats, lang=lang)
+        .toPandas()
+        .sort_values(key)
+        .reset_index(drop=True)
+    )
     rows = []
-    for r in docs_df.collect():
-        rows.extend(extract_document(r["doc_id"], [s.asDict() for s in r["spans"]]))
+    for r in docs_with_monster.collect():
+        spans = [s.asDict() for s in r["spans"]]
+        rows.extend(extract_document(r["doc_id"], spans, formats=formats, lang=lang))
     b = (
         pd.DataFrame(rows, columns=["doc_id", "kind", "text", "media_ref", "offset"])
         .sort_values(key)
         .reset_index(drop=True)
     )
     b["offset"] = b["offset"].astype(a["offset"].dtype)
+    assert (a["doc_id"] == "monster").any()
     pd.testing.assert_frame_equal(a, b)
 
 
