@@ -30,7 +30,9 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+from pdf2ocr_spark.session import default_cpus  # noqa: E402
+
+CPUS = default_cpus()
 N_HEAVY = int(os.environ.get("HEAVY_DOCS", "8"))
 PAGES_HEAVY = int(os.environ.get("HEAVY_PAGES", "1000"))
 N_NORMAL = int(os.environ.get("HEAVY_NORMAL", "2000"))

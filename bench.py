@@ -26,8 +26,10 @@ import time
 
 import pandas as pd  # module-level: pandas_udf type hints resolve here
 
+from pdf2ocr_spark.session import default_cpus
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_cpus()
 #: Official N vs 4N pair = 4 vs 16 pinned WORKER cores under the
 #: EXECUTOR MODEL (round-3 protocol, data in BENCH/BASELINE.md): an
 #: "executor" is 4 worker cores + 1 JVM service core, so the pair runs

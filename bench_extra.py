@@ -22,8 +22,10 @@ import time
 
 import pandas as pd  # noqa: F401  (pandas_udf type hints resolve here)
 
+from pdf2ocr_spark.session import default_cpus
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_cpus()
 
 
 def _spark():

@@ -9,14 +9,14 @@ rebuilt Spark-first:
 - per-document OCR-text recovery, reading-order paragraph reconstruction,
   header/footer boilerplate stripping, and multi-format span emission
   (text / markdown / html / docx_para / page_header / media_ref), all as
-  vectorized Arrow stages (``mapInArrow`` on the hot paths, ``mapInPandas``
-  on the rest — no per-row Python UDFs)
+  vectorized ``mapInArrow`` stages (one row map, :mod:`pdf2ocr_spark.arrowmap`;
+  no per-row Python UDFs)
 - per-partition lineage + checkpoint/resume
 - training-data-pipeline operators (dedup, similarity search, text
   quality) as declarative DataFrame transforms
 
 Layout:
-    kernel/     pure pandas/numpy compute (zero Spark imports, unit-testable)
+    kernel/     pure Python/numpy compute (zero Spark imports, unit-testable)
     operators/  Spark DataFrame wrappers around the kernel + pipeline
     functions/  column-expression (Catalyst-native) operator variants
     sources/    IO abstraction (parquet now; Iceberg when catalog available)

@@ -69,15 +69,22 @@ _RE_SPLIT_FI = re.compile(rf"fi\s+(?=[{_LIGATURE_TAIL}])")
 _RE_SPLIT_FL = re.compile(rf"fl\s+(?=[{_LIGATURE_TAIL}])")
 _RE_SPLIT_FF = re.compile(rf"ff\s+(?=[{_LIGATURE_TAIL}])")
 
-# Portuguese charset allowlist (everything else is stripped when lang='por')
-_PT_ALLOWED_CLASS = (
+#: the 29 ``str.isspace()`` characters (Python's Unicode ``\s``) spelled
+#: out, so Spark's Java regex and DuckDB's RE2 (whose ``\s`` differ) agree
+UNICODE_WHITESPACE = (
+    "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680\u2000\u2001\u2002\u2003\u2004"
+    "\u2005\u2006\u2007\u2008\u2009\u200a\u2028\u2029\u202f\u205f\u3000"
+)
+
+#: Portuguese charset allowlist: the rest is stripped when lang='por' (and by pt_clean)
+PT_ALLOWED_CLASS = (
     "a-zA-Z0-9"
     "áéíóúàãõâêôç"
     "ÁÉÍÓÚÀÃÕÂÊÔÇ"
-    "\\s"
-    "\\.,;:?!()\\[\\]{}\\-\"'"
+    + UNICODE_WHITESPACE
+    + "\\.,;:?!()\\[\\]{}\\-\"'"
 )
-_RE_PT_DISALLOWED = re.compile(f"[^{_PT_ALLOWED_CLASS}]")
+_RE_PT_DISALLOWED = re.compile(f"[^{PT_ALLOWED_CLASS}]")
 
 
 def repair_ligatures(text: str) -> str:

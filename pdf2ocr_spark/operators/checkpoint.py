@@ -42,17 +42,7 @@ from pdf2ocr_spark.operators.extract import (
     stripe_column,
     stripe_key,
 )
-
-CHECKPOINT_OUT_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("media_ref", T.StringType()),
-        T.StructField("offset", T.IntegerType()),
-        T.StructField("part_id", T.IntegerType()),
-    ]
-)
+from pdf2ocr_spark.schema import CHECKPOINT_OUT_SCHEMA
 
 LINEAGE_JSON_SCHEMA = T.StructType(
     [

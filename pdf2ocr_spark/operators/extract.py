@@ -30,13 +30,13 @@ import json
 import time
 from typing import Optional, Sequence
 
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pdf2ocr_spark.arrowmap import arrow_schema, record_batch
 from pdf2ocr_spark.kernel.docgen import build_spans
 from pdf2ocr_spark.kernel.emit import ALL_FORMATS, extract_from_pages, page_texts_in_order
-from pdf2ocr_spark.schema import SPANS_OUT_SCHEMA
+from pdf2ocr_spark.schema import CHECKPOINT_OUT_SCHEMA, SPANS_OUT_SCHEMA
 
 #: ``kind`` of the one lineage sentinel row per part_id in lineage mode
 LINEAGE_KIND = "_lineage"
@@ -44,8 +44,6 @@ LINEAGE_KIND = "_lineage"
 #: the doc -> part_id map, recorded in lineage ``part_mode`` next to its
 #: ``partitions`` n: resume skips a "done" partition only under both
 PART_MAP = "pmod(hash(cast(doc_id as string)), n)"
-
-_OUT_NAMES = ["doc_id", "kind", "text", "media_ref", "offset"]
 
 
 def stripe_column():
@@ -66,7 +64,7 @@ def stripe_key(num_partitions: int):
     return F.pmod(F.hash(stripe_column()), F.lit(num_partitions))
 
 
-def _pages_reader(batch):
+def pages_reader(batch):
     """The batch's doc ids and ``pages_of(i) -> (pages, media)``: document
     i's page texts and media refs in ``offset`` order. Reads nested
     ``spans`` straight from the Arrow ListArray (no per-span dict objects),
@@ -103,17 +101,6 @@ def _pages_reader(batch):
     return doc_ids, from_spans
 
 
-def _record_batch(rows, part_ids=None):
-    cols = list(zip(*rows)) or [()] * len(_OUT_NAMES)
-    types = [pa.string(), pa.string(), pa.string(), pa.string(), pa.int32()]
-    arrays = [pa.array(c, t) for c, t in zip(cols, types)]
-    names = list(_OUT_NAMES)
-    if part_ids is not None:
-        arrays.append(pa.array(part_ids, pa.int32()))
-        names.append("part_id")
-    return pa.RecordBatch.from_arrays(arrays, names=names)
-
-
 def extraction_kernel(
     formats: Sequence[str],
     lang: str,
@@ -132,20 +119,18 @@ def extraction_kernel(
     the last batch one ``LINEAGE_KIND`` sentinel per ``part_id`` carries
     the partition's metrics as JSON."""
     fmts = tuple(formats)
+    schema = arrow_schema(CHECKPOINT_OUT_SCHEMA if lineage else SPANS_OUT_SCHEMA)
 
     def run(batches):
         # a checkpoint task holds several whole part_ids (coalesce): bucket per part_id
         stats: dict[int, dict] = {}
         for batch in batches:
-            doc_ids, pages_of = _pages_reader(batch)
+            doc_ids, pages_of = pages_reader(batch)
             pids = batch.column("part_id").to_pylist() if lineage else None
-            out, out_pids = [], []
+            out = []
             for i, doc_id in enumerate(doc_ids):
                 if not lineage:
-                    pages, media = pages_of(i)
-                    out.extend(
-                        extract_from_pages(doc_id, pages, media, fmts, lang, max_sentences)
-                    )
+                    out.extend(extract_from_pages(doc_id, *pages_of(i), fmts, lang, max_sentences))
                     continue
                 st = stats.setdefault(
                     pids[i], {"docs": 0, "pages": 0, "spans": 0, "wall": 0.0, "errors": []}
@@ -161,15 +146,14 @@ def extraction_kernel(
                     rows = []
                 st["wall"] += time.monotonic() - t0
                 st["spans"] += len(rows)
-                out.extend(rows)
-                out_pids.extend([pids[i]] * len(rows))
-            yield _record_batch(out, out_pids if lineage else None)
+                out.extend(row + (pids[i],) for row in rows)
+            yield record_batch(out, schema)
         if stats:
             sentinels = [
-                (None, LINEAGE_KIND, _lineage_json(st, lineage), None, 0)
-                for _, st in sorted(stats.items())
+                (None, LINEAGE_KIND, _lineage_json(st, lineage), None, 0, pid)
+                for pid, st in sorted(stats.items())
             ]
-            yield _record_batch(sentinels, sorted(stats))
+            yield record_batch(sentinels, schema)
 
     return run
 

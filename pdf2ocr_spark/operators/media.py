@@ -11,7 +11,8 @@ implements that surface Spark-first:
   are synthesized deterministically from the ref (the sandbox has no
   object store); at scale this column is an Iceberg ``binary`` column or
   a reference into object storage.
-- ``decode_media``: Arrow-batched ``mapInPandas`` decode/feature stage.
+- ``decode_media``: decode/feature stage, one ``mapInArrow`` row map
+  (``arrowmap.map_rows``, as are ``synthesize_payloads`` and ``sample_frames``).
   The real decoders (PIL/ffmpeg/torchcodec) are NOT in this container, so
   the decode body is STUBBED: by default a clearly-marked
   ``NotImplementedError`` names the missing dependency; with
@@ -28,11 +29,11 @@ before filtering).
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
+
+from pdf2ocr_spark.arrowmap import map_rows
 
 MEDIA_TYPES = ("image", "audio", "video")
 
@@ -87,28 +88,21 @@ def synthesize_payloads(refs: DataFrame) -> DataFrame:
     exploded spans, or a SQL-derivable synthetic set for oracle checks)
     gets identical payloads."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, ref in zip(pdf["doc_id"], pdf["media_ref"]):
-                h = hashlib.md5(f"media:{ref}".encode()).digest()
-                mtype = MEDIA_TYPES[h[0] % len(MEDIA_TYPES)]
-                n_bytes = 256 + h[1] * 16
-                payload = (hashlib.md5(f"payload:{ref}".encode()).digest() * (
-                    n_bytes // 16 + 1
-                ))[:n_bytes]
-                meta = {
-                    "width": 64 + h[2] * 4 if mtype != "audio" else None,
-                    "height": 64 + h[3] * 4 if mtype != "audio" else None,
-                    "duration_ms": (h[4] * 250) if mtype != "image" else None,
-                    "n_bytes": n_bytes,
-                }
-                rows.append((doc_id, ref, mtype, payload, meta))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "media_ref", "media_type", "payload", "meta"]
-            )
+    def gen(doc_id, ref):
+        h = hashlib.md5(f"media:{ref}".encode()).digest()
+        mtype = MEDIA_TYPES[h[0] % len(MEDIA_TYPES)]
+        n_bytes = 256 + h[1] * 16
+        digest = hashlib.md5(f"payload:{ref}".encode()).digest()
+        payload = (digest * (n_bytes // 16 + 1))[:n_bytes]
+        meta = {
+            "width": 64 + h[2] * 4 if mtype != "audio" else None,
+            "height": 64 + h[3] * 4 if mtype != "audio" else None,
+            "duration_ms": (h[4] * 250) if mtype != "image" else None,
+            "n_bytes": n_bytes,
+        }
+        return [(doc_id, ref, mtype, payload, meta)]
 
-    return refs.mapInPandas(gen, schema=MEDIA_SCHEMA)
+    return map_rows(refs.select("doc_id", "media_ref"), MEDIA_SCHEMA, gen)
 
 
 def _fake_decode(payload: bytes, media_type: str) -> list:
@@ -133,39 +127,19 @@ def decode_media(media: DataFrame, fake: bool = False) -> DataFrame:
     batching, and partition behavior are real and tested.
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, ref, mtype, payload, meta in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf["media_type"],
-                pdf["payload"], pdf["meta"],
-            ):
-                if not fake:
-                    raise NotImplementedError(
-                        f"media decode for {mtype!r} requires "
-                        f"{'Pillow' if mtype == 'image' else 'ffmpeg'} — "
-                        "not available in this environment; pass fake=True "
-                        "to exercise the pipeline with the deterministic stub"
-                    )
-                feature = _fake_decode(bytes(payload), mtype)
-                w = meta.get("width") if isinstance(meta, dict) else meta["width"]
-                h = meta.get("height") if isinstance(meta, dict) else meta["height"]
-                rows.append(
-                    (
-                        doc_id, ref, mtype, feature,
-                        min(w, 32) if w is not None else None,
-                        min(h, 32) if h is not None else None,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "media_ref", "media_type",
-                    "feature", "thumb_w", "thumb_h",
-                ],
+    def run(doc_id, ref, mtype, payload, meta):
+        if not fake:
+            raise NotImplementedError(
+                f"media decode for {mtype!r} requires "
+                f"{'Pillow' if mtype == 'image' else 'ffmpeg'} — "
+                "not available in this environment; pass fake=True "
+                "to exercise the pipeline with the deterministic stub"
             )
+        thumb = [None if v is None else min(v, 32) for v in (meta["width"], meta["height"])]
+        return [(doc_id, ref, mtype, _fake_decode(payload, mtype), *thumb)]
 
-    return media.mapInPandas(run, schema=FEATURES_SCHEMA)
+    cols = media.select("doc_id", "media_ref", "media_type", "payload", "meta")
+    return map_rows(cols, FEATURES_SCHEMA, run)
 
 
 FRAMES_SCHEMA = T.StructType(
@@ -197,31 +171,17 @@ def sample_frames(media: DataFrame, n_frames: int = N_FRAMES, fake: bool = False
     so the whole stage is oracle-checkable (plans.q_media_frames)."""
     vids = media.where(F.col("media_type") == "video")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "media_ref", "frame_idx", "frame_ts_ms", "frame_hash"]
-        for pdf in batches:
-            rows = []
-            for doc_id, ref, meta in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf["meta"]
-            ):
-                if not fake:
-                    raise NotImplementedError(
-                        "video frame sampling requires ffmpeg — not "
-                        "available in this environment; pass fake=True to "
-                        "exercise the pipeline with the deterministic stub"
-                    )
-                dur = (
-                    meta.get("duration_ms")
-                    if isinstance(meta, dict)
-                    else meta["duration_ms"]
-                )
-                for k in range(n_frames):
-                    ts = (k + 1) * int(dur) // (n_frames + 1)
-                    fh = int(
-                        hashlib.md5(f"frame:{ref}:{k}".encode()).hexdigest()[:8],
-                        16,
-                    )
-                    rows.append((doc_id, ref, k, ts, fh))
-            yield pd.DataFrame(rows, columns=cols)
+    def run(doc_id, ref, meta):
+        if not fake:
+            raise NotImplementedError(
+                "video frame sampling requires ffmpeg — not "
+                "available in this environment; pass fake=True to "
+                "exercise the pipeline with the deterministic stub"
+            )
+        dur = meta["duration_ms"]
+        for k in range(n_frames):
+            ts = (k + 1) * dur // (n_frames + 1)
+            fh = int(hashlib.md5(f"frame:{ref}:{k}".encode()).hexdigest()[:8], 16)
+            yield doc_id, ref, k, ts, fh
 
-    return vids.mapInPandas(run, schema=FRAMES_SCHEMA)
+    return map_rows(vids.select("doc_id", "media_ref", "meta"), FRAMES_SCHEMA, run)

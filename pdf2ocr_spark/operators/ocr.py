@@ -1,11 +1,11 @@
 """docs -> OCR-recovered docs: the rasterize+preprocess+decode stage.
 
 The Spark analogue of the reference's render->preprocess->Tesseract page
-loop (/root/reference/pdf2ocr/ocr.py:268-326), as one Arrow-batched
-``mapInPandas`` stage: for every ``kind='page'`` span, the kernel renders
-the text to a synthetic scan bitmap, runs the full §2.3 preprocess chain,
-and decodes the text back (kernel/rasterocr.py). Deterministic and
-self-validating: ``recovered_matches``/``page_count`` reports exactness.
+loop (ref ocr.py:268-326), as one ``mapInArrow`` stage: for every
+``kind='page'`` span, the kernel renders the text to a synthetic scan
+bitmap, runs the full §2.3 preprocess chain, and decodes the text back
+(kernel/rasterocr.py). Deterministic and self-validating:
+``recovered_matches``/``page_count`` reports exactness.
 
 This stage is CPU-heavy by design (it is the raster workload); it is a
 separate operator rather than part of the default text pipeline, mirroring
@@ -14,11 +14,11 @@ the reference where OCR happens once at ingest.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from pdf2ocr_spark.arrowmap import arrow_schema, record_batch
+from pdf2ocr_spark.operators.extract import pages_reader
 
 OCR_STATS_SCHEMA = T.StructType(
     [
@@ -50,9 +50,11 @@ def ocr_recover_stats(
     ``adaptive`` runs the real tiled CLAHE in the Step-3 contrast slot
     (kernel/imageproc.clahe; what the reference computes WITH skimage
     installed, ref ocr.py:122-135) instead of the reference's no-skimage
-    autocontrast fallback."""
+    autocontrast fallback. Pages are read by the extraction kernel's
+    ``pages_reader``, so a null ``offset`` fails both stages alike."""
+    schema = arrow_schema(OCR_STATS_SCHEMA)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
         from pdf2ocr_spark.kernel.imageproc import preprocess_page
         from pdf2ocr_spark.kernel.rasterocr import (
             DEFAULT_DPI,
@@ -63,14 +65,11 @@ def ocr_recover_stats(
         )
 
         eff_dpi = dpi or DEFAULT_DPI
-        for pdf in batches:
+        for batch in batches:
+            doc_ids, pages_of = pages_reader(batch)
             rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                pages = [
-                    s.get("text") or ""
-                    for s in sorted(spans, key=lambda s: s["offset"])
-                    if s.get("kind") == "page"
-                ][:max_pages_per_doc]
+            for d, doc_id in enumerate(doc_ids):
+                pages = pages_of(d)[0][:max_pages_per_doc]
                 # pre-allocated slots + windowed render (ref ocr.py:386-433)
                 recovered = [None] * len(pages)
                 for start, end in page_batch_ranges(len(pages), batch_size):
@@ -90,9 +89,6 @@ def ocr_recover_stats(
                 matches = sum(1 for p, r in zip(pages, recovered) if p == r)
                 chars = sum(len(p) for p in pages)
                 rows.append((doc_id, len(pages), matches, chars))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "page_count", "recovered_matches", "recovered_chars"],
-            )
+            yield record_batch(rows, schema)
 
-    return docs.select("doc_id", "spans").mapInPandas(run, schema=OCR_STATS_SCHEMA)
+    return docs.select("doc_id", "spans").mapInArrow(run, OCR_STATS_SCHEMA)

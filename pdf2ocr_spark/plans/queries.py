@@ -43,28 +43,25 @@ from itertools import groupby
 from operator import itemgetter
 from typing import Callable, Dict
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import StructType
 
+from pdf2ocr_spark.arrowmap import map_rows
 from pdf2ocr_spark.functions.dedup import _fan_out
 from pdf2ocr_spark.functions.quality import (
     DUP_WORD_MAX_BP,
     TOP_BIGRAM_MAX_BP,
     quality_bp_expr,
 )
+from pdf2ocr_spark.kernel.textproc import PT_ALLOWED_CLASS
 
 LINE_WORDS = 2
 PAGE_LINES = 10
 PAGE_WORDS = LINE_WORDS * PAGE_LINES
 
-# Portuguese charset allowlist for pt_clean. Its whitespace is spelled out
-# as ASCII ``\t\n\f\r `` because ``\s`` differs between Spark's Java regex
-# (which adds \x0b) and DuckDB's RE2. The extraction kernel's allowlist
-# (kernel/textproc.py) keeps Unicode ``\s`` whitespace instead.
-PT_DISALLOWED = "[^a-zA-Z0-9áéíóúàãõâêôçÁÉÍÓÚÀÃÕÂÊÔÇ\\t\\n\\f\\r .,;:?!()\\[\\]{}\"'-]"
+# pt_clean's allowlist is the extraction kernel's: its whitespace is literal,
+# so Spark's Java regex, DuckDB's RE2 and Python's ``re`` keep the same set
+PT_DISALLOWED = f"[^{PT_ALLOWED_CLASS}]"
 
 
 def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -109,22 +106,10 @@ def _per_document(
     """A row-local query: one ``ddl`` row ``(doc_id, *fn(source, text))``
     per document (a null text reads as ``""``).
 
-    The narrow ``(doc_id, source, text)`` scan fans out, then one
-    ``mapInArrow`` loop calls ``fn`` for each row and builds each output
-    batch in ``ddl``'s Arrow schema — no shuffle, no pandas."""
-    schema = to_arrow_schema(StructType.fromDDL(ddl))
-
-    def run(batches):
-        for batch in batches:
-            cols = [batch.column(c).to_pylist() for c in ("doc_id", "source", "text")]
-            rows = [(d, *fn(s, t or "")) for d, s, t in zip(*cols)]
-            out = list(zip(*rows)) or [()] * len(schema)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, f.type) for c, f in zip(out, schema)], schema=schema
-            )
-
+    The narrow ``(doc_id, source, text)`` scan fans out into one
+    ``arrowmap.map_rows`` stage: no shuffle, no pandas."""
     docs = _documents(spark, sf_dir).select("doc_id", "source", "text")
-    return _fan_out(docs).mapInArrow(run, ddl)
+    return map_rows(_fan_out(docs), ddl, lambda d, s, t: [(d, *fn(s, t or ""))])
 
 
 # DuckDB-side shared CTEs, textually identical spec
@@ -570,7 +555,7 @@ WITH refs AS (
 def q_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Oracle-checked multimodal decode stage (operators/media.py): a
     SQL-derivable synthetic ref set (one media ref per doc) is pushed
-    through the SAME payload-synthesis + mapInPandas decode stage as the
+    through the SAME payload-synthesis + mapInArrow decode stage as the
     channel's media spans, and every output is serialized to scalars the
     oracle can reproduce (feature bytes recovered via round(f*255))."""
     from pdf2ocr_spark.operators.media import decode_media, synthesize_payloads

@@ -31,3 +31,10 @@ SPANS_OUT_SCHEMA = T.StructType(
         T.StructField("offset", T.IntegerType(), False),
     ]
 )
+
+#: checkpoint output: spans_out plus ``part_id``, all nullable (the
+#: lineage sentinel rows carry no doc_id)
+CHECKPOINT_OUT_SCHEMA = T.StructType(
+    [T.StructField(f.name, f.dataType) for f in SPANS_OUT_SCHEMA]
+    + [T.StructField("part_id", T.IntegerType())]
+)

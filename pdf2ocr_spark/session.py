@@ -44,13 +44,18 @@ ENGINE_CONFS = {
 }
 
 
+def default_cpus() -> int:
+    """``SPARK_GRAFT_CPUS`` if set, else the cores this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "pdf2ocr_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_confs: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    cpus = default_cpus()
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
 

@@ -110,15 +110,19 @@ def _poison(spark):
     )
 
 
-def test_arrow_path_rejects_null_offset(spark):
-    """Without lineage there is nowhere to isolate the error: extraction
-    fails, naming the document, instead of guessing a reading order."""
+@pytest.mark.parametrize("stage", ["extract_spans_arrow", "ocr_recover_stats"])
+def test_arrow_path_rejects_null_offset(spark, stage):
+    """Without lineage there is nowhere to isolate the error: extraction,
+    and the OCR stage reading pages the same way, fail naming the
+    document instead of guessing a reading order."""
     from pyspark.errors import PythonException
 
     from pdf2ocr_spark.operators.extract import extract_spans_arrow
+    from pdf2ocr_spark.operators.ocr import ocr_recover_stats
 
+    run = {"extract_spans_arrow": extract_spans_arrow, "ocr_recover_stats": ocr_recover_stats}
     with pytest.raises(PythonException, match="'poison-doc' has a span with a null offset"):
-        extract_spans_arrow(_poison(spark)).collect()
+        run[stage](_poison(spark)).collect()
 
 
 def test_per_doc_error_isolation(spark, docs, outdir):

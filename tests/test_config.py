@@ -101,3 +101,14 @@ def test_empty_line_not_list_item():
 
     assert _looks_like_list_item("") is False
     assert _looks_like_list_item("• item") is True
+
+
+def test_default_cpus_is_the_variable_else_the_affinity_mask(monkeypatch):
+    import os
+
+    from pdf2ocr_spark.session import default_cpus
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cpus() == 3
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    assert default_cpus() == len(os.sched_getaffinity(0))

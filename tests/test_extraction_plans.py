@@ -103,8 +103,15 @@ def test_one_partition_key_and_no_pandas_extraction():
     assert [p for p, src in sources.items() if "def stripe_key(" in src] == [
         os.path.join("operators", "extract.py")
     ]
-    for module in ("extract.py", "checkpoint.py"):
-        assert "mapInPandas" not in sources[os.path.join("operators", module)]
+    # one Arrow row map: no pandas stage in operators/ or plans/, one
+    # RecordBatch builder, and structs always arrive as dicts
+    for path, src in sources.items():
+        if path.split(os.sep)[0] in ("operators", "plans"):
+            assert "mapInPandas" not in src and "import pandas" not in src, path
+    assert [p for p, src in sources.items() if "RecordBatch.from_arrays" in src] == [
+        "arrowmap.py"
+    ]
+    assert "isinstance(meta, dict)" not in text
     # one extraction path: the fused kernel, with no page-parallel copy
     assert not os.path.exists(os.path.join(PACKAGE, "operators", "exploded.py"))
     for path, src in sources.items():

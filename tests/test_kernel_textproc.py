@@ -3,7 +3,10 @@
 Python, no SparkSession needed.
 """
 
+import sys
+
 from pdf2ocr_spark.kernel.textproc import (
+    UNICODE_WHITESPACE,
     clean_portuguese_charset,
     reassemble_paragraphs,
     rebuild_paragraphs,
@@ -259,3 +262,9 @@ class TestPortugueseClean:
     def test_keeps_accents_and_punct(self):
         s = "Ação, coração; (não) [sim] {x} - \"ok\" 'fim'!?"
         assert clean_portuguese_charset(s) == s
+
+    def test_whitespace_constant_is_every_isspace_character(self):
+        """The literal class the kernel and the SQL allowlist share is
+        Python's Unicode ``\\s``: every code point with ``isspace()``."""
+        scan = "".join(c for c in map(chr, range(sys.maxunicode + 1)) if c.isspace())
+        assert UNICODE_WHITESPACE == scan

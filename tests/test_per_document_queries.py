@@ -10,6 +10,7 @@ import pytest
 from test_extraction_plans import python_nodes
 from test_oracle_parity import normalize
 
+from pdf2ocr_spark.kernel.textproc import clean_portuguese_charset
 from pdf2ocr_spark.plans import ORACLE_SQL, QUERIES
 
 PER_DOCUMENT = [
@@ -99,6 +100,11 @@ def test_edge_documents_match_the_oracle(name, spark, edge_dir):
 
 
 def test_pt_clean_whitespace_matches_the_oracle(spark, sf_dir, tmp_path_factory):
-    _assert_matches_oracle(
-        spark, "pt_clean", _documents_dir(sf_dir, tmp_path_factory, PT_TEXTS, "pt")
-    )
+    """Spark, DuckDB and the extraction kernel's ``lang="por"`` clean keep
+    the same whitespace."""
+    docs_dir = _documents_dir(sf_dir, tmp_path_factory, PT_TEXTS, "pt")
+    _assert_matches_oracle(spark, "pt_clean", docs_dir)
+    rows = QUERIES["pt_clean"](spark, docs_dir).collect()
+    assert {r.doc_id: r.clean_text for r in rows} == {
+        i: clean_portuguese_charset(t) for i, t in enumerate(PT_TEXTS)
+    }
