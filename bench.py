@@ -24,8 +24,6 @@ import os
 import sys
 import time
 
-import pandas as pd  # module-level: pandas_udf type hints resolve here
-
 from pdf2ocr_spark.session import default_cpus
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -122,19 +120,13 @@ def _fresh_spark(cpus: int):
     )
 
 
-def _warm_python_workers(spark) -> None:
+def warm_python_workers(spark) -> None:
     """Spawn the session's Python/Arrow worker pool once before timing:
-    the first pandas_udf stage otherwise pays ~5s of worker startup that
+    the first Python stage otherwise pays ~5s of worker startup that
     would be attributed to whichever query runs it first."""
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("long")
-    def _ident(x: pd.Series) -> pd.Series:
-        return x
-
-    spark.range(0, 10_000, 1, CPUS * 2).select(_ident("id")).write.format(
-        "noop"
-    ).mode("overwrite").save()
+    spark.range(0, 10_000, 1, CPUS * 2).mapInArrow(
+        lambda batches: batches, "id long"
+    ).write.format("noop").mode("overwrite").save()
 
 
 def time_queries(spark) -> tuple[dict, dict]:
@@ -156,7 +148,7 @@ def time_queries(spark) -> tuple[dict, dict]:
     {"construct": s, "eval": s} for the detail line."""
     from pdf2ocr_spark.plans import QUERIES
 
-    _warm_python_workers(spark)
+    warm_python_workers(spark)
     totals, split = {}, {}
     for name, fn in sorted(QUERIES.items()):
         walls, cons, evs = [], [], []
@@ -318,13 +310,8 @@ def skew_spread(tile: int) -> dict:
     ``stripe_key`` and report the spread of per-partition kernel walls.
     Balanced partitioning => max/p50 stays near 1 despite the tail."""
     import numpy as np
-    from pyspark.sql import functions as F
 
-    from pdf2ocr_spark.operators.checkpoint import (
-        CHECKPOINT_OUT_SCHEMA,
-        LINEAGE_KIND,
-        LINEAGE_JSON_SCHEMA,
-    )
+    from pdf2ocr_spark.operators.checkpoint import CHECKPOINT_OUT_SCHEMA, decode_lineage
     from pdf2ocr_spark.operators.extract import extraction_kernel
     from pdf2ocr_spark.pipeline import stripe_column, stripe_key
 
@@ -345,12 +332,7 @@ def skew_spread(tile: int) -> dict:
                 schema=CHECKPOINT_OUT_SCHEMA,
             )
         )
-        lin = (
-            out.where(F.col("kind") == LINEAGE_KIND)
-            .select(F.from_json("text", LINEAGE_JSON_SCHEMA).alias("m"))
-            .select("m.wall_sec", "m.page_count")
-            .toPandas()
-        )
+        lin = decode_lineage(out).select("wall_sec", "page_count").toPandas()
         walls = np.sort(lin["wall_sec"].to_numpy())
         p50 = float(np.median(walls))
         # can one partition straggle the stage? its wall as a fraction of

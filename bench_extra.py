@@ -20,8 +20,7 @@ import os
 import sys
 import time
 
-import pandas as pd  # noqa: F401  (pandas_udf type hints resolve here)
-
+from bench import warm_python_workers
 from pdf2ocr_spark.session import default_cpus
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -36,18 +35,6 @@ def _spark():
         master=f"local[{CPUS}]",
         shuffle_partitions=CPUS,
     )
-
-
-def _warm(spark):
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("long")
-    def _ident(x: pd.Series) -> pd.Series:
-        return x
-
-    spark.range(0, 10_000, 1, CPUS * 2).select(_ident("id")).write.format(
-        "noop"
-    ).mode("overwrite").save()
 
 
 def _noop(df):
@@ -87,7 +74,7 @@ def main() -> None:
         sf = args[0] if args else SF_DIR
         runs = int(args[1]) if len(args) > 1 else 1
         spark = _spark()
-        _warm(spark)
+        warm_python_workers(spark)
         qs = _queries()
         out = {}
         for name in sorted(qs):
@@ -113,7 +100,7 @@ def main() -> None:
 
     if cmd == "time":
         runs = int(args[2]) if len(args) > 2 else 2
-        _warm(spark)
+        warm_python_workers(spark)
         spark.sparkContext.setJobDescription(f"bench_extra: {name}")
         for i in range(runs):
             t0 = time.perf_counter()

@@ -9,8 +9,8 @@ rebuilt Spark-first:
 - per-document OCR-text recovery, reading-order paragraph reconstruction,
   header/footer boilerplate stripping, and multi-format span emission
   (text / markdown / html / docx_para / page_header / media_ref), all as
-  vectorized ``mapInArrow`` stages (one row map, :mod:`pdf2ocr_spark.arrowmap`;
-  no per-row Python UDFs)
+  vectorized ``mapInArrow`` stages (one Arrow idiom,
+  :mod:`pdf2ocr_spark.arrowmap`; no per-row Python UDFs)
 - per-partition lineage + checkpoint/resume
 - training-data-pipeline operators (dedup, similarity search, text
   quality) as declarative DataFrame transforms
@@ -18,7 +18,7 @@ rebuilt Spark-first:
 Layout:
     kernel/     pure Python/numpy compute (zero Spark imports, unit-testable)
     operators/  Spark DataFrame wrappers around the kernel + pipeline
-    functions/  column-expression (Catalyst-native) operator variants
+    functions/  training-data operators (Catalyst + Arrow numpy kernels)
     sources/    IO abstraction (parquet now; Iceberg when catalog available)
     streaming/  incremental ingest via Structured Streaming
 

@@ -1,4 +1,4 @@
-"""Catalyst-native operator library: deduplication, similarity search, and
-text-quality functions for large-scale training-data pipelines. All pure
-column expressions / DataFrame transforms — no Python UDFs in any hot path.
+"""Training-data operator library (dedup, decontamination, similarity,
+quality, temporal): column expressions, with numpy kernels run as Arrow
+stages through ``pdf2ocr_spark.arrowmap`` — no per-row UDFs, no pandas.
 """

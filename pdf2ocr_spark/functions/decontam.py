@@ -1,19 +1,20 @@
-"""Vectorized n-gram kernel for the decontamination query.
+"""N-gram kernels for the decontamination query and the stream gate.
 
 The pure-Catalyst form (transform over sequence with an
 array_join(slice(...)) lambda, wrapped in array_distinct) runs the
 whole per-element expression tree INTERPRETED — nested higher-order
 functions never enter whole-stage codegen — and costs ~100x the Arrow
 kernel at sf0.1 (the same finding that shaped the minhash signature
-kernel, functions/dedup.py). One batched Python pass over the token
-arrays is the designed fast path: per doc, join each token window once
-and keep first-occurrence-distinct grams.
+kernel, functions/dedup.py). Both stages here are one
+``arrowmap.map_rows`` pass over the rows: per doc, join each token
+window once and keep first-occurrence-distinct grams.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, functions as F
+
+from pdf2ocr_spark.arrowmap import map_rows
 
 
 def _ngrams(toks, n: int):
@@ -23,47 +24,37 @@ def _ngrams(toks, n: int):
         yield " ".join(toks[i : i + n])
 
 
-def counted_ngrams_udf(n: int):
-    """pandas_udf: array<string> tokens -> the doc's DISTINCT n-grams
-    (first-occurrence order; empty when the doc has fewer than n tokens),
-    each carrying the doc's distinct-gram count alongside the gram:
-    ``array<struct<g:string, n:int>>``. Referencing one UDF column from
-    several operators (size() + explode()) makes Catalyst materialize
-    an ArrowEvalPython node PER REFERENCE; packing the count into the
-    exploded element keeps the kernel at exactly ONE evaluation."""
+def counted_ngrams(docs: DataFrame, n: int) -> DataFrame:
+    """(doc_id, text) rows -> one (doc_id, n_grams, g) row per DISTINCT
+    n-gram of the text's space-split tokens, in first-occurrence order,
+    with the doc's distinct-gram count alongside (no rows when the doc
+    has fewer than n tokens). One stage yields gram AND count, so the
+    kernel evaluates exactly once per doc."""
 
-    @F.pandas_udf("array<struct<g: string, n: int>>")
-    def grams(tok_lists: pd.Series) -> pd.Series:
-        out = []
-        for t in tok_lists:
-            # dict.fromkeys = ordered distinct
-            gs = list(dict.fromkeys(_ngrams(list(t) if t is not None else [], n)))
-            out.append([{"g": g, "n": len(gs)} for g in gs])
-        return pd.Series(out)
+    def grams(doc_id, text):
+        # dict.fromkeys = ordered distinct
+        gs = list(dict.fromkeys(_ngrams((text or "").split(" "), n)))
+        return [(doc_id, len(gs), g) for g in gs]
 
-    return grams
+    return map_rows(docs, "doc_id long, n_grams long, g string", grams)
 
 
-def overlap_gate_udf(bench_grams: frozenset, n: int):
-    """pandas_udf: text -> True iff the document shares NO n-gram with
-    the benchmark set — the STREAM-safe decontamination gate. The
-    benchmark gram set ships in the UDF closure (serialized once per
-    executor, like a broadcast variable): an eval suite is small by
-    definition — thousands of documents, not trillions — so its
-    distinct grams fit executor memory, and the gate stays a stateless
-    per-row projection (no explode + regroup, which on a stream would
-    need aggregation state). Membership checks short-circuit on the
-    first hit."""
+def overlap_gate(docs: DataFrame, bench_grams: frozenset, n: int) -> DataFrame:
+    """``docs`` rows whose ``text`` shares NO n-gram with the benchmark
+    set — the STREAM-safe decontamination gate. The benchmark gram set
+    ships in the stage closure (serialized once per executor, like a
+    broadcast variable): an eval suite is small by definition —
+    thousands of documents, not trillions — so its distinct grams fit
+    executor memory, and the gate stays a stateless per-row map (no
+    explode + regroup, which on a stream would need aggregation state).
+    Membership checks short-circuit on the first hit."""
+    text = docs.columns.index("text")
 
-    @F.pandas_udf("boolean")
-    def clean(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            toks = (t or "").split(" ")
-            out.append(not any(g in bench_grams for g in _ngrams(toks, n)))
-        return pd.Series(out)
+    def keep(*row):
+        toks = (row[text] or "").split(" ")
+        return [] if any(g in bench_grams for g in _ngrams(toks, n)) else [row]
 
-    return clean
+    return map_rows(docs, docs.schema, keep)
 
 
 def collect_bench_grams(docs, n: int, mod: int, prefix_toks: int) -> frozenset:

@@ -19,13 +19,21 @@ shingle inverted index is the classic web-dedup plan (Broder). The
 documents relation at 10^12 rows would bucket the band join by
 ``bucket(band_hash)`` and rely on AQE skew splitting for hot shingles —
 hot-shingle caps are applied below (shingle DF filtered to df < MAX_DF).
+
+The Python kernels are numpy ``mapInArrow`` stages that build their
+output with ``arrowmap.column_batch``.
 """
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, functions as F
+
+from pdf2ocr_spark.arrowmap import arrow_schema, column_batch
 
 MINHASH_PRIME = 2147483647  # 2^31 - 1
 N_PERM = 16
@@ -117,40 +125,41 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
 
     Split of work (round-6 rebuild, measured at 10x/local[32]): the JVM
     ships only the cheap codegen token split; shingle construction AND
-    md5 hashing happen in the kernel, where pd.factorize dedupes the
-    batch's shingle strings first so md5 runs once per DISTINCT shingle
-    in the task (a Zipf corpus repeats shingles heavily — the round-5
-    form evaluated an interpreted Catalyst md5 tree per shingle
-    OCCURRENCE, ~2.6e6 evaluations at 10x vs ~3e4 here); the
-    16-permutation min then runs as ONE numpy broadcast +
-    minimum.reduceat over the whole Arrow batch. base_hash semantics are
-    unchanged: int(md5(utf8)[:4].hex(), 16) % p, verified hash-identical
-    against the round-5 plan at sf0.01/0.1/10x.
+    md5 hashing happen in one ``mapInArrow`` kernel, where
+    ``pyarrow.compute.dictionary_encode`` dedupes the batch's shingle
+    strings first so md5 runs once per DISTINCT shingle in the batch (a
+    Zipf corpus repeats shingles heavily — the round-5 form evaluated an
+    interpreted Catalyst md5 tree per shingle OCCURRENCE, ~2.6e6
+    evaluations at 10x vs ~3e4 here); the 16-permutation min then runs
+    as ONE numpy broadcast + minimum.reduceat over the whole Arrow
+    batch. base_hash semantics are unchanged: int(md5(utf8)[:4].hex(),
+    16) % p, verified hash-identical against the round-5 plan at
+    sf0.01/0.1/10x.
     """
-    import hashlib
+    schema = "doc_id long, sig array<long>"
+    out = arrow_schema(schema)
 
-    @F.pandas_udf("array<long>")
-    def perm_min(tokss: pd.Series) -> pd.Series:
-        if not len(tokss):
-            return pd.Series([], dtype=object)
-        sh_lists = []
-        for toks in tokss:
-            toks = list(toks)
-            if len(toks) >= SHINGLE_WORDS:
-                seen = dict.fromkeys(
-                    " ".join(toks[i : i + SHINGLE_WORDS])
-                    for i in range(len(toks) - SHINGLE_WORDS + 1)
+    def perm_min(tokss: pa.Array) -> np.ndarray:
+        # one C conversion of the flat child, sliced per row (a per-row
+        # ``to_pylist`` boxes every token through a slow path)
+        flat = tokss.flatten().to_numpy(zero_copy_only=False).tolist()
+        sh_lists, start = [], 0
+        for n in pc.list_value_length(tokss).to_numpy().tolist():
+            toks, start = flat[start : start + n], start + n
+            if n >= SHINGLE_WORDS:
+                sh_lists.append(
+                    dict.fromkeys(
+                        " ".join(toks[i : i + SHINGLE_WORDS])
+                        for i in range(n - SHINGLE_WORDS + 1)
+                    )
                 )
-                sh_lists.append(list(seen))
             else:
                 sh_lists.append([" ".join(toks)])
         lens = np.fromiter(
             (len(s) for s in sh_lists), dtype=np.int64, count=len(sh_lists)
         )
-        flat = np.concatenate(
-            [np.asarray(s, dtype=object) for s in sh_lists]
-        )
-        codes, uniq = pd.factorize(flat)
+        shingles = [s for sh in sh_lists for s in sh]
+        codes, uniq = _distinct(pa.array(shingles, pa.string()))
         uh = np.fromiter(
             (
                 int.from_bytes(hashlib.md5(u.encode()).digest()[:4], "big")
@@ -164,13 +173,33 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
         # (N_PERM, total_shingles) permuted hashes; min per row via
         # reduceat (>= 1 shingle per row by construction)
         ph = (_PERM_A[:, None] * flat_h[None, :] + _PERM_B[:, None]) % MINHASH_PRIME
-        offsets = np.zeros(len(lens), dtype=np.int64)
-        np.cumsum(lens[:-1], out=offsets[1:])
-        return pd.Series(list(np.minimum.reduceat(ph, offsets, axis=1).T))
+        return np.minimum.reduceat(ph, _offsets(lens), axis=1).T
 
     return docs.select(
-        "doc_id", perm_min(F.split(F.col("text"), " ")).alias("sig")
+        "doc_id", F.split(F.col("text"), " ").alias("toks")
+    ).mapInArrow(
+        lambda batches: (
+            column_batch([b.column(0), perm_min(b.column(1))], out)
+            for b in batches
+            if b.num_rows
+        ),
+        schema,
     )
+
+
+def _distinct(strings: pa.Array) -> tuple:
+    """(per-string dense code, the distinct strings in first-occurrence
+    order) via one ``dictionary_encode`` — a C hash table over the Arrow
+    buffer."""
+    enc = pc.dictionary_encode(strings)
+    return enc.indices.to_numpy(), enc.dictionary.to_numpy(zero_copy_only=False)
+
+
+def _offsets(lens: np.ndarray) -> np.ndarray:
+    """Start of each row's segment in the flat child (``reduceat``)."""
+    offsets = np.zeros(len(lens), dtype=np.int64)
+    np.cumsum(lens[:-1], out=offsets[1:])
+    return offsets
 
 
 def minhash_lsh_pairs(documents: DataFrame) -> DataFrame:
@@ -264,16 +293,16 @@ _JACCARD_BLOCK_SCHEMA = (
 
 def _jaccard_block_kernel(threshold: float):
     """Per-(block_i, block_j) exact intersection counts, Arrow-native and
-    numpy-vectorized (``applyInArrow``).
+    numpy-vectorized (called per block pair by _jaccard_partition_kernel).
 
     Receives both blocks' per-doc rare-shingle STRING arrays (strings, not
     hashes — exactness is unconditional). The strings never become Python
     objects: they stay in the record batch's contiguous Arrow buffers and
     the task-local dense code dictionary comes from ONE
     ``pyarrow.compute.dictionary_encode`` over the concatenated flat
-    string children (C hash table; the earlier ``applyInPandas`` +
-    ``pd.factorize`` form materialized every shipped shingle as a Python
-    str first — measured ~2/3 of the whole query's wall at 10x). The
+    string children (C hash table; the earlier pandas form factorized
+    every shipped shingle as a Python str first — measured ~2/3 of the
+    whole query's wall at 10x). The
     co-occurrence enumeration walks the dense codes with sort/repeat
     arithmetic (no Python loop over shingles), counts pairs via one
     np.unique over packed 64-bit (row_a, row_b) keys, and emits ONLY
@@ -282,19 +311,8 @@ def _jaccard_block_kernel(threshold: float):
     error, so no qualifying pair is ever dropped; the final
     round()+filter runs in Catalyst with the exact original expression).
     """
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    out_schema = pa.schema(
-        [
-            ("doc_a", pa.int64()),
-            ("doc_b", pa.int64()),
-            ("n_inter", pa.int64()),
-            ("sh_a", pa.int64()),
-            ("sh_b", pa.int64()),
-        ]
-    )
-    empty = out_schema.empty_table()
+    out_schema = arrow_schema(_JACCARD_BLOCK_SCHEMA)
+    empty = column_batch([[]] * len(out_schema), out_schema)
 
     def _flat(tbl: pa.Table) -> tuple:
         """(flat child array, per-posting row index) for one side's rows —
@@ -304,7 +322,7 @@ def _jaccard_block_kernel(threshold: float):
         row_idx = np.repeat(np.arange(len(rset), dtype=np.int64), lens)
         return rset.flatten(), row_idx
 
-    def kernel(tbl: pa.Table) -> pa.Table:
+    def kernel(tbl: pa.Table) -> pa.RecordBatch:
         side = tbl.column("side").to_numpy(zero_copy_only=False)
         diag = bool(
             tbl.column("i")[0].as_py() == tbl.column("j")[0].as_py()
@@ -452,15 +470,9 @@ def _jaccard_block_kernel(threshold: float):
         sh_a, sh_b = np.where(swap, sh_b, sh_a), np.where(swap, sh_a, sh_b)
         # lossless pre-filter: margin far above float64 rounding error
         keep = n_inter / (sh_a + sh_b - n_inter) >= threshold - 1e-4
-        return pa.Table.from_arrays(
-            [
-                pa.array(doc_a[keep], pa.int64()),
-                pa.array(doc_b[keep], pa.int64()),
-                pa.array(n_inter[keep].astype(np.int64), pa.int64()),
-                pa.array(sh_a[keep].astype(np.int64), pa.int64()),
-                pa.array(sh_b[keep].astype(np.int64), pa.int64()),
-            ],
-            schema=out_schema,
+        return column_batch(
+            [doc_a[keep], doc_b[keep], n_inter[keep], sh_a[keep], sh_b[keep]],
+            out_schema,
         )
 
     return kernel
@@ -477,8 +489,6 @@ def _jaccard_partition_kernel(threshold: float):
     deterministic straggler the pair-id spread removes. Empty partitions
     cost microseconds.) Each pair's rows are grouped here and handed to
     the exact per-pair kernel unchanged."""
-    import pyarrow as pa
-
     one_pair = _jaccard_block_kernel(threshold)
 
     def run(batches):
@@ -490,8 +500,7 @@ def _jaccard_partition_kernel(threshold: float):
             return
         pids = tbl.column("pid").to_numpy(zero_copy_only=False)
         for pid in np.unique(pids):
-            out = one_pair(tbl.filter(pa.array(pids == pid)))
-            yield from out.to_batches()
+            yield one_pair(tbl.filter(pa.array(pids == pid)))
 
     return run
 
@@ -686,77 +695,68 @@ def simhash_fingerprints(documents: DataFrame) -> DataFrame:
 
     Null texts are coalesced to '' BEFORE the split (the kernel-era
     ``(text or '').split()`` guard, re-expressed in the JVM plan):
-    ``F.split(NULL)`` yields a NULL array, the pandas_udf would receive
-    ``None`` and fail the whole task on ``len(h)``. A null/empty doc
+    ``F.split(NULL)`` yields a NULL array, the kernel would receive
+    ``None`` and fail the whole task on its length. A null/empty doc
     fingerprints as hash('') — deterministic, and it keeps every
     ``reduceat`` segment non-empty (a zero-length segment would make
     ``np.add.reduceat`` return the NEXT row's first element, not zero).
 
     Work split (round-6 rebuild, same batch-dedup move as
     minhash_signatures): the JVM ships only the codegen'd distinct-token
-    arrays; the kernel factorizes the batch's tokens so the two md5s run
-    once per DISTINCT token in the task (the round-5 form evaluated two
-    interpreted Catalyst md5 trees per token OCCURRENCE), unpacks bits
-    for the unique tokens only, gathers per-occurrence bit rows, and
-    does one ``add.reduceat`` per-row bit-sum. Zero shuffle, fused into
-    the scan; hash-identical to the round-5 plan at sf0.01/0.1/10x.
-    (Round 1 exploded tokens x 63 bits and shuffled the bits relation —
-    63x amplification, the scale killer.)
+    arrays; the ``mapInArrow`` kernel dictionary-encodes the batch's
+    flattened tokens so the two md5s run once per DISTINCT token in the
+    batch (the round-5 form evaluated two interpreted Catalyst md5 trees
+    per token OCCURRENCE), unpacks bits for the unique tokens only,
+    gathers per-occurrence bit rows, and does one ``add.reduceat``
+    per-row bit-sum. Zero shuffle, fused into the scan; hash-identical
+    to the round-5 plan at sf0.01/0.1/10x. (Round 1 exploded tokens x
+    63 bits and shuffled the bits relation — 63x amplification, the
+    scale killer.)
     """
-    import hashlib
+    schema = "doc_id long, simhash long"
+    out = arrow_schema(schema)
+    powers = (np.uint64(1) << np.arange(SIMHASH_BITS, dtype=np.uint64)).astype(
+        np.int64
+    )
+
+    def bits32(uniq: np.ndarray, suffix: str) -> np.ndarray:
+        """(len(uniq), 32) bit rows of int(md5(u + suffix)[:4]); column b
+        holds bit b (little-endian)."""
+        h = np.fromiter(
+            (
+                int.from_bytes(hashlib.md5((u + suffix).encode()).digest()[:4], "big")
+                for u in uniq
+            ),
+            dtype=np.int64,
+            count=len(uniq),
+        ).astype(np.uint32)
+        return np.unpackbits(
+            h.view(np.uint8).reshape(-1, 4)[:, ::-1], axis=1, bitorder="big"
+        )[:, ::-1]
+
+    def simhash_np(tokss: pa.Array) -> np.ndarray:
+        lens = pc.list_value_length(tokss).to_numpy(zero_copy_only=False)
+        codes, uniq = _distinct(tokss.flatten())
+        # bits computed for UNIQUE tokens, gathered per occurrence
+        ubits = np.concatenate(
+            [bits32(uniq, ""), bits32(uniq, "#2")[:, : SIMHASH_BITS - 32]], axis=1
+        ).astype(np.int64)
+        ones = np.add.reduceat(ubits[codes], _offsets(lens), axis=0)
+        s = 2 * ones - lens[:, None]  # sum of (+-1) per bit, per row
+        return ((s > 0) * powers).sum(axis=1)
 
     toks = F.array_distinct(F.split(F.coalesce(F.col("text"), F.lit("")), " "))
-
-    @F.pandas_udf("long")
-    def simhash_np(tokss: pd.Series) -> pd.Series:
-        lens = np.fromiter((len(t) for t in tokss), dtype=np.int64, count=len(tokss))
-        if len(lens) == 0:
-            return pd.Series([], dtype=np.int64)
-        flat = np.concatenate([np.asarray(t, dtype=object) for t in tokss])
-        codes, uniq = pd.factorize(flat)
-        uh1 = np.fromiter(
-            (
-                int.from_bytes(hashlib.md5(u.encode()).digest()[:4], "big")
-                for u in uniq
-            ),
-            dtype=np.int64,
-            count=len(uniq),
-        ).astype(np.uint32)
-        uh2 = np.fromiter(
-            (
-                int.from_bytes(
-                    hashlib.md5((u + "#2").encode()).digest()[:4], "big"
-                )
-                for u in uniq
-            ),
-            dtype=np.int64,
-            count=len(uniq),
-        ).astype(np.uint32)
-        # little-endian bit order per 32-bit hash: column b holds bit b;
-        # bits computed for UNIQUE tokens, gathered per occurrence
-        b1 = np.unpackbits(
-            uh1.view(np.uint8).reshape(-1, 4)[:, ::-1], axis=1, bitorder="big"
-        )[:, ::-1]
-        b2 = np.unpackbits(
-            uh2.view(np.uint8).reshape(-1, 4)[:, ::-1], axis=1, bitorder="big"
-        )[:, ::-1]
-        ubits = np.concatenate([b1, b2[:, : SIMHASH_BITS - 32]], axis=1).astype(
-            np.int64
-        )
-        bits = ubits[codes]
-        offsets = np.zeros(len(lens), dtype=np.int64)
-        np.cumsum(lens[:-1], out=offsets[1:])
-        ones = np.add.reduceat(bits, offsets, axis=0)
-        s = 2 * ones - lens[:, None]  # sum of (+-1) per bit, per row
-        powers = (np.uint64(1) << np.arange(SIMHASH_BITS, dtype=np.uint64)).astype(
-            np.int64
-        )
-        return pd.Series(((s > 0) * powers).sum(axis=1))
-
     # fan out before hashing: a single-split input would serialize the
     # kernel (see _fan_out; no-op cost at production split counts)
     docs = _fan_out(with_near_dup_corpus(documents))
-    return docs.select("doc_id", simhash_np(toks).alias("simhash"))
+    return docs.select("doc_id", toks.alias("toks")).mapInArrow(
+        lambda batches: (
+            column_batch([b.column(0), simhash_np(b.column(1))], out)
+            for b in batches
+            if b.num_rows
+        ),
+        schema,
+    )
 
 
 def simhash_pairs(documents: DataFrame, max_hamming: int = 8) -> DataFrame:

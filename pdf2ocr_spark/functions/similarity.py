@@ -1,7 +1,8 @@
 """Similarity search over the embeddings relation (array<float>[64]).
 
 - ``cosine_topk``     brute-force exact top-k for a deterministic query set
-                      (baseline; O(Q*N) with Q small -> broadcast join)
+                      (baseline; O(Q*N) with Q small, shipped in the
+                      scoring kernel's closure)
 - ``ann_lsh_topk``    random-hyperplane LSH bucketing (sign-bit sketch) +
                       top-k within bucket — the scale path: buckets shrink
                       the candidate set ~2^planes-fold; at 10^12 rows the
@@ -13,15 +14,20 @@ DuckDB oracle (functions/similarity_sql.py) computes bit-comparable scores
 (rounded to 4 decimals for the hash gate).
 
 Dot products, norms, LSH signs and IVF cells are numpy kernels over Arrow
-batches (see "vectorized scoring kernels" below), not per-row Python UDFs.
+batches (see "vectorized scoring kernels" below), not per-row Python UDFs:
+every stage is ``mapInArrow`` (``applyInArrow`` for the per-bucket pair
+kernel) reading embeddings as one float64 matrix from the list column's
+flat child and building its output with ``arrowmap.column_batch``.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, functions as F
 
+from pdf2ocr_spark.arrowmap import arrow_schema, column_batch
 from pdf2ocr_spark.functions.dedup import _fan_out
 
 QUERY_STRIDE = 50  # vec_id % 50 == 0 -> deterministic query set
@@ -37,10 +43,6 @@ def _query_filter(vec_id: Column) -> Column:
     quadratic — with an unbounded stride the query side grows with N and the
     broadcast nested-loop scores O(N^2/stride) pairs."""
     return (vec_id % QUERY_STRIDE == 0) & (vec_id < QUERY_STRIDE * N_QUERIES)
-
-
-def _as_double(col) -> Column:
-    return F.transform(col, lambda x: x.cast("double"))
 
 
 # ---------------------------------------------------------------------------
@@ -79,25 +81,18 @@ def _seq_dots(E: np.ndarray, Q: np.ndarray) -> np.ndarray:
     return acc
 
 
-def _stack(col) -> np.ndarray:
-    return np.stack([np.asarray(v, dtype=np.float64) for v in col])
-
-
-def _accumulate(it, target: int = 8192):
-    """Concatenate the session's small Arrow batches (the extraction
-    kernel tunes maxRecordsPerBatch=128) into slabs big enough for the
-    numpy kernels to amortize."""
-    buf, n = [], 0
-    for pdf in it:
-        if len(pdf) == 0:
-            continue
-        buf.append(pdf)
-        n += len(pdf)
-        if n >= target:
-            yield pd.concat(buf, ignore_index=True)
-            buf, n = [], 0
-    if buf:
-        yield pd.concat(buf, ignore_index=True)
+def _matrix(col: pa.Array) -> np.ndarray:
+    """A list column (float or double embeddings) as one (rows, dim)
+    float64 matrix, read from its flattened child — the float -> double
+    widening is exact, as Spark's cast is. Embeddings are outside input:
+    a null or a length that differs from the first row's is a
+    ValueError, not a silently misaligned matrix."""
+    lens = pc.list_value_length(col).to_numpy(zero_copy_only=False)
+    if col.null_count or (len(lens) and (lens != lens[0]).any()):
+        raise ValueError("embeddings must be non-null and of one length")
+    dim = int(lens[0]) if len(lens) else 0
+    flat = col.flatten().to_numpy(zero_copy_only=False)
+    return flat.astype(np.float64).reshape(len(lens), dim)
 
 
 def _collect_queries(embeddings: DataFrame) -> tuple:
@@ -106,7 +101,7 @@ def _collect_queries(embeddings: DataFrame) -> tuple:
     centroid collect), sorted by query_id."""
     rows = (
         embeddings.where(_query_filter(F.col("vec_id")))
-        .select("vec_id", _as_double(F.col("embedding")).alias("e"))
+        .select("vec_id", F.col("embedding").alias("e"))
         .collect()
     )
     rows.sort(key=lambda r: r["vec_id"])
@@ -156,51 +151,52 @@ def _topk_candidates(
             np.argmax(_seq_dots(Q, C), axis=1) if len(Q) else np.zeros(0, int)
         )
 
-    def kernel(it):
-        for pdf in _accumulate(it):
-            if len(qids) == 0:
-                return
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            E = _stack(pdf["e"])
-            nrm = _seq_norms(E)
-            s = _seq_dots(E, Q) / (qn[None, :] * nrm[:, None])
-            allowed = ids[:, None] != qids[None, :]
-            if mode == "lsh":
-                bucket = ((_seq_dots(E, P) > 0).astype(np.int64) * pow2).sum(
-                    axis=1
-                )
-                allowed &= (
-                    bucket[:, None, None] == qprobes[None, :, :]
-                ).any(axis=2)
-            elif mode == "ivf":
-                cell = np.argmax(_seq_dots(E, C), axis=1)
-                allowed &= cell[:, None] == qcell[None, :]
-            out_q, out_n, out_s = [], [], []
-            for j in range(len(qids)):
-                idx = np.flatnonzero(allowed[:, j])
-                if len(idx) == 0:
-                    continue
-                if len(idx) > k:
-                    order = np.lexsort((ids[idx], -s[idx, j]))[:k]
-                    idx = idx[order]
-                out_q.append(np.full(len(idx), qids[j], dtype=np.int64))
-                out_n.append(ids[idx])
-                out_s.append(s[idx, j])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(out_q),
-                        "neighbor_id": np.concatenate(out_n),
-                        "score": np.concatenate(out_s),
-                    }
-                )
+    schema = "query_id long, neighbor_id long, score double"
+    out = arrow_schema(schema)
 
-    base = _fan_out(
-        embeddings.select("vec_id", _as_double(F.col("embedding")).alias("e"))
-    )
-    return base.mapInPandas(
-        kernel, schema="query_id long, neighbor_id long, score double"
-    )
+    def score(slab: pa.Table) -> pa.RecordBatch:
+        ids = slab.column("vec_id").to_numpy()
+        E = _matrix(slab.column("embedding").combine_chunks())
+        nrm = _seq_norms(E)
+        s = _seq_dots(E, Q) / (qn[None, :] * nrm[:, None])
+        allowed = ids[:, None] != qids[None, :]
+        if mode == "lsh":
+            bucket = ((_seq_dots(E, P) > 0).astype(np.int64) * pow2).sum(axis=1)
+            allowed &= (bucket[:, None, None] == qprobes[None, :, :]).any(axis=2)
+        elif mode == "ivf":
+            cell = np.argmax(_seq_dots(E, C), axis=1)
+            allowed &= cell[:, None] == qcell[None, :]
+        out_q, out_n, out_s = [], [], []
+        for j in range(len(qids)):
+            idx = np.flatnonzero(allowed[:, j])
+            if len(idx) > k:
+                order = np.lexsort((ids[idx], -s[idx, j]))[:k]
+                idx = idx[order]
+            out_q.append(np.full(len(idx), qids[j], dtype=np.int64))
+            out_n.append(ids[idx])
+            out_s.append(s[idx, j])
+        return column_batch(
+            [np.concatenate(out_q), np.concatenate(out_n), np.concatenate(out_s)], out
+        )
+
+    def kernel(batches):
+        """Score slabs of >= 8192 rows: the session's small Arrow batches
+        (the extraction kernel tunes maxRecordsPerBatch=128) are too
+        small for the numpy kernels to amortize."""
+        if len(qids) == 0:
+            return
+        buf, n = [], 0
+        for b in batches:
+            buf.append(b)
+            n += b.num_rows
+            if n >= 8192:
+                yield score(pa.Table.from_batches(buf))
+                buf, n = [], 0
+        if n:
+            yield score(pa.Table.from_batches(buf))
+
+    base = _fan_out(embeddings.select("vec_id", "embedding"))
+    return base.mapInArrow(kernel, schema)
 
 
 def _rank_topk(cand: DataFrame, k: int) -> DataFrame:
@@ -281,7 +277,7 @@ def ivf_topk(
             embeddings.where(
                 (F.col("vec_id") < n_cells) | _query_filter(F.col("vec_id"))
             )
-            .select("vec_id", _as_double(F.col("embedding")).alias("e"))
+            .select("vec_id", F.col("embedding").alias("e"))
             .collect()
         )
         rows.sort(key=lambda r: r["vec_id"])
@@ -311,17 +307,33 @@ NEAR_DUP_MIN_BP = 9000  # near-dup threshold, fixed-point (cos >= 0.9)
 
 
 def with_near_dup_vectors(embeddings: DataFrame) -> DataFrame:
-    """Benchmark corpus for embedding near-dup detection: union the
-    vectors with a perturbed copy of every NEAR_DUP_STRIDE-th one
+    """Benchmark corpus for embedding near-dup detection, bucketed: the
+    vectors plus a perturbed copy of every NEAR_DUP_STRIDE-th one
     (constant additive shift in double space), so true near-duplicates
     (cos ~0.99) exist by construction against a ~[-0.5, 0.5] random-pair
-    background. Twin ids = vec_id + 10^7 (mirrors dedup.with_near_dup_corpus)."""
-    base = embeddings.select("vec_id", _as_double(F.col("embedding")).alias("e"))
-    twins = base.where(F.col("vec_id") % NEAR_DUP_STRIDE == 0).select(
-        (F.col("vec_id") + 10_000_000).alias("vec_id"),
-        F.transform("e", lambda x: x + F.lit(NEAR_DUP_SHIFT)).alias("e"),
+    background, as (vec_id, e: array<double>, bucket) rows where bucket
+    is the 8-plane LSH bucket (sequential fold — bit-identical to the
+    interpreted plane-sign HOFs it replaced). Twin ids = vec_id + 10^7
+    (mirrors dedup.with_near_dup_corpus). One ``mapInArrow`` stage: the
+    widening cast and the shift are the same IEEE operations Catalyst's
+    cast and ``x + 0.02`` lambda evaluated, done in numpy."""
+    P = np.array([_plane_coefs(p) for p in range(N_PLANES)], dtype=np.float64)
+    pow2 = 1 << np.arange(N_PLANES, dtype=np.int64)
+    schema = "vec_id long, e array<double>, bucket long"
+    out = arrow_schema(schema)
+
+    def widen(batch: pa.RecordBatch) -> pa.RecordBatch:
+        ids = batch.column(0).to_numpy()
+        E = _matrix(batch.column(1))
+        twin = ids % NEAR_DUP_STRIDE == 0
+        ids = np.concatenate([ids, ids[twin] + 10_000_000])
+        E = np.concatenate([E, E[twin] + NEAR_DUP_SHIFT])
+        bucket = ((_seq_dots(E, P) > 0).astype(np.int64) * pow2).sum(axis=1)
+        return column_batch([ids, E, bucket], out)
+
+    return embeddings.select("vec_id", "embedding").mapInArrow(
+        lambda batches: (widen(b) for b in batches if b.num_rows), schema
     )
-    return base.unionByName(twins)
 
 
 def embedding_near_dup_pairs(embeddings: DataFrame) -> DataFrame:
@@ -332,49 +344,35 @@ def embedding_near_dup_pairs(embeddings: DataFrame) -> DataFrame:
     below 1.0 is inherent LSH semantics (a twin can flip a near-zero
     plane sign), deterministically identical in both engines.
 
-    Round 6: the bucket is assigned by the vectorized plane kernel
-    (sequential fold — bit-identical to the interpreted plane-sign HOFs
-    it replaces) and the within-bucket pairing runs as ONE grouped
-    kernel (applyInPandas per bucket): each vector's 64 doubles cross
-    the wire ONCE per bucket instead of once per candidate pair, and the
+    Round 6: the within-bucket pairing runs as ONE grouped kernel
+    (``applyInArrow`` per bucket): each vector's 64 doubles cross the
+    wire ONCE per bucket instead of once per candidate pair, and the
     B x B dot-product block is numpy instead of per-pair interpreted
     folds. One shuffle (by bucket), output only the cos >= 0.9 pairs."""
-    P = np.array([_plane_coefs(p) for p in range(N_PLANES)], dtype=np.float64)
-    pow2 = 1 << np.arange(N_PLANES, dtype=np.int64)
+    schema = "vec_a long, vec_b long, cos_bp long"
+    out = arrow_schema(schema)
 
-    @F.pandas_udf("long")
-    def bucket_of(embs: pd.Series) -> pd.Series:
-        if len(embs) == 0:
-            return pd.Series([], dtype=np.int64)
-        E = _stack(embs)
-        return pd.Series(((_seq_dots(E, P) > 0).astype(np.int64) * pow2).sum(axis=1))
-
-    def pairs_in_bucket(key, pdf: pd.DataFrame):
-        order = np.argsort(pdf["vec_id"].to_numpy(dtype=np.int64))
-        ids = pdf["vec_id"].to_numpy(dtype=np.int64)[order]
-        E = _stack(pdf["e"])[order]
-        n = len(ids)
-        if n < 2:
-            return pd.DataFrame({"vec_a": [], "vec_b": [], "cos_bp": []}).astype(
-                {"vec_a": np.int64, "vec_b": np.int64, "cos_bp": np.int64}
-            )
+    def pairs_in_bucket(tbl: pa.Table) -> pa.Table:
+        ids = tbl.column("vec_id").to_numpy()
+        order = np.argsort(ids)
+        ids = ids[order]
+        E = _matrix(tbl.column("e").combine_chunks())[order]
         nrm = _seq_norms(E)
         dots = _seq_dots(E, E)  # (n, n) sequential-fold grid
         # cos_bp exactly as the Catalyst form: dot / (nrm_a * nrm_b)
         # * 10000 + 0.5, floored — nrm_a is the SMALLER id's norm
         cos = dots / (nrm[:, None] * nrm[None, :]) * 10000 + 0.5
-        ia, ib = np.triu_indices(n, k=1)  # vec_a < vec_b via sorted ids
+        ia, ib = np.triu_indices(len(ids), k=1)  # vec_a < vec_b via sorted ids
         bp = np.floor(cos[ia, ib]).astype(np.int64)
         keep = bp >= NEAR_DUP_MIN_BP
-        return pd.DataFrame(
-            {"vec_a": ids[ia[keep]], "vec_b": ids[ib[keep]], "cos_bp": bp[keep]}
+        return pa.Table.from_batches(
+            [column_batch([ids[ia[keep]], ids[ib[keep]], bp[keep]], out)]
         )
 
-    bucketed = with_near_dup_vectors(embeddings).withColumn(
-        "bucket", bucket_of(F.col("e"))
-    )
-    return bucketed.groupBy("bucket").applyInPandas(
-        pairs_in_bucket, schema="vec_a long, vec_b long, cos_bp long"
+    return (
+        with_near_dup_vectors(embeddings)
+        .groupBy("bucket")
+        .applyInArrow(pairs_in_bucket, schema)
     )
 
 
@@ -437,28 +435,26 @@ def kmeans_train(
     # double itself, and x - floor(x) is exact by Sterbenz. Verified
     # hash-identical (trained centroids feed the bit-exact unrolled
     # DuckDB Lloyd oracle, the most sensitive sink in the suite).
-    @F.pandas_udf("array<long>")
-    def quant_np(embs: pd.Series) -> pd.Series:
-        if len(embs) == 0:
-            return pd.Series([], dtype=object)
-        M = _stack(embs)
+    quant = "vec_id long, eq array<long>"
+    quant_out = arrow_schema(quant)
+
+    def quant_np(batch: pa.RecordBatch) -> pa.RecordBatch:
+        M = _matrix(batch.column(1))
         nrm = _seq_norms(M)
         X = (M / nrm[:, None]) * KMEANS_SCALE
         fl = np.floor(X)
         q = (fl + (X - fl >= 0.5)).astype(np.int64)
-        return pd.Series(list(q))
+        return column_batch([batch.column(0), q], quant_out)
 
     # fan out BEFORE the checkpoint: the single-row-group scan would pin
     # every Lloyd round's assign+aggregate job to one task (measured
     # 0.85 s/round -> ~0.2 s/round at 10x); the per-cell reductions are
     # integer sums, so the result is partition-independent by design
     base = (
-        _fan_out(
-            embeddings.select(
-                "vec_id", _as_double(F.col("embedding")).alias("e")
-            )
+        _fan_out(embeddings.select("vec_id", "embedding"))
+        .mapInArrow(
+            lambda batches: (quant_np(b) for b in batches if b.num_rows), quant
         )
-        .select("vec_id", quant_np(F.col("e")).alias("eq"))
         .localCheckpoint()  # iterated over; don't replay the scan per round
     )
 
@@ -493,21 +489,20 @@ def kmeans_train(
     out_schema = "cell long, n long, obj_bp long, " + ", ".join(
         f"s{i} long" for i in range(dim)
     )
+    partials = arrow_schema(out_schema)
     history = []
     for _ in range(iters):
         C = np.asarray(cents, dtype=np.float64)
 
-        def lloyd_partials(it, C=C, dim=dim):
+        def lloyd_partials(batches, C=C, dim=dim):
             K = C.shape[0]
             n_by = np.zeros(K, dtype=np.int64)
             obj_by = np.zeros(K, dtype=np.int64)
             s_by = np.zeros((K, dim), dtype=np.int64)
-            for pdf in it:
-                if not len(pdf):
+            for b in batches:
+                if not b.num_rows:
                     continue
-                E = np.stack(
-                    [np.asarray(v, dtype=np.int64) for v in pdf["eq"]]
-                )
+                E = b.column(1).flatten().to_numpy().reshape(b.num_rows, dim)
                 Ef = E.astype(np.float64) / KMEANS_SCALE
                 acc = np.zeros((Ef.shape[0], K), dtype=np.float64)
                 for d in range(C.shape[1]):
@@ -520,17 +515,10 @@ def kmeans_train(
                 np.add.at(s_by, cell, E)
             nz = np.nonzero(n_by)[0]
             if len(nz):
-                out = {
-                    "cell": nz.astype(np.int64),
-                    "n": n_by[nz],
-                    "obj_bp": obj_by[nz],
-                }
-                for i in range(dim):
-                    out[f"s{i}"] = s_by[nz, i]
-                yield pd.DataFrame(out)
+                yield column_batch([nz, n_by[nz], obj_by[nz], *s_by[nz].T], partials)
 
         stats = (
-            base.mapInPandas(lloyd_partials, out_schema)
+            base.mapInArrow(lloyd_partials, out_schema)
             .groupBy("cell")
             .agg(
                 F.sum("n").alias("n"),

@@ -1,4 +1,4 @@
-"""Pure-Python/numpy/pandas compute kernels.
+"""Pure-Python/numpy compute kernels.
 
 Nothing in this package imports pyspark: every function here is
 unit-testable without a JVM and is wrapped by thin Arrow-batch stages in

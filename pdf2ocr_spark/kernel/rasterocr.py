@@ -98,13 +98,6 @@ def _glyph(ch: str) -> np.ndarray:
     return g
 
 
-@lru_cache(maxsize=None)
-def _decode_table() -> dict:
-    return {
-        _glyph(ch).tobytes(): ch for ch in CHARSET if ch not in (" ", "\n")
-    }
-
-
 def _layout(text: str) -> List[str]:
     """Hard-wrap text into PAGE_COLS-char render lines, preserving
     explicit newlines (each source line may span several render lines)."""

@@ -222,13 +222,19 @@ def read_spans(spark: SparkSession, output_dir: str) -> DataFrame:
     )
 
 
-def read_lineage(spark: SparkSession, output_dir: str) -> DataFrame:
+def decode_lineage(combined: DataFrame) -> DataFrame:
+    """The lineage rows of a ``CHECKPOINT_OUT_SCHEMA`` relation (the
+    kernel's lineage-mode output or a run's combined sink) as typed
+    columns: ``part_id`` plus every ``LINEAGE_JSON_SCHEMA`` field."""
     return (
-        _combined(spark, output_dir)
-        .where(F.col("kind") == LINEAGE_KIND)
+        combined.where(F.col("kind") == LINEAGE_KIND)
         .select("part_id", F.from_json("text", LINEAGE_JSON_SCHEMA).alias("m"))
         .select("part_id", "m.*")
     )
+
+
+def read_lineage(spark: SparkSession, output_dir: str) -> DataFrame:
+    return decode_lineage(_combined(spark, output_dir))
 
 
 def summary(spark: SparkSession, output_dir: str) -> DataFrame:

@@ -1269,39 +1269,35 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the gram string — same plan, narrower shuffle."""
     # fan out: the docs parquet is one row group -> one scan split; the
     # training-side Arrow gram kernel would otherwise run on ONE core
-    docs = _fan_out(_documents(spark, sf_dir))
-    toks = F.split("text", " ")
+    docs = _fan_out(_documents(spark, sf_dir).select("doc_id", "text"))
 
-    # gram construction is a VECTORIZED Arrow kernel, not nested
-    # Catalyst HOFs: transform+array_join+slice lambdas run INTERPRETED
-    # per element (perf landmine #9 — measured 96.8 s at sf0.1 vs
-    # ~1 s kernelized), and referencing the expression twice (size +
-    # explode) re-inlines the whole tree via CollapseProject
-    from pdf2ocr_spark.functions.decontam import counted_ngrams_udf
+    # gram construction is a batched Arrow kernel, not nested Catalyst
+    # HOFs: transform+array_join+slice lambdas run INTERPRETED per
+    # element (perf landmine #9 — measured 96.8 s at sf0.1 vs ~1 s
+    # kernelized). Each (doc, gram) row carries the doc's gram count, so
+    # the kernel runs once per doc; the eval prefix is re-joined with
+    # spaces, which the kernel's split undoes exactly
+    from pdf2ocr_spark.functions.decontam import counted_ngrams
 
-    # counted grams: one explode yields gram AND per-doc total, so the
-    # kernel evaluates exactly once on the training side (size() +
-    # explode() of one UDF column would each get their own
-    # ArrowEvalPython node); the benchmark side keeps only the gram
-    grams = counted_ngrams_udf(DECONTAM_N)
+    prefix = F.slice(F.split("text", " "), 1, DECONTAM_PREFIX_TOKS)
     bench_grams = (
-        docs.where(F.col("doc_id") % DECONTAM_MOD == 0)
-        .select(F.explode(grams(F.slice(toks, 1, DECONTAM_PREFIX_TOKS))).alias("x"))
-        .select(F.col("x.g").alias("g"))
+        counted_ngrams(
+            docs.where(F.col("doc_id") % DECONTAM_MOD == 0).select(
+                "doc_id", F.array_join(prefix, " ").alias("text")
+            ),
+            DECONTAM_N,
+        )
+        .select("g")
         .distinct()
     )
-    train_grams = docs.select(
-        "doc_id", F.explode(grams(toks)).alias("x")
-    ).select(
-        "doc_id", F.col("x.n").alias("n_grams"), F.col("x.g").alias("g")
-    )
+    train_grams = counted_ngrams(docs, DECONTAM_N)
     return (
         train_grams.join(F.broadcast(bench_grams), "g")
         .groupBy("doc_id", "n_grams")
         .agg(F.count("*").alias("n_shared"))
         .select(
             "doc_id",
-            F.col("n_grams").cast("long").alias("n_grams"),
+            "n_grams",
             F.col("n_shared").cast("long").alias("n_shared"),
             F.expr("(20000 * n_shared + n_grams) div (2 * n_grams)")
             .cast("long")

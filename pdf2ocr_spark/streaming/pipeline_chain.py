@@ -40,14 +40,13 @@ def run_chained_stream(
     adds the stream-safe decontamination stage: documents sharing any
     n-gram with the benchmark set emit no chunks — a stateless per-row
     gate with the gram set closure-shipped per executor."""
-    from pdf2ocr_spark.functions.decontam import overlap_gate_udf
+    from pdf2ocr_spark.functions.decontam import overlap_gate
     from pdf2ocr_spark.plans.queries import DECONTAM_N
 
     def transform(stream):
         deduped = streaming_dedup_keep(stream)
         if bench_grams is not None:
-            gate = overlap_gate_udf(bench_grams, DECONTAM_N)
-            deduped = deduped.where(gate("text"))
+            deduped = overlap_gate(deduped, bench_grams, DECONTAM_N)
         return clean_transform(deduped)
 
     start_file_stream(

@@ -103,20 +103,24 @@ def test_one_partition_key_and_no_pandas_extraction():
     assert [p for p, src in sources.items() if "def stripe_key(" in src] == [
         os.path.join("operators", "extract.py")
     ]
-    # one Arrow row map: no pandas stage in operators/ or plans/, one
-    # RecordBatch builder, and structs always arrive as dicts
+    # one Arrow idiom: no pandas stage in operators/, plans/ or
+    # functions/, pandas imported only by streaming/'s stateful
+    # applyInPandasWithState, one batch builder, and structs always
+    # arrive as dicts
     for path, src in sources.items():
-        if path.split(os.sep)[0] in ("operators", "plans"):
-            assert "mapInPandas" not in src and "import pandas" not in src, path
-    assert [p for p, src in sources.items() if "RecordBatch.from_arrays" in src] == [
+        top = path.split(os.sep)[0]
+        if top in ("operators", "plans", "functions"):
+            for idiom in ("pandas_udf", "mapInPandas", "applyInPandas"):
+                assert idiom not in src, (path, idiom)
+        if top != "streaming":
+            assert "import pandas" not in src and "from pandas" not in src, path
+    builders = ("RecordBatch.from_arrays", "Table.from_arrays")
+    assert [p for p, src in sources.items() if any(b in src for b in builders)] == [
         "arrowmap.py"
     ]
     assert "isinstance(meta, dict)" not in text
     # one extraction path: the fused kernel, with no page-parallel copy
     assert not os.path.exists(os.path.join(PACKAGE, "operators", "exploded.py"))
-    for path, src in sources.items():
-        if path.startswith("operators" + os.sep):
-            assert "pandas_udf" not in src and "applyInPandas" not in src, path
 
     def callers(src):
         """The functions in ``src`` that call ``extract_from_pages``."""

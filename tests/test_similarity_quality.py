@@ -74,9 +74,9 @@ def test_ivf_scales_to_k256(spark):
     # plan audit: no literal explosion (the K=256 x 64-dim matrix would be
     # ~16k inlined literals — it ships in the kernel closure instead), and
     # since round 6 the probe matching happens INSIDE the vectorized
-    # kernel: the plan has no join node at all, just MapInPandas -> window
+    # kernel: the plan has no join node at all, just MapInArrow -> window
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     assert "Join" not in plan
     assert len(plan) < 50_000, f"plan blew up to {len(plan)} chars"
 
@@ -197,6 +197,25 @@ def test_kmeans_train_empty_raises(spark):
     empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
     with pytest.raises(ValueError, match="empty"):
         kmeans_train(empty)
+
+
+def test_embedding_matrix_reads_the_flat_child_and_rejects_bad_rows():
+    """Kernels read embeddings as one float64 matrix from the list
+    column's flattened child: a sliced batch reads only its own rows
+    (``.values`` would start at the parent's first row), and a null or
+    ragged embedding raises instead of misaligning the matrix."""
+    import pyarrow as pa
+
+    from pdf2ocr_spark.functions.similarity import _matrix
+
+    f32 = pa.list_(pa.float32())
+    sliced = pa.array([[9.0, 9.0], [0.5, 2.0], [3.0, 4.0]], f32).slice(1)
+    M = _matrix(sliced)
+    assert M.dtype == "float64" and M.tolist() == [[0.5, 2.0], [3.0, 4.0]]
+    assert _matrix(pa.array([], f32)).shape == (0, 0)
+    for bad in ([[1.0, 2.0], [3.0]], [[1.0, 2.0], None]):
+        with pytest.raises(ValueError, match="one length"):
+            _matrix(pa.array(bad, f32))
 
 
 def test_trained_ivf_recall_beats_untrained(spark, sf_dir):
