@@ -28,19 +28,7 @@ from pdf2ocr_spark.session import default_cpus
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = default_cpus()
-#: Official N vs 4N pair = 4 vs 16 pinned WORKER cores under the
-#: EXECUTOR MODEL (round-3 protocol, data in BENCH/BASELINE.md): an
-#: "executor" is 4 worker cores + 1 JVM service core, so the pair runs
-#: on 5 vs 20 total cores — an exact 4x resource ratio, the faithful
-#: single-box stand-in for N vs 4N executors each of which brings its
-#: own JVM (scan/shuffle/sink service) capacity. Round 2 granted a
-#: CONSTANT +1 JVM core at every level, which starves JVM-side service
-#: work as workers grow — the per-core throughput curve (BASELINE.md)
-#: shows the decline starts immediately rather than at a bandwidth
-#: cliff, and granting proportional JVM capacity lifts 4v16 from 0.785
-#: to ~0.85. The HEADLINE is the pinned 4N (16-worker) run; the
-#: full-width run is recorded as informational "fullbox" (host/VM noise
-#: makes full-box walls non-reproducible across harnesses).
+#: the N vs 4N pair of pinned worker cores; the headline is the 4N run
 SMALL_CPUS = max(1, CPUS // 8)
 BIG_CPUS = min(CPUS, SMALL_CPUS * 4)
 SKIP_SCALING = os.environ.get("BENCH_SKIP_SCALING", "") == "1"
@@ -55,17 +43,6 @@ BENCH_ITERS = int(os.environ.get("BENCH_ITERS", "8"))
 #: repeat the timed extraction this many times per iteration and divide:
 #: lets a cache-resident micro-corpus accumulate a measurable wall
 BENCH_LOOPS = int(os.environ.get("BENCH_LOOPS", "1"))
-#: BENCH_CURVE="2,4,8,12,16,24,32" -> per-core throughput curve mode:
-#: run extract_run at each pinned level and print ONE JSON line with the
-#: curve (ledger evidence for the DRAM-ceiling analysis; not part of the
-#: driver's per-round contract)
-BENCH_CURVE = os.environ.get("BENCH_CURVE", "")
-#: BENCH_PROBE=1 (curve mode only) -> additionally time the same loop
-#: structure over a 2,000-doc slice per level: its wall is the per-job
-#: FIXED overhead (planning + scheduling + Python-worker round-trip,
-#: kernel work ~0.1s), letting tiny-corpus controls be decomposed into
-#: fixed overhead vs scalable kernel work
-BENCH_PROBE = os.environ.get("BENCH_PROBE", "") == "1"
 #: the scaling runs tile the corpus to this many effective documents so the
 #: measurement amortizes fixed job overhead (kernel work is ~0.25 ms/doc/core;
 #: see BENCH/BASELINE.md protocol)
@@ -202,15 +179,10 @@ def extract_run(
     striped at write time — see materialize_corpus).
 
     The run executes in a subprocess pinned with ``taskset`` to the N
-    worker cores PLUS the JVM service cores the executor model grants
-    (1 per 4 workers — see the SMALL_CPUS note): a bare ``local[N]``
-    only caps task slots while JVM/worker threads spill onto idle cores
-    (inflating small-N throughput), pinning to exactly N cores makes
-    those same JVM threads steal worker time in proportion 1/N
-    (deflating small-N throughput, producing super-linear "efficiency"),
-    and a constant +1 starves JVM-side scan/Arrow/sink service as
-    workers grow. Proportional provisioning keeps the whole executor —
-    workers AND their JVM service share — the scaled quantity.
+    worker cores plus one JVM service core per 4 workers (at least one),
+    capped at the box: a bare ``local[N]`` only caps task slots while
+    JVM/worker threads spill onto idle cores, and pinning to exactly N
+    cores makes those JVM threads steal worker time in proportion 1/N.
     """
     import subprocess
     import sys
@@ -236,22 +208,9 @@ for _ in range({iters}):
     for _ in range({BENCH_LOOPS}):
         extract_spans_arrow(docs).write.format("noop").mode("overwrite").save()
     print("WALL_SEC", (time.perf_counter() - t0) / {BENCH_LOOPS})
-if {BENCH_PROBE}:
-    for _ in range({iters}):
-        t0 = time.perf_counter()
-        for _ in range({BENCH_LOOPS}):
-            extract_spans_arrow(probe).write.format("noop").mode("overwrite").save()
-        print("OVERHEAD_SEC", (time.perf_counter() - t0) / {BENCH_LOOPS})
 spark.stop()
 """
-    # Worker cores + JVM service cores, box-capped. Official protocol
-    # (executor model): 1 JVM core per 4 workers, minimum 1 — a real
-    # N- vs 4N-executor cluster scales JVM capacity WITH the workers.
-    # BENCH_JVM_PER overrides the ratio; BENCH_JVM_PER=0 reproduces the
-    # round-2 constant "+1 JVM core" convention for comparison.
-    jvm_per = int(os.environ.get("BENCH_JVM_PER", "4"))
-    jvm_cores = max(1, cpus // jvm_per) if jvm_per else 1
-    pin_hi = min(CPUS, cpus + jvm_cores) - 1
+    pin_hi = min(CPUS, cpus + max(1, cpus // 4)) - 1
     cmd = ["taskset", "-c", f"0-{pin_hi}", sys.executable, "-c", script]
     cwd = os.path.dirname(os.path.abspath(__file__))
     proc = None
@@ -280,7 +239,7 @@ spark.stop()
     # the reproducible number; the full sorted list is kept for spread
     # transparency and the median recorded alongside.
     wall = walls[0]
-    result = {
+    return {
         "cpus": cpus,
         "wall_sec": round(wall, 3),
         "wall_median_sec": round(walls[len(walls) // 2], 3),
@@ -291,16 +250,6 @@ spark.stop()
         "pages_per_sec": round(counts["pages"] / wall, 2),
         "counts": counts,
     }
-    overheads = sorted(
-        float(l.split()[1])
-        for l in proc.stdout.splitlines()
-        if l.startswith("OVERHEAD_SEC")
-    )
-    if overheads:
-        oh = overheads[0]  # min, same additive-noise statistic as walls
-        result["overhead_sec"] = round(oh, 3)
-        result["wall_minus_overhead_sec"] = round(wall - oh, 3)
-    return result
 
 
 def skew_spread(tile: int) -> dict:
@@ -311,9 +260,10 @@ def skew_spread(tile: int) -> dict:
     Balanced partitioning => max/p50 stays near 1 despite the tail."""
     import numpy as np
 
-    from pdf2ocr_spark.operators.checkpoint import CHECKPOINT_OUT_SCHEMA, decode_lineage
+    from pdf2ocr_spark.operators.checkpoint import decode_lineage
     from pdf2ocr_spark.operators.extract import extraction_kernel
     from pdf2ocr_spark.pipeline import stripe_column, stripe_key
+    from pdf2ocr_spark.schema import CHECKPOINT_OUT_SCHEMA
 
     cache = materialize_corpus(tile)
     n_parts = CPUS * 4
@@ -356,27 +306,6 @@ def skew_spread(tile: int) -> dict:
 
 def main() -> None:
     t_total0 = time.perf_counter()
-
-    if BENCH_CURVE:
-        # per-core throughput curve mode (ledger evidence, one JSON line)
-        import duckdb
-
-        n_raw = duckdb.sql(
-            f"SELECT count(*) FROM '{SF_DIR}/documents.parquet'"
-        ).fetchone()[0]
-        tile = max(1, TARGET_DOCS // n_raw)
-        counts = corpus_counts(tile)
-        materialize_corpus(tile)
-        levels = []
-        for cpus in [int(x) for x in BENCH_CURVE.split(",")]:
-            r = extract_run(cpus, tile, counts=counts)
-            r.pop("counts", None)
-            r["docs_per_sec_per_core"] = round(r["docs_per_sec"] / cpus, 1)
-            levels.append(r)
-        print(json.dumps({"metric": "core_scaling_curve", "sf": SF_DIR,
-                          "tile": tile, "loops": BENCH_LOOPS,
-                          "levels": levels}))
-        return
 
     # scaling phase FIRST, before this process owns any JVM: the pinned
     # subprocess runs are the latency-sensitive measurements and must not
@@ -422,16 +351,6 @@ def main() -> None:
         # walls on this VM are noise-dominated and not reproducible
         # across harnesses; the pinned pair is.
         headline = dict(big)
-        # fullbox is informational (non-reproducible across harnesses);
-        # 3 iterations bound its cost so the official pair keeps the
-        # iteration budget
-        fullbox = (
-            extract_run(CPUS, tile, counts=counts, iters=min(3, BENCH_ITERS))
-            if CPUS > BIG_CPUS
-            else None
-        )
-        if fullbox:
-            fullbox.pop("counts", None)
         ratio = BIG_CPUS / SMALL_CPUS
         eff = big["docs_per_sec"] / (ratio * small["docs_per_sec"])
         extract = {
@@ -439,25 +358,9 @@ def main() -> None:
             "small": small,
             "big": big,
             "headline": headline,
-            "fullbox": fullbox,
             "scaling_ratio": ratio,
             "scaling_efficiency": round(eff, 3),
         }
-        if fullbox:
-            # the full-box-CROSSING pair (16 workers -> bare 32 cores),
-            # machine-readable next to the official pair: the wide level
-            # has no room left for proportional JVM service cores and
-            # shares the socket's DRAM bandwidth, so this reads below
-            # 0.8 by design — see BENCH/BASELINE.md for the per-core curve
-            extract["ceiling_pair"] = {
-                "small_cpus": big["cpus"],
-                "big_cpus": fullbox["cpus"],
-                "scaling_efficiency": round(
-                    fullbox["docs_per_sec"]
-                    / ((fullbox["cpus"] / big["cpus"]) * big["docs_per_sec"]),
-                    3,
-                ),
-            }
         extract["skew"] = skew_spread(tile)
 
     spark = _fresh_spark(CPUS)

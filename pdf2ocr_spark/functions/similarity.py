@@ -422,7 +422,9 @@ def kmeans_train(
     summed cosine monotonically; empty cells keep their previous
     centroid. Returns (centroids, history): centroids is the
     ``n_cells x dim`` float list for ``ivf_topk``, history the
-    per-iteration (objective_bp, n_nonempty) list."""
+    per-iteration (objective_bp, n_nonempty) list. An empty relation raises
+    ``ValueError``; a null or ragged embedding fails in the quantization
+    stage with ``_matrix``'s ``ValueError``, wrapped in ``PythonException``."""
     # Norm AND quantization in one kernel (round 6; the round-5 form
     # kept round() in an interpreted JVM transform — 1.3e6 per-element
     # evaluations at 10x). The norm is the sequential-fold kernel
@@ -464,10 +466,8 @@ def kmeans_train(
     # the empty-cell backfill below), unit-quantized back to floats
     init = base.orderBy("vec_id").limit(n_cells).collect()
     # the init fetch doubles as the empty guard and the dim probe
-    # (round 6: the separate first() probe job is folded in here): an
-    # empty relation or a null first embedding must raise the contract's
-    # ValueError, not a TypeError
-    if not init or init[0]["eq"] is None:
+    # (round 6: the separate first() probe job is folded in here)
+    if not init:
         raise ValueError("kmeans_train: embeddings relation is empty")
     dim = len(init[0]["eq"])
     cents = [

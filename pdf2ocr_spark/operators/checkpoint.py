@@ -10,8 +10,9 @@ This engine checkpoints at partition granularity (north rule):
   kernel runs one task per slot, each over whole part_ids;
 - the extraction kernel (``operators.extract.extraction_kernel``) runs in
   lineage mode and emits, per Spark task, one sentinel '_lineage' row per
-  part_id with real in-kernel metrics (doc/page/span counts, wall time,
-  per-doc errors);
+  part_id whose typed ``lineage`` column (``schema.LINEAGE``, null on span
+  rows) holds real in-kernel metrics (doc/page/span counts, wall time,
+  per-doc errors, status);
 - spans and lineage are both written ``partitionBy(part_id)`` with dynamic
   partition overwrite, so re-processing a partition is idempotent
   (overwrite-by-partition, never append);
@@ -21,7 +22,9 @@ This engine checkpoints at partition granularity (north rule):
 
 Error isolation mirrors the reference's per-file try/except
 (pdf.py:743-746): a failing document is recorded in the partition's
-lineage error list and the job continues.
+lineage error list, its partition's status is 'partial', and the job
+continues. A resume re-runs each 'partial' partition whole, which the
+partition overwrite makes idempotent: that is the retry.
 """
 
 from __future__ import annotations
@@ -32,7 +35,6 @@ from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from pdf2ocr_spark.kernel.emit import ALL_FORMATS
 from pdf2ocr_spark.operators.extract import (
@@ -44,38 +46,18 @@ from pdf2ocr_spark.operators.extract import (
 )
 from pdf2ocr_spark.schema import CHECKPOINT_OUT_SCHEMA
 
-LINEAGE_JSON_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_count", T.LongType()),
-        T.StructField("page_count", T.LongType()),
-        T.StructField("span_count", T.LongType()),
-        T.StructField("wall_sec", T.DoubleType()),
-        T.StructField("docs_per_sec", T.DoubleType()),
-        T.StructField("status", T.StringType()),
-        T.StructField("errors", T.ArrayType(T.StringType())),
-        # which doc->partition map produced this partition (PART_MAP),
-        # and its partition count n. Resume refuses any other map or n
-        # (older engines wrote 'nested', 'fused' or 'xxhash64(doc_id)'):
-        # another map puts DIFFERENT documents in the same part_id, so
-        # skipping a "done" partition would skip the wrong documents
-        T.StructField("part_mode", T.StringType()),
-        T.StructField("partitions", T.LongType()),
-    ]
-)
-
 
 def _completed_partitions(spark: SparkSession, output_dir: str) -> tuple[set, set]:
-    """(done part_ids, (part_mode, partitions) pairs in their lineage)."""
+    """(part_ids whose lineage says 'success', (part_mode, partitions) of
+    every lineage row). A sentinel of a sink that predates typed lineage
+    has a null ``lineage``: its pair is (None, None), which resume refuses."""
     try:
         lin = read_lineage(spark, output_dir)
     except Exception:
         return set(), set()
-    rows = (
-        lin.where(F.col("status") == "success")
-        .select("part_id", "part_mode", "partitions")
-        .collect()
-    )
-    return {r.part_id for r in rows}, {(r.part_mode, r.partitions) for r in rows}
+    rows = lin.select("part_id", "status", "part_mode", "partitions").collect()
+    done = {r.part_id for r in rows if r.status == "success"}
+    return done, {(r.part_mode, r.partitions) for r in rows}
 
 
 def run_checkpointed(
@@ -130,19 +112,18 @@ def run_checkpointed(
 
         shutil.rmtree(os.path.join(output_dir, "combined"), ignore_errors=True)
     t_resume0 = time.monotonic()
-    done, done_maps = (
+    done, maps = (
         _completed_partitions(spark, output_dir) if resume else (set(), set())
     )
     this_map = (PART_MAP, num_partitions)
-    if done and done_maps != {this_map}:
-        # lineage that records no map (written before part_mode existed),
-        # another map (older engines) or another num_partitions may hold
-        # DIFFERENT documents under the same part_id, so skipping its
-        # "done" partitions could drop documents this map assigns there.
-        # Refuse instead of silently dropping documents.
+    if maps - {this_map}:
+        # lineage that records no map (older sinks), another map or another
+        # num_partitions may hold DIFFERENT documents under the same part_id:
+        # skipping its "done" partitions could drop documents this map puts
+        # there, and re-running the rest could leave stale ones. Refuse.
         raise ValueError(
             f"output_dir {output_dir!r} was written in partitioning mode(s) "
-            f"{sorted(map(str, done_maps))} but this run uses {this_map}; "
+            f"{sorted(map(str, maps))} but this run uses {this_map}; "
             "resuming would apply a different doc->partition map (another "
             "map or num_partitions). Pass resume=False to start over."
         )
@@ -218,19 +199,15 @@ def read_spans(spark: SparkSession, output_dir: str) -> DataFrame:
     return (
         _combined(spark, output_dir)
         .where(F.col("kind") != LINEAGE_KIND)
-        .drop("part_id")
+        .drop("lineage", "part_id")
     )
 
 
 def decode_lineage(combined: DataFrame) -> DataFrame:
     """The lineage rows of a ``CHECKPOINT_OUT_SCHEMA`` relation (the
-    kernel's lineage-mode output or a run's combined sink) as typed
-    columns: ``part_id`` plus every ``LINEAGE_JSON_SCHEMA`` field."""
-    return (
-        combined.where(F.col("kind") == LINEAGE_KIND)
-        .select("part_id", F.from_json("text", LINEAGE_JSON_SCHEMA).alias("m"))
-        .select("part_id", "m.*")
-    )
+    kernel's lineage-mode output or a run's combined sink) as columns:
+    ``part_id`` plus every ``schema.LINEAGE`` field."""
+    return combined.where(F.col("kind") == LINEAGE_KIND).select("part_id", "lineage.*")
 
 
 def read_lineage(spark: SparkSession, output_dir: str) -> DataFrame:

@@ -26,7 +26,6 @@ this is the one extraction path.
 
 from __future__ import annotations
 
-import json
 import time
 from typing import Optional, Sequence
 
@@ -113,11 +112,12 @@ def extraction_kernel(
     plus ``part_id`` in lineage mode; output is ``SPANS_OUT_SCHEMA`` rows.
     A span with a null ``offset`` has no reading order, so its document
     raises ``ValueError``. ``lineage=n`` (n > 0) is lineage mode for n
-    partitions: the output also carries ``part_id``; each document is
+    partitions: the output is ``CHECKPOINT_OUT_SCHEMA``; each document is
     timed and its errors are isolated (reference-style per-file
     try/except, pdf.py:743-746) into the partition's lineage, and after
     the last batch one ``LINEAGE_KIND`` sentinel per ``part_id`` carries
-    the partition's metrics as JSON."""
+    the partition's metrics in its typed ``lineage`` column (null on span
+    rows), with status 'partial' when any of its documents failed."""
     fmts = tuple(formats)
     schema = arrow_schema(CHECKPOINT_OUT_SCHEMA if lineage else SPANS_OUT_SCHEMA)
 
@@ -146,11 +146,11 @@ def extraction_kernel(
                     rows = []
                 st["wall"] += time.monotonic() - t0
                 st["spans"] += len(rows)
-                out.extend(row + (pids[i],) for row in rows)
+                out.extend(row + (None, pids[i]) for row in rows)
             yield record_batch(out, schema)
         if stats:
             sentinels = [
-                (None, LINEAGE_KIND, _lineage_json(st, lineage), None, 0, pid)
+                (None, LINEAGE_KIND, None, None, 0, _lineage(st, lineage), pid)
                 for pid, st in sorted(stats.items())
             ]
             yield record_batch(sentinels, schema)
@@ -158,22 +158,12 @@ def extraction_kernel(
     return run
 
 
-def _lineage_json(st: dict, num_partitions: int) -> str:
-    return json.dumps(
-        {
-            "doc_count": st["docs"],
-            "page_count": st["pages"],
-            "span_count": st["spans"],
-            "wall_sec": round(st["wall"], 4),
-            "docs_per_sec": (
-                round(st["docs"] / st["wall"], 3) if st["wall"] > 0 else None
-            ),
-            "status": "success",
-            "errors": st["errors"],
-            "part_mode": PART_MAP,
-            "partitions": num_partitions,
-        }
-    )
+def _lineage(st: dict, n: int) -> tuple:
+    """One partition's ``schema.LINEAGE`` record, in its field order."""
+    docs, wall, errors = st["docs"], st["wall"], st["errors"]
+    rate = round(docs / wall, 3) if wall > 0 else None
+    status = "partial" if errors else "success"
+    return docs, st["pages"], st["spans"], round(wall, 4), rate, status, errors, PART_MAP, n
 
 
 def extract_spans_arrow(

@@ -32,9 +32,29 @@ SPANS_OUT_SCHEMA = T.StructType(
     ]
 )
 
-#: checkpoint output: spans_out plus ``part_id``, all nullable (the
-#: lineage sentinel rows carry no doc_id)
+#: one checkpoint partition's lineage record (SURVEY.md §7 step 4: the
+#: lineage table), written once per part_id by the extraction kernel
+LINEAGE = T.StructType(
+    [
+        T.StructField("doc_count", T.LongType()),
+        T.StructField("page_count", T.LongType()),
+        T.StructField("span_count", T.LongType()),
+        T.StructField("wall_sec", T.DoubleType()),
+        T.StructField("docs_per_sec", T.DoubleType()),
+        T.StructField("status", T.StringType()),  # "success" | "partial"
+        T.StructField("errors", T.ArrayType(T.StringType())),
+        # the doc->partition map (PART_MAP) and partition count n that
+        # produced this partition: resume refuses any other (older engines
+        # wrote 'nested', 'fused'...), which puts other documents there
+        T.StructField("part_mode", T.StringType()),
+        T.StructField("partitions", T.LongType()),
+    ]
+)
+
+#: checkpoint output: spans_out, ``lineage`` (null on span rows), then
+#: ``part_id`` last, where a read of the partitioned sink puts it; all
+#: nullable (the one lineage sentinel row per part_id carries no doc_id)
 CHECKPOINT_OUT_SCHEMA = T.StructType(
     [T.StructField(f.name, f.dataType) for f in SPANS_OUT_SCHEMA]
-    + [T.StructField("part_id", T.IntegerType())]
+    + [T.StructField("lineage", LINEAGE), T.StructField("part_id", T.IntegerType())]
 )

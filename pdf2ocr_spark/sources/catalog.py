@@ -9,7 +9,8 @@ in an Iceberg catalog with:
                doc_id striping that makes extraction shuffle-free
     spans_out  PARTITIONED BY (part_id)                -- idempotent
                partition-overwrite checkpointing
-    lineage    PARTITIONED BY (part_id)
+    lineage    PARTITIONED BY (part_id)                -- typed
+               schema.LINEAGE rows; 'partial' ones re-run on resume
 
 `Catalog` keeps that shape behind read_table/write_table so the engine
 code is identical in both modes.

@@ -125,23 +125,38 @@ def test_arrow_path_rejects_null_offset(spark, stage):
         run[stage](_poison(spark)).collect()
 
 
-def test_per_doc_error_isolation(spark, docs, outdir):
-    """A document that crashes the kernel is recorded in lineage errors;
-    the job completes and every healthy doc is extracted (ref behavior:
-    per-file try/except, converters/pdf.py:743-746)."""
-    mixed = docs.limit(50).unionByName(_poison(spark))
+def test_per_doc_error_isolation(spark, docs, sf_dir, outdir):
+    """A document that crashes the kernel is recorded in lineage errors
+    and marks its partition 'partial'; the job completes and every
+    healthy doc is extracted (ref behavior: per-file try/except,
+    converters/pdf.py:743-746). A resume retries exactly the partial
+    partition, idempotently."""
+    import pandas as pd
+
+    ids = [r["doc_id"] for r in docs.limit(50).select("doc_id").collect()]
+    mixed = docs.where(F.col("doc_id").isin(ids)).unionByName(_poison(spark))
     run_checkpointed(spark, mixed, outdir, num_partitions=4)
 
     lin = read_lineage(spark, outdir).toPandas()
     all_errors = [e for errs in lin["errors"] for e in errs]
     assert len(all_errors) == 1
     assert all_errors[0].startswith("poison-doc:")
-    assert (lin["status"] == "success").all()
+    failed = lin["errors"].map(len) > 0
+    assert (lin.loc[failed, "status"] == "partial").all()
+    assert (lin.loc[~failed, "status"] == "success").all()
     assert lin["doc_count"].sum() == 51
+    assert summary(spark, outdir).collect()[0]["partitions_succeeded"] == len(lin) - 1
 
     spans = read_spans(spark, outdir).toPandas()
     assert "poison-doc" not in set(spans["doc_id"])
     assert spans["doc_id"].nunique() >= 45  # healthy docs extracted
+
+    res = run_checkpointed(spark, mixed, outdir, num_partitions=4)
+    assert res["processed"] == 1
+    spans = read_spans(spark, outdir).toPandas()
+    direct = run_pipeline(spark, sf_dir, num_partitions=4).where(F.col("doc_id").isin(ids))
+    pd.testing.assert_frame_equal(canon(spans), canon(direct.toPandas()))
+    assert not spans.duplicated(["doc_id", "kind", "offset"]).any()
 
 
 def test_completed_job_is_noop(spark, docs, outdir):
@@ -277,33 +292,40 @@ def test_nested_run_resumed_by_fused_run_is_exactly_once(spark, docs, sf_dir, ou
 def test_resume_refuses_lineage_from_an_older_map(spark, docs, sf_dir, outdir):
     """Lineage written under another doc->partition map (older engines
     recorded 'fused' or 'nested') may hold different documents under the
-    same part_id, so resume refuses it; resume=False starts over."""
+    same part_id, and so may lineage packed as JSON into ``text`` (no
+    typed ``lineage``, so no recorded map): resume refuses both;
+    resume=False starts over."""
     from pdf2ocr_spark.operators.checkpoint import CHECKPOINT_OUT_SCHEMA, LINEAGE_KIND
-    from pdf2ocr_spark.operators.extract import PART_MAP
 
     src = outdir + "_src"
+    foreign, json_era = outdir + "/foreign", outdir + "/json"
+    sentinel = F.col("kind") == LINEAGE_KIND
     try:
         run_checkpointed(spark, docs, src, num_partitions=N_PARTS)
         combined = spark.read.schema(CHECKPOINT_OUT_SCHEMA).parquet(src + "/combined")
-        old = F.replace("text", F.lit(f'"part_mode": "{PART_MAP}"'), F.lit('"part_mode": "fused"'))
         combined.withColumn(
-            "text", F.when(F.col("kind") == LINEAGE_KIND, old).otherwise(F.col("text"))
-        ).write.partitionBy("part_id").parquet(outdir + "/combined")
+            "lineage", F.col("lineage").withField("part_mode", F.lit("fused"))
+        ).write.partitionBy("part_id").parquet(foreign + "/combined")
+        combined.withColumn(
+            "text", F.when(sentinel, F.to_json("lineage")).otherwise(F.col("text"))
+        ).drop("lineage").write.partitionBy("part_id").parquet(json_era + "/combined")
     finally:
         shutil.rmtree(src, ignore_errors=True)
-    assert set(read_lineage(spark, outdir).toPandas()["part_mode"]) == {"fused"}
+    assert set(read_lineage(spark, foreign).toPandas()["part_mode"]) == {"fused"}
+    assert read_lineage(spark, json_era).toPandas()["status"].isna().all()
 
     small = _small_with_part_id(spark, sf_dir, N_PARTS)
-    with pytest.raises(ValueError, match="partitioning mode"):
-        run_checkpointed(
-            spark, small, outdir, num_partitions=N_PARTS, fused_channel=True
+    for old in (foreign, json_era):
+        with pytest.raises(ValueError, match="partitioning mode"):
+            run_checkpointed(
+                spark, small, old, num_partitions=N_PARTS, fused_channel=True
+            )
+        res = run_checkpointed(
+            spark,
+            small,
+            old,
+            num_partitions=N_PARTS,
+            fused_channel=True,
+            resume=False,
         )
-    res = run_checkpointed(
-        spark,
-        small,
-        outdir,
-        num_partitions=N_PARTS,
-        fused_channel=True,
-        resume=False,
-    )
-    assert res["processed"] > 0
+        assert res["processed"] > 0

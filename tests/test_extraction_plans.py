@@ -119,6 +119,21 @@ def test_one_partition_key_and_no_pandas_extraction():
         "arrowmap.py"
     ]
     assert "isinstance(meta, dict)" not in text
+    # one typed lineage record: no JSON codec, and its field list is
+    # declared only in schema.py
+    for codec in ("from_json", "json.dumps", "LINEAGE_JSON_SCHEMA", "import json"):
+        assert codec not in text, codec
+    from pdf2ocr_spark import schema
+
+    def literals(src):
+        return {
+            n.value
+            for n in ast.walk(ast.parse(src))
+            if isinstance(n, ast.Constant) and isinstance(n.value, str)
+        }
+
+    fields = set(schema.LINEAGE.names)
+    assert [p for p, src in sources.items() if fields <= literals(src)] == ["schema.py"]
     # one extraction path: the fused kernel, with no page-parallel copy
     assert not os.path.exists(os.path.join(PACKAGE, "operators", "exploded.py"))
 

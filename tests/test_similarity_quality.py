@@ -213,7 +213,7 @@ def test_embedding_matrix_reads_the_flat_child_and_rejects_bad_rows():
     M = _matrix(sliced)
     assert M.dtype == "float64" and M.tolist() == [[0.5, 2.0], [3.0, 4.0]]
     assert _matrix(pa.array([], f32)).shape == (0, 0)
-    for bad in ([[1.0, 2.0], [3.0]], [[1.0, 2.0], None]):
+    for bad in ([[1.0, 2.0], [3.0]], [[1.0, 2.0], None], [None]):
         with pytest.raises(ValueError, match="one length"):
             _matrix(pa.array(bad, f32))
 
