@@ -24,7 +24,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from pdf2ocr_spark.pipeline import load_docs_corpus, run_pipeline
+from pdf2ocr_spark.pipeline import fan_out, load_docs_corpus, load_documents, run_pipeline
 from pdf2ocr_spark.plans import ORACLE_SQL, QUERIES
 
 
@@ -55,11 +55,9 @@ def _q_ocr_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rasterize -> §2.3 preprocess chain -> template decode, bounded to a
     sample of docs/pages (CPU-heavy raster kernel; rows-only check —
     self-validating via recovered_matches == page_count)."""
-    from pyspark.sql import functions as F
-
     from pdf2ocr_spark.operators.ocr import ocr_recover_stats
 
-    docs = load_docs_corpus(spark, sf_dir).where(F.col("doc_id").cast("long") < 50)
+    docs = fan_out(load_documents(spark, sf_dir).where("doc_id < 50"))
     return ocr_recover_stats(docs, max_pages_per_doc=2)
 
 
@@ -68,11 +66,9 @@ def _q_ocr_roundtrip_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     slot (kernel/imageproc.clahe — what the reference computes with
     skimage installed, ref ocr.py:122-135); rows-only, self-validating
     via recovered_matches == page_count."""
-    from pyspark.sql import functions as F
-
     from pdf2ocr_spark.operators.ocr import ocr_recover_stats
 
-    docs = load_docs_corpus(spark, sf_dir).where(F.col("doc_id").cast("long") < 50)
+    docs = fan_out(load_documents(spark, sf_dir).where("doc_id < 50"))
     return ocr_recover_stats(docs, max_pages_per_doc=2, adaptive=True)
 
 
@@ -100,9 +96,10 @@ def _q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     values and cannot hash list cells."""
     from pyspark.sql import functions as F
 
+    from pdf2ocr_spark.operators.docgen import documents_to_docs
     from pdf2ocr_spark.operators.media import decode_media, media_table
 
-    docs = load_docs_corpus(spark, sf_dir).where(F.col("doc_id").cast("long") < 200)
+    docs = documents_to_docs(fan_out(load_documents(spark, sf_dir).where("doc_id < 200")))
     feats = decode_media(media_table(docs), fake=True)
     return feats.select(
         "doc_id",

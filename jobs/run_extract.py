@@ -121,14 +121,10 @@ def main() -> None:
     if args.ocr_stats:
         from pyspark.sql import functions as F
 
-        from pdf2ocr_spark.operators.docgen import documents_to_docs
         from pdf2ocr_spark.operators.ocr import ocr_recover_stats
 
-        # the raster stage consumes the nested docs relation; derive it
-        # from the small rows (this opt-in stage is the only consumer —
-        # the fused extract path never materializes it)
         st = ocr_recover_stats(
-            documents_to_docs(small),
+            small,
             max_pages_per_doc=args.ocr_max_pages,
             dpi=cfg.dpi,
             batch_size=cfg.batch_size,

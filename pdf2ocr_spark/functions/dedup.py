@@ -34,6 +34,7 @@ import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, functions as F
 
 from pdf2ocr_spark.arrowmap import arrow_schema, column_batch
+from pdf2ocr_spark.pipeline import fan_out
 
 MINHASH_PRIME = 2147483647  # 2^31 - 1
 N_PERM = 16
@@ -87,17 +88,6 @@ def with_near_dup_corpus(documents: DataFrame) -> DataFrame:
         )
     )
     return documents.select("doc_id", "text").unionByName(mutants)
-
-
-def _fan_out(df: DataFrame) -> DataFrame:
-    """Round-robin repartition to the session's shuffle parallelism: a
-    small single-file corpus arrives as ONE scan split, which would
-    serialize every CPU-heavy per-row stage built on it. Round-robin (not
-    by doc_id!) so a later ``repartition("doc_id")`` above an expensive
-    stage is NOT elided as redundant — that exchange is what lets a
-    self-join reuse one evaluation of the stage."""
-    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return df.repartition(n)
 
 
 def exact_dedup(documents: DataFrame) -> DataFrame:
@@ -222,7 +212,7 @@ def minhash_lsh_pairs(documents: DataFrame) -> DataFrame:
     and this shuffle moves each row once — the cost of co-parallelizing
     the CPU-heavy stage, same move as pipeline.stripe_documents).
     """
-    corpus = _fan_out(with_near_dup_corpus(documents))
+    corpus = fan_out(with_near_dup_corpus(documents))
     sigs = minhash_signatures(corpus).repartition("doc_id")
     bands = sigs.select(
         "doc_id",
@@ -295,21 +285,19 @@ def _jaccard_block_kernel(threshold: float):
     """Per-(block_i, block_j) exact intersection counts, Arrow-native and
     numpy-vectorized (called per block pair by _jaccard_partition_kernel).
 
-    Receives both blocks' per-doc rare-shingle STRING arrays (strings, not
-    hashes — exactness is unconditional). The strings never become Python
-    objects: they stay in the record batch's contiguous Arrow buffers and
-    the task-local dense code dictionary comes from ONE
-    ``pyarrow.compute.dictionary_encode`` over the concatenated flat
-    string children (C hash table; the earlier pandas form factorized
-    every shipped shingle as a Python str first — measured ~2/3 of the
-    whole query's wall at 10x). The
-    co-occurrence enumeration walks the dense codes with sort/repeat
-    arithmetic (no Python loop over shingles), counts pairs via one
-    np.unique over packed 64-bit (row_a, row_b) keys, and emits ONLY
-    pairs whose jaccard can still reach the threshold (pre-filter at
-    threshold - 1e-4 — a margin 12 orders of magnitude above float64
-    error, so no qualifying pair is ever dropped; the final
-    round()+filter runs in Catalyst with the exact original expression).
+    Receives both blocks' per-doc rare-shingle arrays of int64
+    ``xxhash64`` codes (their corpus-wide injectivity is asserted in-plan
+    by ``ngram_jaccard_pairs``, so equal codes mean equal shingles). The
+    codes never become Python objects: they stay in the record batch's
+    contiguous Arrow buffers and densify into task-local codes with one
+    ``np.unique`` over both sides. The co-occurrence enumeration walks
+    the dense codes with sort/repeat arithmetic (no Python loop over
+    shingles), counts pairs via one np.unique over packed 64-bit (row_a,
+    row_b) keys, and emits ONLY pairs whose jaccard can still reach the
+    threshold (pre-filter at threshold - 1e-4 — a margin 12 orders of
+    magnitude above float64 error, so no qualifying pair is ever dropped;
+    the final round()+filter runs in Catalyst with the exact original
+    expression).
     """
     out_schema = arrow_schema(_JACCARD_BLOCK_SCHEMA)
     empty = column_batch([[]] * len(out_schema), out_schema)
@@ -334,27 +322,12 @@ def _jaccard_block_kernel(threshold: float):
 
         ls, lrow = _flat(left)
         rs, rrow = _flat(right) if not diag else (ls, lrow)
-        # task-local dense shingle codes over BOTH sides. Fast path:
-        # int64-coded shingles (the operator ships xxhash64 codes whose
-        # corpus-wide injectivity is ASSERTED in-plan — see
-        # ngram_jaccard_pairs) densify with one C sort; the string path
-        # (exact equality via Arrow's dictionary hash table) remains for
-        # direct kernel use on raw shingle arrays.
-        if pa.types.is_integer(ls.type):
-            both = np.concatenate(
-                [
-                    ls.to_numpy(zero_copy_only=False),
-                    rs.to_numpy(zero_copy_only=False),
-                ]
-            )
-            _, inv = np.unique(both, return_inverse=True)
-            inv = inv.astype(np.int64, copy=False)
-        else:
-            inv = (
-                pc.dictionary_encode(pa.concat_arrays([ls, rs]))
-                .indices.to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-            )
+        # task-local dense shingle codes over BOTH sides: one C sort
+        both = np.concatenate(
+            [ls.to_numpy(zero_copy_only=False), rs.to_numpy(zero_copy_only=False)]
+        )
+        _, inv = np.unique(both, return_inverse=True)
+        inv = inv.astype(np.int64, copy=False)
         lcode, rcode = inv[: len(ls)], inv[len(ls):]
         n_codes = int(inv.max()) + 1 if len(inv) else 0
 
@@ -564,7 +537,7 @@ def ngram_jaccard_pairs(
     the assertion rather than answer."""
     import math
 
-    docs = _fan_out(with_near_dup_corpus(documents))
+    docs = fan_out(with_near_dup_corpus(documents))
     if blocks is None:
         n_part = int(
             docs.sparkSession.conf.get("spark.sql.shuffle.partitions")
@@ -747,8 +720,8 @@ def simhash_fingerprints(documents: DataFrame) -> DataFrame:
 
     toks = F.array_distinct(F.split(F.coalesce(F.col("text"), F.lit("")), " "))
     # fan out before hashing: a single-split input would serialize the
-    # kernel (see _fan_out; no-op cost at production split counts)
-    docs = _fan_out(with_near_dup_corpus(documents))
+    # kernel (see fan_out; no-op cost at production split counts)
+    docs = fan_out(with_near_dup_corpus(documents))
     return docs.select("doc_id", toks.alias("toks")).mapInArrow(
         lambda batches: (
             column_batch([b.column(0), simhash_np(b.column(1))], out)

@@ -28,7 +28,7 @@ import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, functions as F
 
 from pdf2ocr_spark.arrowmap import arrow_schema, column_batch
-from pdf2ocr_spark.functions.dedup import _fan_out
+from pdf2ocr_spark.pipeline import fan_out
 
 QUERY_STRIDE = 50  # vec_id % 50 == 0 -> deterministic query set
 N_QUERIES = 100  # hard cap: query set is CONSTANT-size, not O(N)
@@ -195,7 +195,7 @@ def _topk_candidates(
         if n:
             yield score(pa.Table.from_batches(buf))
 
-    base = _fan_out(embeddings.select("vec_id", "embedding"))
+    base = fan_out(embeddings.select("vec_id", "embedding"))
     return base.mapInArrow(kernel, schema)
 
 
@@ -453,7 +453,7 @@ def kmeans_train(
     # 0.85 s/round -> ~0.2 s/round at 10x); the per-cell reductions are
     # integer sums, so the result is partition-independent by design
     base = (
-        _fan_out(embeddings.select("vec_id", "embedding"))
+        fan_out(embeddings.select("vec_id", "embedding"))
         .mapInArrow(
             lambda batches: (quant_np(b) for b in batches if b.num_rows), quant
         )

@@ -95,9 +95,18 @@ def wrap_paragraph(text: str, columns: int = TEXT_WRAP_COLUMNS) -> List[str]:
     return lines
 
 
-def page_texts_in_order(spans: Sequence[dict]) -> Tuple[List[str], List[str]]:
-    """Split a document's interleaved spans into ordered page texts and
-    ordered media refs (both by ``offset``)."""
+def null_offset(doc_id: str) -> ValueError:
+    """The error of a document with a null span ``offset``: it has no
+    reading order, so no extraction path guesses one."""
+    return ValueError(f"document {doc_id!r} has a span with a null offset")
+
+
+def page_texts_in_order(doc_id: str, spans: Sequence[dict]) -> Tuple[List[str], List[str]]:
+    """Split document ``doc_id``'s interleaved spans into ordered page texts
+    and ordered media refs (both by ``offset``); a null ``offset`` raises
+    ``null_offset(doc_id)``."""
+    if any(s["offset"] is None for s in spans):
+        raise null_offset(doc_id)
     ordered = sorted(spans, key=lambda s: s["offset"])
     pages = [s.get("text") or "" for s in ordered if s.get("kind") == "page"]
     media = [s["media_ref"] for s in ordered
@@ -130,7 +139,7 @@ def extract_document(
     """Run the full extraction pipeline for one document and return its
     output span rows. Deterministic; independent of partitioning.
     """
-    pages, media = page_texts_in_order(spans)
+    pages, media = page_texts_in_order(doc_id, spans)
     return extract_from_pages(doc_id, pages, media, formats, lang, max_sentences)
 
 

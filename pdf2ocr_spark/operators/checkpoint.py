@@ -40,6 +40,7 @@ from pdf2ocr_spark.kernel.emit import ALL_FORMATS
 from pdf2ocr_spark.operators.extract import (
     LINEAGE_KIND,
     PART_MAP,
+    document_columns,
     extraction_kernel,
     stripe_column,
     stripe_key,
@@ -76,20 +77,19 @@ def run_checkpointed(
     ``num_partitions`` is the resume granularity (part_ids, partition
     directories, lineage rows); the kernel runs ``min(num_partitions,
     slots)`` tasks over whole part_ids, as a Python task's fixed cost does
-    not shrink with its work. Default mode consumes the nested
-    ``docs(doc_id, spans)`` relation and tags it with
-    ``pipeline.stripe_key``. ``fused_channel=True`` consumes the SMALL
-    pre-channel relation ``(doc_id, text, source, part_id)`` instead and
-    runs channel+extract in one Python pass: the caller computes part_id
-    on the text rows (``pipeline.stripe_key``), so NO nested data is ever
-    shuffled — the scale-critical layout for the spark-submit job. Both
-    modes run the same stripe shuffle and map a document to the same
-    part_id, so either can resume the other's output.
+    not shrink with its work. ``docs`` is either document shape
+    (``operators.extract.document_columns``): the nested ``docs(doc_id,
+    spans)`` relation, or the SMALL pre-channel rows ``(doc_id, text,
+    source)``, which the kernel runs channel+extract over in one Python
+    pass, so NO nested data is ever shuffled — the scale-critical layout
+    for the spark-submit job. Default mode tags ``docs`` with
+    ``pipeline.stripe_key``; ``fused_channel=True`` takes the caller's own
+    ``part_id`` column (computed with ``pipeline.stripe_key``). Both modes
+    run the same stripe shuffle and map a document to the same part_id,
+    so either can resume the other's output.
 
     Returns a summary dict: partitions planned/skipped/processed.
     """
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
     if fused_channel:
         if "part_id" not in docs.columns:
             raise ValueError(
@@ -145,9 +145,8 @@ def run_checkpointed(
     # lineage row together (no spans-written-but-lineage-missing window).
     # One kernel task per slot over a contiguous run of whole shuffle
     # partitions, so each part_id still lands in one task and one file.
-    data = ["text", "source"] if fused_channel else ["spans"]
     out = (
-        tagged.select("doc_id", *data, "part_id")
+        tagged.select(*document_columns(tagged), "part_id")
         .coalesce(min(num_partitions, spark.sparkContext.defaultParallelism))
         .mapInArrow(
             extraction_kernel(formats, lang, max_sentences, lineage=num_partitions),
@@ -155,9 +154,11 @@ def run_checkpointed(
         )
     )
     t_write0 = time.monotonic()
-    out.write.mode("overwrite").partitionBy("part_id").parquet(
-        os.path.join(output_dir, "combined")
-    )
+    # a writer option, not the session conf: the caller's later
+    # overwrites keep their own mode
+    out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+        "part_id"
+    ).parquet(os.path.join(output_dir, "combined"))
     t_write = time.monotonic() - t_write0
 
     # a partition that got ZERO documents emits no sentinel, so `planned`

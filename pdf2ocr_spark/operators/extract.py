@@ -6,9 +6,12 @@ dataflow (OCR-language clean -> boilerplate strip -> paragraph FSM ->
 multi-format span emission; see kernel/emit.py) in a single Python-worker
 pass per Arrow batch — the Spark analogue of the reference's operator fusion
 (whole chain per file in one process, /root/reference/pdf2ocr/converters/pdf.py:663-739).
-The kernel reads either the nested ``docs(doc_id, spans)`` relation or the
-small ``(doc_id, text, source)`` rows, which it turns into spans with the
-docgen channel in the same pass.
+Every per-document kernel (extraction, and the OCR stage in ocr.py) takes
+either document shape, and the shape rule is written here once on each side
+of the Arrow boundary: ``document_columns`` picks the columns a stage ships,
+``pages_reader`` reads them. A shape is the nested ``docs(doc_id, spans)``
+relation or the small ``(doc_id, text, source)`` rows, which the reader turns
+into spans with the docgen channel in the same Python pass.
 
 Skew handling (SURVEY.md §4 / north rule): documents are one row each, so
 classic key-salting is moot (no key repeats); the skew is per-row WEIGHT
@@ -34,7 +37,12 @@ from pyspark.sql import functions as F
 
 from pdf2ocr_spark.arrowmap import arrow_schema, record_batch
 from pdf2ocr_spark.kernel.docgen import build_spans
-from pdf2ocr_spark.kernel.emit import ALL_FORMATS, extract_from_pages, page_texts_in_order
+from pdf2ocr_spark.kernel.emit import (
+    ALL_FORMATS,
+    extract_from_pages,
+    null_offset,
+    page_texts_in_order,
+)
 from pdf2ocr_spark.schema import CHECKPOINT_OUT_SCHEMA, SPANS_OUT_SCHEMA
 
 #: ``kind`` of the one lineage sentinel row per part_id in lineage mode
@@ -63,6 +71,13 @@ def stripe_key(num_partitions: int):
     return F.pmod(F.hash(stripe_column()), F.lit(num_partitions))
 
 
+def document_columns(docs: DataFrame) -> list:
+    """The columns a per-document kernel ships across the Arrow boundary:
+    ``doc_id`` and ``spans`` for the nested docs relation, else the small
+    rows' ``doc_id``, ``text`` and ``source`` (``pages_reader`` reads both)."""
+    return ["doc_id", "spans"] if "spans" in docs.columns else ["doc_id", "text", "source"]
+
+
 def pages_reader(batch):
     """The batch's doc ids and ``pages_of(i) -> (pages, media)``: document
     i's page texts and media refs in ``offset`` order. Reads nested
@@ -74,7 +89,7 @@ def pages_reader(batch):
         sources = batch.column("source").to_pylist()
 
         def from_text(i):
-            return page_texts_in_order(build_spans(doc_ids[i], texts[i], sources[i]))
+            return page_texts_in_order(doc_ids[i], build_spans(doc_ids[i], texts[i], sources[i]))
 
         return doc_ids, from_text
 
@@ -91,7 +106,7 @@ def pages_reader(batch):
     def from_spans(i):
         lo, hi = int(bounds[i]), int(bounds[i + 1])
         if null_offs is not None and null_offs[lo:hi].any():
-            raise ValueError(f"document {doc_ids[i]!r} has a span with a null offset")
+            raise null_offset(doc_ids[i])
         order = sorted(range(lo, hi), key=offs.__getitem__)
         pages = [texts[j] or "" for j in order if kinds[j] == "page"]
         media = [refs[j] for j in order if kinds[j] == "media" and refs[j]]
@@ -172,25 +187,12 @@ def extract_spans_arrow(
     lang: str = "eng",
     max_sentences: Optional[int] = None,
 ) -> DataFrame:
-    """Run the extraction kernel over the nested docs relation.
+    """Run the extraction kernel over either document shape (see
+    ``document_columns``) in one ``mapInArrow`` stage: the stage
+    ``pipeline.run_pipeline`` and every streaming micro-batch run.
 
     Returns the spans_out relation (doc_id, kind, text, media_ref, offset).
     Deterministic: output row SET is independent of partitioning."""
-    return docs.select("doc_id", "spans").mapInArrow(
-        extraction_kernel(formats, lang, max_sentences), schema=SPANS_OUT_SCHEMA
-    )
-
-
-def documents_to_spans(
-    documents: DataFrame,
-    formats: Sequence[str] = ALL_FORMATS,
-    lang: str = "eng",
-    max_sentences: Optional[int] = None,
-) -> DataFrame:
-    """FUSED ingest path: (doc_id, text, source) -> spans_out in ONE Python
-    pass per batch (docgen channel + extraction kernel back to back, no
-    nested Arrow round trip, no second worker chain); the stage
-    ``pipeline.run_pipeline`` and every streaming micro-batch run."""
-    return documents.select("doc_id", "text", "source").mapInArrow(
+    return docs.select(*document_columns(docs)).mapInArrow(
         extraction_kernel(formats, lang, max_sentences), schema=SPANS_OUT_SCHEMA
     )

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from pdf2ocr_spark.arrowmap import arrow_schema, record_batch
-from pdf2ocr_spark.operators.extract import pages_reader
+from pdf2ocr_spark.operators.extract import document_columns, pages_reader
 
 OCR_STATS_SCHEMA = T.StructType(
     [
@@ -50,8 +50,10 @@ def ocr_recover_stats(
     ``adaptive`` runs the real tiled CLAHE in the Step-3 contrast slot
     (kernel/imageproc.clahe; what the reference computes WITH skimage
     installed, ref ocr.py:122-135) instead of the reference's no-skimage
-    autocontrast fallback. Pages are read by the extraction kernel's
-    ``pages_reader``, so a null ``offset`` fails both stages alike."""
+    autocontrast fallback. ``docs`` is either document shape, read as the
+    extraction kernel reads it (``document_columns``, ``pages_reader``),
+    so the small rows need no separate docgen stage and a null ``offset``
+    fails both stages alike."""
     schema = arrow_schema(OCR_STATS_SCHEMA)
 
     def run(batches):
@@ -91,4 +93,4 @@ def ocr_recover_stats(
                 rows.append((doc_id, len(pages), matches, chars))
             yield record_batch(rows, schema)
 
-    return docs.select("doc_id", "spans").mapInArrow(run, OCR_STATS_SCHEMA)
+    return docs.select(*document_columns(docs)).mapInArrow(run, OCR_STATS_SCHEMA)

@@ -12,11 +12,23 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pdf2ocr_spark.kernel.emit import ALL_FORMATS
 from pdf2ocr_spark.operators.docgen import documents_to_docs
-from pdf2ocr_spark.operators.extract import documents_to_spans, stripe_column, stripe_key
+from pdf2ocr_spark.operators.extract import extract_spans_arrow, stripe_column, stripe_key
 
 
 def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+
+
+def fan_out(df: DataFrame) -> DataFrame:
+    """Round-robin repartition to the session's shuffle parallelism: a
+    small single-file corpus arrives as ONE scan split, which would
+    serialize every CPU-heavy per-row stage built on it. Round-robin (not
+    by doc_id!) so a later ``repartition("doc_id")`` above an expensive
+    stage is NOT elided as redundant — that exchange is what lets a
+    self-join reuse one evaluation of the stage. Spark pushes no filter
+    through a Python stage, so filter the input, not the stage's output."""
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return df.repartition(n)
 
 
 def tile_documents(documents: DataFrame, factor: int) -> DataFrame:
@@ -42,8 +54,9 @@ def tile_documents(documents: DataFrame, factor: int) -> DataFrame:
 
 def load_docs_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The engine's input relation, derived deterministically from the
-    driver-provided documents table (kernel/docgen.py channel model)."""
-    return documents_to_docs(load_documents(spark, sf_dir))
+    documents table (kernel/docgen.py channel model), with the docgen
+    stage fanned out over the session's slots."""
+    return documents_to_docs(fan_out(load_documents(spark, sf_dir)))
 
 
 def stripe_documents(documents: DataFrame, num_partitions: int) -> DataFrame:
@@ -79,6 +92,6 @@ def run_pipeline(
     documents = documents.repartition(num_partitions)
     striped = stripe_documents(tile_documents(documents, tile), num_partitions)
     # fused channel+extract: one Python pass, no nested-Arrow intermediate
-    return documents_to_spans(
+    return extract_spans_arrow(
         striped, formats=formats, lang=lang, max_sentences=max_sentences
     )

@@ -47,13 +47,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf2ocr_spark.arrowmap import map_rows
-from pdf2ocr_spark.functions.dedup import _fan_out
 from pdf2ocr_spark.functions.quality import (
     DUP_WORD_MAX_BP,
     TOP_BIGRAM_MAX_BP,
     quality_bp_expr,
 )
 from pdf2ocr_spark.kernel.textproc import PT_ALLOWED_CLASS
+from pdf2ocr_spark.pipeline import fan_out
 
 LINE_WORDS = 2
 PAGE_LINES = 10
@@ -109,7 +109,7 @@ def _per_document(
     The narrow ``(doc_id, source, text)`` scan fans out into one
     ``arrowmap.map_rows`` stage: no shuffle, no pandas."""
     docs = _documents(spark, sf_dir).select("doc_id", "source", "text")
-    return map_rows(_fan_out(docs), ddl, lambda d, s, t: [(d, *fn(s, t or ""))])
+    return map_rows(fan_out(docs), ddl, lambda d, s, t: [(d, *fn(s, t or ""))])
 
 
 # DuckDB-side shared CTEs, textually identical spec
@@ -194,7 +194,7 @@ FROM documents
 def q_sentence_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sentence segmentation + max_sentences chunking counts
     (ref common.py:153-171; split regex [.!?…]\\s+ without lookbehind)."""
-    docs = _fan_out(_documents(spark, sf_dir))
+    docs = fan_out(_documents(spark, sf_dir))
     punctuated = F.regexp_replace("text", "\\sthe\\s", ". The ")
     n_sent = (
         F.size(F.regexp_extract_all(punctuated, F.lit("[.!?…]\\s+"), 0)) + 1
@@ -219,7 +219,7 @@ FROM documents
 def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting: whitespace tokens, distinct tokens, BPE-ish regex
     tokens (training-data op; SURVEY §2.2 whitespace collapse analogue)."""
-    docs = _fan_out(_documents(spark, sf_dir))
+    docs = fan_out(_documents(spark, sf_dir))
     toks = F.split("text", " ")
     return docs.select(
         "doc_id",
@@ -753,19 +753,19 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # fan out: the docs parquet is one row group -> one scan split;
     # the stopword-filter HOFs would otherwise run single-threaded
-    return lang_id(_fan_out(_documents(spark, sf_dir)))
+    return lang_id(fan_out(_documents(spark, sf_dir)))
 
 
 def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdf2ocr_spark.functions.quality import quality_score
 
-    return quality_score(_fan_out(_documents(spark, sf_dir)))
+    return quality_score(fan_out(_documents(spark, sf_dir)))
 
 
 def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdf2ocr_spark.functions.quality import fingerprint
 
-    return fingerprint(_fan_out(_documents(spark, sf_dir)))
+    return fingerprint(fan_out(_documents(spark, sf_dir)))
 
 
 # reference epub.py:11-27 Tesseract->Calibre language map (the EPUB sink's
@@ -964,7 +964,7 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pure JVM-side regexp expressions: codegen'd, scales as a map stage
     (fanned out — the single-row-group scan split would otherwise run
     all six regex passes on one core)."""
-    docs = _fan_out(_documents(spark, sf_dir))
+    docs = fan_out(_documents(spark, sf_dir))
     seeded = _pii_seeded_col()
 
     def _count(col, pat):
@@ -1035,7 +1035,7 @@ def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     LLM-pretraining pipeline runs after cleaning/dedup. Fanned out over
     the session's parallelism (single-row-group scan), then a map stage
     end to end."""
-    docs = _fan_out(_documents(spark, sf_dir))
+    docs = fan_out(_documents(spark, sf_dir))
     return chunk_windows(docs, F.col("text"), ["doc_id"])
 
 
@@ -1078,7 +1078,7 @@ def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exploded line relation. The token array is materialized once per
     document before the line transform: referenced inline, the split
     is re-evaluated for every line, quadratic in the document's length."""
-    docs = _fan_out(_documents(spark, sf_dir).select("doc_id", "text")).select(
+    docs = fan_out(_documents(spark, sf_dir).select("doc_id", "text")).select(
         "doc_id", F.split("text", " ").alias("toks")
     )
     toks = F.col("toks")
@@ -1269,7 +1269,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the gram string — same plan, narrower shuffle."""
     # fan out: the docs parquet is one row group -> one scan split; the
     # training-side Arrow gram kernel would otherwise run on ONE core
-    docs = _fan_out(_documents(spark, sf_dir).select("doc_id", "text"))
+    docs = fan_out(_documents(spark, sf_dir).select("doc_id", "text"))
 
     # gram construction is a batched Arrow kernel, not nested Catalyst
     # HOFs: transform+array_join+slice lambdas run INTERPRETED per
@@ -1607,7 +1607,7 @@ def _enriched_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the md5 + integer-rank math compiles to whole-stage codegen over
     flat rows (inside an array ``transform`` lambda it would run
     interpreted per element, on the single scan split)."""
-    docs = _fan_out(_documents(spark, sf_dir).select("doc_id", "text"))
+    docs = fan_out(_documents(spark, sf_dir).select("doc_id", "text"))
     tok = docs.select(
         "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "t")
     )
@@ -1852,7 +1852,7 @@ def q_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     clean_gates pins its filters there: without the pin, predicate
     pushdown inlines the quality/repetition expression trees into the
     single-row-group scan and evaluates them on one core."""
-    sampled = _fan_out(
+    sampled = fan_out(
         _documents(spark, sf_dir).where(_sample_bucket() < _sample_rate())
     )
     return chunk_windows(

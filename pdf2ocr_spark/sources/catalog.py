@@ -64,11 +64,9 @@ class Catalog:
             else:
                 writer.createOrReplace()
             return
-        self.spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode",
-            "dynamic" if overwrite_partitions else "static",
+        w = df.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic" if overwrite_partitions else "static"
         )
-        w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(partition_by)
         w.parquet(self._path(name))

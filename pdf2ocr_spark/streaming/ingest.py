@@ -11,12 +11,11 @@ lineage-style resume comes from the streaming checkpoint itself
 (offsets + file log).
 
 Each micro-batch runs ONE Python stage:
-``operators.extract.documents_to_spans`` (``mapInArrow``), docgen channel
-and extraction kernel back to back in one worker pass. It emits the same
-rows as the batch chain ``documents_to_docs`` -> ``extract_spans_arrow``,
-without a second Python worker per task and without sending the nested
-``array<struct>`` docs relation across the JVM/Python boundary twice.
-Streaming micro-batches are already file-split, so no repartition.
+``operators.extract.extract_spans_arrow`` (``mapInArrow``) over the small
+``(doc_id, text, source)`` rows, docgen channel and extraction kernel back
+to back in one worker pass, so the nested ``array<struct>`` docs relation
+never crosses the JVM/Python boundary. Streaming micro-batches are already
+file-split, so no repartition.
 
 ``stream_extract_available_now`` uses Trigger.AvailableNow: process
 everything currently present, then stop — the batch-parity mode used by
@@ -32,7 +31,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from pdf2ocr_spark.kernel.emit import ALL_FORMATS
-from pdf2ocr_spark.operators.extract import documents_to_spans
+from pdf2ocr_spark.operators.extract import extract_spans_arrow
 
 DOCUMENTS_SCHEMA = T.StructType(
     [
@@ -92,7 +91,7 @@ def start_extract_stream(
     return start_file_stream(
         spark,
         DOCUMENTS_SCHEMA,
-        lambda docs: documents_to_spans(docs, formats, lang, max_sentences),
+        lambda docs: extract_spans_arrow(docs, formats, lang, max_sentences),
         input_dir,
         output_dir,
         checkpoint_dir,

@@ -1,6 +1,10 @@
 import pytest
 
 
+def pytest_configure(config):
+    config.addinivalue_line("markers", "slow: end-to-end spark-submit runs (minutes)")
+
+
 @pytest.fixture(scope="session")
 def spark():
     from pdf2ocr_spark.session import get_spark

@@ -125,6 +125,18 @@ def test_arrow_path_rejects_null_offset(spark, stage):
         run[stage](_poison(spark)).collect()
 
 
+def test_run_leaves_the_session_overwrite_mode_alone(spark, docs, outdir):
+    """Dynamic partition overwrite is the sink's writer option: the
+    caller's session keeps its own mode for every later overwrite."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "STATIC")
+    try:
+        run_checkpointed(spark, docs.limit(20), outdir, num_partitions=4)
+        assert spark.conf.get(key) == "STATIC"
+    finally:
+        spark.conf.unset(key)
+
+
 def test_per_doc_error_isolation(spark, docs, sf_dir, outdir):
     """A document that crashes the kernel is recorded in lineage errors
     and marks its partition 'partial'; the job completes and every

@@ -68,6 +68,15 @@ def test_run_pipeline_runs_one_map_in_arrow(spark, sf_dir):
     assert nodes == ["MapInArrow"]
 
 
+def test_ocr_roundtrip_runs_one_map_in_arrow(spark, sf_dir):
+    """The OCR query reads the small rows: no docgen stage of its own."""
+    import __spark_entry__
+
+    df = __spark_entry__.queries()["ocr_roundtrip"](spark, sf_dir)
+    nodes = python_nodes(spark, lambda: df.write.format("noop").mode("overwrite").save())
+    assert nodes == ["MapInArrow"]
+
+
 def test_checkpoint_modes_run_one_map_in_arrow(spark, sf_dir, nested_docs, tmp):
     nested = python_nodes(
         spark,

@@ -8,6 +8,8 @@ Golden structure ported from the reference sink tests:
 - media interleave: engine extension (FIXTURES.md case media-interleave)
 """
 
+import pytest
+
 from pdf2ocr_spark.kernel.emit import (
     extract_document,
     markdown_blocks,
@@ -140,6 +142,10 @@ class TestMediaInterleave:
         # pages ordered by offset before assembly
         paras = by_kind(rows, "docx_para")
         assert paras[0][2].startswith("First page")
+        # a null offset leaves no reading order to sort by, alone or not
+        for spans in ([page("Lone page.", None)], [page("A.", None), page("B.", 1)]):
+            with pytest.raises(ValueError, match="'d1' has a span with a null offset"):
+                extract_document("d1", spans, formats=["docx_para"])
 
 
 class TestMarkdown:

@@ -119,6 +119,28 @@ def test_spark_ocr_stage(spark, sf_dir):
     assert (stats["recovered_matches"] == stats["page_count"]).all()
 
 
+def test_spark_ocr_stage_reads_either_document_shape(spark, sf_dir):
+    """The small document rows give the same stats as the nested docs
+    built from them: the OCR stage runs the docgen channel in its own
+    pass, so it needs no docgen stage of its own."""
+    import pandas as pd
+
+    from pdf2ocr_spark.operators.docgen import documents_to_docs
+    from pdf2ocr_spark.operators.ocr import ocr_recover_stats
+    from pdf2ocr_spark.pipeline import load_documents
+
+    small = load_documents(spark, sf_dir).where("doc_id < 20")
+    small_stats, nested_stats = (
+        ocr_recover_stats(docs, max_pages_per_doc=2)
+        .toPandas()
+        .sort_values("doc_id")
+        .reset_index(drop=True)
+        for docs in (small, documents_to_docs(small))
+    )
+    assert len(small_stats) == 20
+    pd.testing.assert_frame_equal(small_stats, nested_stats)
+
+
 def test_spark_ocr_stage_adaptive_clahe(spark, sf_dir):
     """End-to-end adaptive variant (registered as ocr_roundtrip_adaptive):
     the real tiled CLAHE runs in the Step-3 slot and the round trip stays
