@@ -255,15 +255,17 @@ spark.stop()
 def skew_spread(tile: int) -> dict:
     """Straggler evidence on the skewed corpus (the docgen channel gives
     ~1/24 of docs a heavy factor up to 40x pages — a Zipf-ish tail): run
-    the extraction kernel in lineage mode over the corpus partitioned by
+    the checkpoint kernel over the corpus partitioned by
     ``stripe_key`` and report the spread of per-partition kernel walls.
     Balanced partitioning => max/p50 stays near 1 despite the tail."""
     import numpy as np
 
-    from pdf2ocr_spark.operators.checkpoint import decode_lineage
-    from pdf2ocr_spark.operators.extract import extraction_kernel
+    from pdf2ocr_spark.operators.checkpoint import (
+        CHECKPOINT_OUT_SCHEMA,
+        checkpoint_kernel,
+        decode_lineage,
+    )
     from pdf2ocr_spark.pipeline import stripe_column, stripe_key
-    from pdf2ocr_spark.schema import CHECKPOINT_OUT_SCHEMA
 
     cache = materialize_corpus(tile)
     n_parts = CPUS * 4
@@ -278,7 +280,7 @@ def skew_spread(tile: int) -> dict:
             docs.repartition(n_parts, stripe_column())
             .select("doc_id", "spans", "part_id")
             .mapInArrow(
-                extraction_kernel(("text", "markdown"), "eng", None, lineage=n_parts),
+                checkpoint_kernel(("text", "markdown"), "eng", None, n_parts),
                 schema=CHECKPOINT_OUT_SCHEMA,
             )
         )

@@ -52,14 +52,6 @@ def base_hash(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
-def perm_hash(h31: Column, j: Column) -> Column:
-    """j-th permutation hash: (A_j*h + B_j) mod p with LCG-style constants
-    computed inline so both engines evaluate the same integer arithmetic."""
-    a = (F.lit(1103515245).cast("long") * (j.cast("long") + 1)) % F.lit(MINHASH_PRIME)
-    b = (F.lit(12345).cast("long") * (j.cast("long") + 7)) % F.lit(MINHASH_PRIME)
-    return (a * h31 + b) % F.lit(MINHASH_PRIME)
-
-
 def word_shingles(text: Column, n: int = SHINGLE_WORDS) -> Column:
     """Distinct word n-gram shingles; short texts fall back to one shingle
     (the whole text)."""
@@ -99,7 +91,8 @@ def exact_dedup(documents: DataFrame) -> DataFrame:
     )
 
 
-#: permutation constants, the vectorized twin of perm_hash()
+#: permutation j is (A_j*h + B_j) mod p, the ``perm_hash`` formula
+#: functions/dedup_sql.py states for the DuckDB oracle
 _PERM_A = (1103515245 * (np.arange(N_PERM, dtype=np.int64) + 1)) % MINHASH_PRIME
 _PERM_B = (12345 * (np.arange(N_PERM, dtype=np.int64) + 7)) % MINHASH_PRIME
 
@@ -224,9 +217,8 @@ def minhash_lsh_pairs(documents: DataFrame) -> DataFrame:
         "band",
         F.md5(
             F.array_join(
-                F.transform(
-                    F.slice("sig", F.col("band") * ROWS_PER_BAND + 1, ROWS_PER_BAND),
-                    lambda x: x.cast("string"),
+                F.slice("sig", F.col("band") * ROWS_PER_BAND + 1, ROWS_PER_BAND).cast(
+                    "array<string>"
                 ),
                 ",",
             )
@@ -244,21 +236,19 @@ def minhash_lsh_pairs(documents: DataFrame) -> DataFrame:
         "band",
         "band_key",
     )
+    # positions where the two signatures agree, as N_PERM indexed
+    # equalities that codegen compiles (a higher-order-function lambda
+    # would run interpreted, per element)
+    agreement = sum(
+        F.when(F.col("sig_a")[j] == F.col("sig_b")[j], 1).otherwise(0) for j in range(N_PERM)
+    )
     pairs = (
         a.join(b, ["band", "band_key"])
         .where(F.col("doc_a") < F.col("doc_b"))
         .select(
             "doc_a",
             "doc_b",
-            (
-                F.size(
-                    F.filter(
-                        F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-                        lambda eq: eq,
-                    )
-                )
-                / F.lit(float(N_PERM))
-            ).alias("est_jaccard"),
+            (agreement / F.lit(float(N_PERM))).alias("est_jaccard"),
         )
         .distinct()
     )

@@ -40,7 +40,6 @@ from typing import List, Optional, Sequence, Tuple
 
 from pdf2ocr_spark.kernel.textproc import (
     _looks_like_heading,
-    _looks_like_list_item,
     clean_portuguese_charset,
     flatten_blocks,
     merge_page_paragraphs,
@@ -112,21 +111,6 @@ def page_texts_in_order(doc_id: str, spans: Sequence[dict]) -> Tuple[List[str], 
     media = [s["media_ref"] for s in ordered
              if s.get("kind") == "media" and s.get("media_ref")]
     return pages, media
-
-
-def markdown_blocks(paragraphs: Sequence[str]) -> List[str]:
-    """Render rebuilt paragraphs as markdown blocks: heading-shaped
-    paragraphs become '# ' headings, list items stay verbatim, everything
-    else is a plain paragraph."""
-    out = []
-    for para in paragraphs:
-        if _looks_like_heading(para):
-            out.append(f"# {para}")
-        elif _looks_like_list_item(para):
-            out.append(para)
-        else:
-            out.append(para)
-    return out
 
 
 def extract_document(
@@ -225,8 +209,8 @@ def extract_from_pages(
                     append((doc_id, "docx_para", stripped, None, n))
                     n += 1
         if "markdown" in want:
-            # markdown_blocks inlined: list items and plain paragraphs both
-            # render verbatim, so only the heading check decides anything
+            # list items and plain paragraphs both render verbatim: only
+            # the heading check decides anything
             heading = _looks_like_heading
             n = 0
             for para in doc_paragraphs:

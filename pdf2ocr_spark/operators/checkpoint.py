@@ -2,29 +2,33 @@
 
 The reference CLI has NO resume — a killed run redoes everything
 (/root/reference/pdf2ocr/converters/pdf.py:919-927 only stops scheduling).
-This engine checkpoints at partition granularity (north rule):
+This engine checkpoints at partition granularity (north rule); this
+module alone knows the lineage protocol:
 
 - every document gets a STABLE partition id (``part_id``) from
   ``pipeline.stripe_key`` — deterministic across runs, cluster sizes and
-  input shapes, so a resume sees the identical doc->partition map; the
-  kernel runs one task per slot, each over whole part_ids;
-- the extraction kernel (``operators.extract.extraction_kernel``) runs in
-  lineage mode and emits, per Spark task, one sentinel '_lineage' row per
-  part_id whose typed ``lineage`` column (``schema.LINEAGE``, null on span
-  rows) holds real in-kernel metrics (doc/page/span counts, wall time,
-  per-doc errors, status);
+  input shapes, so a resume sees the identical doc->partition map
+  (``PART_MAP``); the kernel runs one task per slot over whole part_ids;
+- ``checkpoint_kernel`` makes the extraction kernel's per-document call
+  and emits one ``LINEAGE_KIND`` sentinel row per part_id whose
+  ``part_lineage`` holds the partition's ``schema.LINEAGE`` record (doc/
+  page/span counts, wall time, per-doc errors, status) as a one-element
+  array, null on span rows;
 - spans and lineage are both written ``partitionBy(part_id)`` with dynamic
   partition overwrite, so re-processing a partition is idempotent
   (overwrite-by-partition, never append);
-- ``resume``: partitions whose lineage row says 'success' are anti-joined
-  away; only the remainder is computed. Running a completed job again is a
-  no-op.
+- ``resume``: a partition is done when it has a lineage row, whatever its
+  status; done partitions are filtered away and only the remainder is
+  computed, so running a completed job again is a no-op.
 
 Error isolation mirrors the reference's per-file try/except
 (pdf.py:743-746): a failing document is recorded in the partition's
 lineage error list, its partition's status is 'partial', and the job
-continues. A resume re-runs each 'partial' partition whole, which the
-partition overwrite makes idempotent: that is the retry.
+continues. The kernel is a pure function of the document, so a re-run
+would fail the same way: a resume keeps the partition. A task that dies
+(executor loss, OOM kill) writes no lineage row, so a resume re-plans its
+partition. To re-run a partition, delete its ``part_id=k`` directory or
+pass ``resume=False``.
 """
 
 from __future__ import annotations
@@ -33,32 +37,92 @@ import os
 import time
 from typing import Optional, Sequence
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pdf2ocr_spark.kernel.emit import ALL_FORMATS
+from pdf2ocr_spark.arrowmap import arrow_schema, record_batch
+from pdf2ocr_spark.kernel.emit import ALL_FORMATS, extract_from_pages
 from pdf2ocr_spark.operators.extract import (
-    LINEAGE_KIND,
-    PART_MAP,
     document_columns,
-    extraction_kernel,
+    pages_reader,
     stripe_column,
     stripe_key,
 )
 from pdf2ocr_spark.schema import CHECKPOINT_OUT_SCHEMA
 
+#: ``kind`` of the one lineage sentinel row per part_id
+LINEAGE_KIND = "_lineage"
 
-def _completed_partitions(spark: SparkSession, output_dir: str) -> tuple[set, set]:
-    """(part_ids whose lineage says 'success', (part_mode, partitions) of
-    every lineage row). A sentinel of a sink that predates typed lineage
-    has a null ``lineage``: its pair is (None, None), which resume refuses."""
+#: the doc -> part_id map, recorded in lineage ``part_mode`` next to its
+#: ``partitions`` n: resume skips a "done" partition only under both
+PART_MAP = "pmod(hash(cast(doc_id as string)), n)"
+
+
+def checkpoint_kernel(formats: Sequence[str], lang: str, max_sentences: Optional[int], n: int):
+    """The checkpoint job's ``mapInArrow`` function for ``n`` partitions.
+
+    Input batches are the extraction kernel's plus ``part_id``; output is
+    ``CHECKPOINT_OUT_SCHEMA`` rows. Each document runs the extraction
+    kernel's call (``pages_reader`` then ``extract_from_pages``), timed,
+    with its errors isolated (reference-style per-file try/except,
+    pdf.py:743-746) into its partition's lineage. After the last batch one
+    ``LINEAGE_KIND`` sentinel per ``part_id`` carries the record, with
+    status 'partial' when any of its documents failed."""
+    fmts = tuple(formats)
+    schema = arrow_schema(CHECKPOINT_OUT_SCHEMA)
+
+    def run(batches):
+        # a task holds several whole part_ids (coalesce): bucket per part_id
+        stats: dict[int, dict] = {}
+        for batch in batches:
+            doc_ids, pages_of = pages_reader(batch)
+            pids = batch.column("part_id").to_pylist()
+            out = []
+            for i, doc_id in enumerate(doc_ids):
+                st = stats.setdefault(
+                    pids[i], {"docs": 0, "pages": 0, "spans": 0, "wall": 0.0, "errors": []}
+                )
+                st["docs"] += 1
+                t0 = time.monotonic()
+                try:
+                    pages, media = pages_of(i)
+                    st["pages"] += len(pages)
+                    rows = extract_from_pages(doc_id, pages, media, fmts, lang, max_sentences)
+                except Exception as exc:  # reference-style per-doc isolation
+                    st["errors"].append(f"{doc_id}: {exc}")
+                    rows = []
+                st["wall"] += time.monotonic() - t0
+                st["spans"] += len(rows)
+                out.extend(row + (None, pids[i]) for row in rows)
+            yield record_batch(out, schema)
+        if stats:
+            sentinels = [
+                (None, LINEAGE_KIND, None, None, 0, [_lineage(st, n)], pid)
+                for pid, st in sorted(stats.items())
+            ]
+            yield record_batch(sentinels, schema)
+
+    return run
+
+
+def _lineage(st: dict, n: int) -> tuple:
+    """One partition's ``schema.LINEAGE`` record, in its field order."""
+    docs, wall, errors = st["docs"], st["wall"], st["errors"]
+    rate = round(docs / wall, 3) if wall > 0 else None
+    status = "partial" if errors else "success"
+    return docs, st["pages"], st["spans"], round(wall, 4), rate, status, errors, PART_MAP, n
+
+
+def _lineage_rows(spark: SparkSession, output_dir: str) -> list:
+    """``(part_id, part_mode, partitions)`` of every lineage row in the
+    sink, none before its first write. A sink that predates
+    ``part_lineage`` reads as (None, None), which resume refuses."""
     try:
         lin = read_lineage(spark, output_dir)
-    except Exception:
-        return set(), set()
-    rows = lin.select("part_id", "status", "part_mode", "partitions").collect()
-    done = {r.part_id for r in rows if r.status == "success"}
-    return done, {(r.part_mode, r.partitions) for r in rows}
+    except AnalysisException:  # no sink yet
+        return []
+    return lin.select("part_id", "part_mode", "partitions").collect()
 
 
 def run_checkpointed(
@@ -112,9 +176,9 @@ def run_checkpointed(
 
         shutil.rmtree(os.path.join(output_dir, "combined"), ignore_errors=True)
     t_resume0 = time.monotonic()
-    done, maps = (
-        _completed_partitions(spark, output_dir) if resume else (set(), set())
-    )
+    rows = _lineage_rows(spark, output_dir) if resume else []
+    done = {r.part_id for r in rows}
+    maps = {(r.part_mode, r.partitions) for r in rows}
     this_map = (PART_MAP, num_partitions)
     if maps - {this_map}:
         # lineage that records no map (older sinks), another map or another
@@ -149,7 +213,7 @@ def run_checkpointed(
         tagged.select(*document_columns(tagged), "part_id")
         .coalesce(min(num_partitions, spark.sparkContext.defaultParallelism))
         .mapInArrow(
-            extraction_kernel(formats, lang, max_sentences, lineage=num_partitions),
+            checkpoint_kernel(formats, lang, max_sentences, num_partitions),
             schema=CHECKPOINT_OUT_SCHEMA,
         )
     )
@@ -169,13 +233,7 @@ def run_checkpointed(
     # resume reads input the crashed run never did. The read-back scans
     # one lineage row per partition, so no distinct (or shuffle) is needed.
     t_verify0 = time.monotonic()
-    present = {
-        r["part_id"]
-        for r in _combined(spark, output_dir)
-        .where(F.col("kind") == LINEAGE_KIND)
-        .select("part_id")
-        .collect()
-    }
+    present = {r.part_id for r in _lineage_rows(spark, output_dir)}
     return {
         "partitions": num_partitions,
         "skipped": len(done),
@@ -200,15 +258,19 @@ def read_spans(spark: SparkSession, output_dir: str) -> DataFrame:
     return (
         _combined(spark, output_dir)
         .where(F.col("kind") != LINEAGE_KIND)
-        .drop("lineage", "part_id")
+        .drop("part_lineage", "part_id")
     )
 
 
 def decode_lineage(combined: DataFrame) -> DataFrame:
     """The lineage rows of a ``CHECKPOINT_OUT_SCHEMA`` relation (the
-    kernel's lineage-mode output or a run's combined sink) as columns:
-    ``part_id`` plus every ``schema.LINEAGE`` field."""
-    return combined.where(F.col("kind") == LINEAGE_KIND).select("part_id", "lineage.*")
+    checkpoint kernel's output or a run's combined sink) as columns:
+    ``part_id`` plus every ``schema.LINEAGE`` field. ``inline_outer``, not
+    ``inline``: a sentinel whose array is null (an older sink) stays, as a
+    row of nulls."""
+    return combined.where(F.col("kind") == LINEAGE_KIND).select(
+        "part_id", F.inline_outer("part_lineage")
+    )
 
 
 def read_lineage(spark: SparkSession, output_dir: str) -> DataFrame:

@@ -1,11 +1,15 @@
 """docs -> spans_out: the one per-document extraction operator.
 
-Every extraction path runs the same Arrow kernel (``extraction_kernel``):
-one ``mapInArrow`` stage that runs the whole reference per-document
+Every extraction path runs the same per-document call: ``pages_reader``
+then ``kernel.emit.extract_from_pages``, the whole reference per-document
 dataflow (OCR-language clean -> boilerplate strip -> paragraph FSM ->
-multi-format span emission; see kernel/emit.py) in a single Python-worker
-pass per Arrow batch — the Spark analogue of the reference's operator fusion
-(whole chain per file in one process, /root/reference/pdf2ocr/converters/pdf.py:663-739).
+multi-format span emission) in a single Python-worker pass per Arrow batch
+— the Spark analogue of the reference's operator fusion (whole chain per
+file in one process, /root/reference/pdf2ocr/converters/pdf.py:663-739).
+``extraction_kernel`` has one mode, which ``extract_spans_arrow``,
+``pipeline.run_pipeline`` and every streaming micro-batch run; the
+checkpointed job's ``operators.checkpoint.checkpoint_kernel`` makes the
+same call and owns the lineage protocol around it.
 Every per-document kernel (extraction, and the OCR stage in ocr.py) takes
 either document shape, and the shape rule is written here once on each side
 of the Arrow boundary: ``document_columns`` picks the columns a stage ships,
@@ -29,7 +33,6 @@ this is the one extraction path.
 
 from __future__ import annotations
 
-import time
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame
@@ -43,15 +46,7 @@ from pdf2ocr_spark.kernel.emit import (
     null_offset,
     page_texts_in_order,
 )
-from pdf2ocr_spark.schema import CHECKPOINT_OUT_SCHEMA, SPANS_OUT_SCHEMA
-
-#: ``kind`` of the one lineage sentinel row per part_id in lineage mode
-LINEAGE_KIND = "_lineage"
-
-#: the doc -> part_id map, recorded in lineage ``part_mode`` next to its
-#: ``partitions`` n: resume skips a "done" partition only under both
-PART_MAP = "pmod(hash(cast(doc_id as string)), n)"
-
+from pdf2ocr_spark.schema import SPANS_OUT_SCHEMA
 
 def stripe_column():
     """The stripe shuffle's key: ``repartition(n, stripe_column())`` puts
@@ -115,70 +110,26 @@ def pages_reader(batch):
     return doc_ids, from_spans
 
 
-def extraction_kernel(
-    formats: Sequence[str],
-    lang: str,
-    max_sentences: Optional[int],
-    lineage: int = 0,
-):
+def extraction_kernel(formats: Sequence[str], lang: str, max_sentences: Optional[int]):
     """The ``mapInArrow`` function every extraction path runs.
 
-    Input batches hold ``(doc_id, spans)`` or ``(doc_id, text, source)``,
-    plus ``part_id`` in lineage mode; output is ``SPANS_OUT_SCHEMA`` rows.
-    A span with a null ``offset`` has no reading order, so its document
-    raises ``ValueError``. ``lineage=n`` (n > 0) is lineage mode for n
-    partitions: the output is ``CHECKPOINT_OUT_SCHEMA``; each document is
-    timed and its errors are isolated (reference-style per-file
-    try/except, pdf.py:743-746) into the partition's lineage, and after
-    the last batch one ``LINEAGE_KIND`` sentinel per ``part_id`` carries
-    the partition's metrics in its typed ``lineage`` column (null on span
-    rows), with status 'partial' when any of its documents failed."""
+    Input batches hold ``(doc_id, spans)`` or ``(doc_id, text, source)``;
+    output is ``SPANS_OUT_SCHEMA`` rows. A span with a null ``offset`` has
+    no reading order, so its document raises ``ValueError``. The
+    checkpointed job wraps the same per-document call with its lineage
+    (``operators.checkpoint.checkpoint_kernel``)."""
     fmts = tuple(formats)
-    schema = arrow_schema(CHECKPOINT_OUT_SCHEMA if lineage else SPANS_OUT_SCHEMA)
+    schema = arrow_schema(SPANS_OUT_SCHEMA)
 
     def run(batches):
-        # a checkpoint task holds several whole part_ids (coalesce): bucket per part_id
-        stats: dict[int, dict] = {}
         for batch in batches:
             doc_ids, pages_of = pages_reader(batch)
-            pids = batch.column("part_id").to_pylist() if lineage else None
             out = []
             for i, doc_id in enumerate(doc_ids):
-                if not lineage:
-                    out.extend(extract_from_pages(doc_id, *pages_of(i), fmts, lang, max_sentences))
-                    continue
-                st = stats.setdefault(
-                    pids[i], {"docs": 0, "pages": 0, "spans": 0, "wall": 0.0, "errors": []}
-                )
-                st["docs"] += 1
-                t0 = time.monotonic()
-                try:
-                    pages, media = pages_of(i)
-                    st["pages"] += len(pages)
-                    rows = extract_from_pages(doc_id, pages, media, fmts, lang, max_sentences)
-                except Exception as exc:  # reference-style per-doc isolation
-                    st["errors"].append(f"{doc_id}: {exc}")
-                    rows = []
-                st["wall"] += time.monotonic() - t0
-                st["spans"] += len(rows)
-                out.extend(row + (None, pids[i]) for row in rows)
+                out.extend(extract_from_pages(doc_id, *pages_of(i), fmts, lang, max_sentences))
             yield record_batch(out, schema)
-        if stats:
-            sentinels = [
-                (None, LINEAGE_KIND, None, None, 0, _lineage(st, lineage), pid)
-                for pid, st in sorted(stats.items())
-            ]
-            yield record_batch(sentinels, schema)
 
     return run
-
-
-def _lineage(st: dict, n: int) -> tuple:
-    """One partition's ``schema.LINEAGE`` record, in its field order."""
-    docs, wall, errors = st["docs"], st["wall"], st["errors"]
-    rate = round(docs / wall, 3) if wall > 0 else None
-    status = "partial" if errors else "success"
-    return docs, st["pages"], st["spans"], round(wall, 4), rate, status, errors, PART_MAP, n
 
 
 def extract_spans_arrow(

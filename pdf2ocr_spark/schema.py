@@ -33,7 +33,7 @@ SPANS_OUT_SCHEMA = T.StructType(
 )
 
 #: one checkpoint partition's lineage record (SURVEY.md §7 step 4: the
-#: lineage table), written once per part_id by the extraction kernel
+#: lineage table); operators/checkpoint.py owns the protocol around it
 LINEAGE = T.StructType(
     [
         T.StructField("doc_count", T.LongType()),
@@ -43,18 +43,23 @@ LINEAGE = T.StructType(
         T.StructField("docs_per_sec", T.DoubleType()),
         T.StructField("status", T.StringType()),  # "success" | "partial"
         T.StructField("errors", T.ArrayType(T.StringType())),
-        # the doc->partition map (PART_MAP) and partition count n that
-        # produced this partition: resume refuses any other (older engines
-        # wrote 'nested', 'fused'...), which puts other documents there
+        # the doc->partition map and partition count n that produced this
+        # partition: resume refuses any other (older engines wrote
+        # 'nested', 'fused'...), which puts other documents there
         T.StructField("part_mode", T.StringType()),
         T.StructField("partitions", T.LongType()),
     ]
 )
 
-#: checkpoint output: spans_out, ``lineage`` (null on span rows), then
-#: ``part_id`` last, where a read of the partitioned sink puts it; all
-#: nullable (the one lineage sentinel row per part_id carries no doc_id)
+#: checkpoint output: spans_out, ``part_lineage``, then ``part_id`` last,
+#: where a read of the partitioned sink puts it; all nullable. The one
+#: lineage sentinel per part_id (no doc_id) holds its record as a
+#: one-element array; span rows a null one (4 B in Arrow IPC, where a null
+#: LINEAGE struct costs 60 B). Older struct ``lineage`` sinks read as null.
 CHECKPOINT_OUT_SCHEMA = T.StructType(
     [T.StructField(f.name, f.dataType) for f in SPANS_OUT_SCHEMA]
-    + [T.StructField("lineage", LINEAGE), T.StructField("part_id", T.IntegerType())]
+    + [
+        T.StructField("part_lineage", T.ArrayType(LINEAGE)),
+        T.StructField("part_id", T.IntegerType()),
+    ]
 )

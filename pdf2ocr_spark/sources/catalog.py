@@ -10,7 +10,7 @@ in an Iceberg catalog with:
     spans_out  PARTITIONED BY (part_id)                -- idempotent
                partition-overwrite checkpointing
     lineage    PARTITIONED BY (part_id)                -- typed
-               schema.LINEAGE rows; 'partial' ones re-run on resume
+               schema.LINEAGE rows; a part_id with a row is done
 
 `Catalog` keeps that shape behind read_table/write_table so the engine
 code is identical in both modes.

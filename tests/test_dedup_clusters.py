@@ -176,3 +176,13 @@ def test_checkpoint_dir_restored_after_cc(spark, tmp_path):
     finally:
         # session-scoped fixture: leave no dir set for later tests
         sc._jsc.sc().setCheckpointDir(None)
+
+
+def test_minhash_lsh_plan_has_no_lambda(spark, sf_dir):
+    """The band key and the signature agreement are codegen'd expressions:
+    a higher-order-function lambda would run interpreted per element."""
+    from pdf2ocr_spark.plans.queries import QUERIES
+
+    df = QUERIES["dedup_minhash_lsh"](spark, sf_dir)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "lambdafunction" not in plan

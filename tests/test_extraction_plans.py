@@ -2,6 +2,7 @@
 one doc -> partition key and one extraction path in the package."""
 
 import ast
+import inspect
 import os
 import re
 import shutil
@@ -143,6 +144,17 @@ def test_one_partition_key_and_no_pandas_extraction():
 
     fields = set(schema.LINEAGE.names)
     assert [p for p, src in sources.items() if fields <= literals(src)] == ["schema.py"]
+    # one owner of the lineage protocol, and a single-mode extraction kernel
+    owner = os.path.join("operators", "checkpoint.py")
+    for name in ("LINEAGE_KIND =", "PART_MAP =", "def _lineage("):
+        assert [p for p, src in sources.items() if name in src] == [owner], name
+    from pdf2ocr_spark.operators.extract import extraction_kernel
+
+    assert list(inspect.signature(extraction_kernel).parameters) == [
+        "formats",
+        "lang",
+        "max_sentences",
+    ]
     # one extraction path: the fused kernel, with no page-parallel copy
     assert not os.path.exists(os.path.join(PACKAGE, "operators", "exploded.py"))
 
@@ -160,5 +172,6 @@ def test_one_partition_key_and_no_pandas_extraction():
 
     assert {path: c for path, src in sources.items() if (c := callers(src))} == {
         os.path.join("operators", "extract.py"): {"extraction_kernel", "run"},
+        os.path.join("operators", "checkpoint.py"): {"checkpoint_kernel", "run"},
         os.path.join("kernel", "emit.py"): {"extract_document"},
     }

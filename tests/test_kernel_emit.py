@@ -12,7 +12,6 @@ import pytest
 
 from pdf2ocr_spark.kernel.emit import (
     extract_document,
-    markdown_blocks,
     wrap_paragraph,
 )
 
@@ -150,10 +149,14 @@ class TestMediaInterleave:
 
 class TestMarkdown:
     def test_heading_and_list_blocks(self):
-        blocks = markdown_blocks(["INTRODUCTION", "• item one", "Plain para."])
-        assert blocks[0] == "# INTRODUCTION"
-        assert blocks[1] == "• item one"
-        assert blocks[2] == "Plain para."
+        """Headings get '# '; list items and plain paragraphs stay verbatim."""
+        for text, block in [
+            ("INTRODUCTION", "# INTRODUCTION"),
+            ("• item one", "• item one"),
+            ("Plain para.", "Plain para."),
+        ]:
+            rows = extract_document("d1", [page(text, 0)], formats=["markdown"])
+            assert [r[2] for r in by_kind(rows, "markdown")] == [block], text
 
     def test_markdown_rows(self):
         text = "CHAPTER ONE\nBody text of the chapter ends here."
